@@ -209,7 +209,7 @@ def bench_stream_ingest(
 
 def bench_knn_join(spark, sf1_dir: str, k: int = 3) -> float | None:
     """Distributed kNN self-join at the sf1 embedding corpus (20k x
-    20k, production xxhash signature path, no broadcast/collect) — the
+    20k, md5 hyperplane signatures, no broadcast/collect) — the
     corpus-linking shape whose cost is candidate-pair-driven. Returns
     wall seconds, or None when the sf1 fixture is absent."""
     emb_path = os.path.join(sf1_dir, "embeddings.parquet")
@@ -240,8 +240,8 @@ def bench_knn_join(spark, sf1_dir: str, k: int = 3) -> float | None:
     # n_tables pinned at 8 (not the r14 data-derived default): this row
     # tracks the join's marginal cost per candidate ACROSS ROUNDS, so
     # the operating point must stay fixed; the derived default's
-    # recall-vs-cost at sf1/sf10 is stamped separately by
-    # tools/knn_recall_sweep.py (knn_recall_sweep_stamp.json).
+    # recall-vs-cost at sf1/sf10 is stamped separately in
+    # knn_recall_sweep_stamp.json.
     tb = 64
     n = emb.count()
     planes = knn_join_planes(n, target_bucket=tb)
@@ -259,7 +259,7 @@ def bench_knn_join(spark, sf1_dir: str, k: int = 3) -> float | None:
             left, right, k=k, n_planes=planes, n_tables=8, target_bucket=tb
         ).count()
 
-    action()  # warmup (plan + sign-matrix job)
+    action()  # warmup (plan + Python workers)
     return REC.timed_best("knn_join_sf1", action, REPEATS)
 
 

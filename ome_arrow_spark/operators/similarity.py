@@ -9,6 +9,8 @@ bucket-join at corpus×corpus scale.
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -119,25 +121,20 @@ def cosine_topk(
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
-def _hyperplane_sign(vec: Column, plane: int, seed_mode: str = "xxhash") -> Column:
+def _hyperplane_sign(vec: Column, plane: int) -> Column:
     """Deterministic pseudo-random hyperplane dot-product sign: the
-    plane's i-th component is ±1 from a hash of (plane, i) — no RNG
-    state, reproducible on any executor. ``seed_mode="xxhash"`` is the
-    production default (fast, JVM-side); ``"md5"`` derives the sign
-    from md5 hex parity, which DuckDB recomputes bit-identically — the
-    engine-portable mode the oracle-checked query uses.
+    plane's i-th component is ``2·(ascii(md5("{plane}:{i}")[0]) % 2) −
+    1`` — no RNG state, reproducible on any executor, and recomputed
+    bit-identically by DuckDB's ``md5`` (the oracle twins replay it).
 
     NOT a linear mix like ``(a*plane + b*i) % 2``: with odd a, b that
     collapses to (plane+i) parity, making every plane the same
     hyperplane or its mirror — an n-bit signature that is really 1 bit
     (caught by the recall calibration: recall was flat in n_planes)."""
-    if seed_mode == "md5":
-        def sgn(i):
-            h = F.md5(F.concat_ws(":", F.lit(str(plane)), i.cast("string")))
-            return 2 * F.pmod(F.ascii(F.substring(h, 1, 1)), F.lit(2)).cast("int") - 1
-    else:
-        def sgn(i):
-            return 2 * F.pmod(F.xxhash64(F.lit(plane), i), F.lit(2)).cast("int") - 1
+
+    def sgn(i):
+        h = F.md5(F.concat_ws(":", F.lit(str(plane)), i.cast("string")))
+        return 2 * F.pmod(F.ascii(F.substring(h, 1, 1)), F.lit(2)).cast("int") - 1
 
     return (
         F.aggregate(
@@ -153,26 +150,25 @@ def _hyperplane_sign(vec: Column, plane: int, seed_mode: str = "xxhash") -> Colu
     ).cast("int")
 
 
-def lsh_signature(
-    vec: Column, n_planes: int = 8, table: int = 0, seed_mode: str = "xxhash"
-) -> Column:
+def lsh_signature(vec: Column, n_planes: int = 8, table: int = 0) -> Column:
     """n-bit random-hyperplane signature as an int bucket key; ``table``
-    offsets the plane seeds so each LSH table draws independent planes."""
+    offsets the plane seeds so each LSH table draws independent planes.
+    The in-plan fold is the reference the vectorized signature UDF of
+    :func:`_lsh_sig_array` is tested bit-identical against."""
     sig = None
     for p in range(n_planes):
-        bit = _hyperplane_sign(vec, table * 1000 + p, seed_mode) * (2**p)
+        bit = _hyperplane_sign(vec, table * 1000 + p) * (2**p)
         sig = bit if sig is None else sig + bit
     return sig.cast("int")
 
 
 def _md5_sign_matrix(n_tables: int, n_planes: int, dim: int):
     """(n_tables·n_planes, dim) ±1 hyperplane matrix carrying the EXACT
-    signs the md5-mode :func:`_hyperplane_sign` derives per element:
-    ``2·(ascii(md5("{plane}:{i}")[0]) % 2) − 1``.  hashlib, Spark
+    signs :func:`_hyperplane_sign` derives per element.  hashlib, Spark
     ``md5`` and DuckDB ``md5`` all produce the same lowercase hex
-    digest of the same UTF-8 bytes, so these are plan-time constants —
-    no per-row hashing (r14; the in-plan fold paid
-    tables·planes·dim interpreted md5 calls per ROW)."""
+    digest of the same UTF-8 bytes, so these are constants — no
+    per-row hashing (the in-plan fold pays tables·planes·dim
+    interpreted md5 calls per ROW)."""
     import hashlib
 
     import numpy as np
@@ -186,137 +182,64 @@ def _md5_sign_matrix(n_tables: int, n_planes: int, dim: int):
     return mat
 
 
-def _md5_sigs_udf(sign_mat, n_tables: int, n_planes: int):
-    """pandas UDF: all n_tables md5-mode signatures of a vector batch,
-    BIT-IDENTICAL to the in-plan fold.  Unlike the xxhash path's
-    matmul (which reorders float additions — fine for an approximate
-    index, not for an oracle-replayed bucket id), each plane's dot
-    product accumulates COLUMN BY COLUMN in element order —
-    ``acc = (((0 + x₀·s₀) + x₁·s₁) + …)`` vectorized across rows — the
-    exact IEEE sequence of ``aggregate(zip_with(vec, seq, x·sgn), 0,
-    +)``, so the ``> 0`` bucket bits match the DuckDB twin bit for
-    bit.  Contract: finite fixed-width vectors (shared with the xxhash
-    UDF path)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+def _hyperplane_bits(X, S):
+    """``(X·Sᵀ > 0, recomputed)`` for a float64 batch ``X`` (n, d) and a
+    ±1 sign matrix ``S`` (planes, d), BIT-IDENTICAL to the in-plan fold
+    ``((0 + x₀·s₀) + x₁·s₁) + …`` — at matmul speed.
 
-    S = sign_mat  # (n_tables*n_planes, dim)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @pandas_udf("array<int>")
-    def sigs(v: pd.Series) -> pd.Series:
-        X = np.vstack(v.to_numpy()).astype(np.float64)
-        n, dim = X.shape
-        acc = np.zeros((n, S.shape[0]))
-        for i in range(dim):
-            # ordered: products exact, adds left-assoc per plane
-            # (in-place += — identical values, one fewer temporary)
-            acc += X[:, i : i + 1] * S[:, i]
-        bits = acc > 0
-        vals = (
-            bits.reshape(n, n_tables, n_planes) * weights
-        ).sum(-1).astype(np.int32)
-        return pd.Series(list(vals))
-
-    return sigs
-
-
-_SIGN_MATRIX_CACHE: dict[tuple[int, int, int], object] = {}
-
-
-def _xxhash_sign_matrix(spark, n_tables: int, n_planes: int, dim: int):
-    """(n_tables·n_planes, dim) ±1 hyperplane matrix carrying the EXACT
-    signs :func:`_hyperplane_sign` derives from ``xxhash64(plane, i)``
-    — computed ONCE by a dim-row JVM job instead of per corpus row, so
-    the vectorized signature path buckets identically to the in-plan
-    expression (up to float-sum order on dot products within 1 ulp of
-    zero, irrelevant for an approximate index).
-
-    Memoized on (n_tables, n_planes, dim): the matrix is a pure
-    function of those constants (hash-derived, no data dependence), and
-    a kNN join calls this once per SIDE — without the memo that is two
-    identical collect jobs per invocation (r14)."""
-    key = (n_tables, n_planes, dim)
-    cached = _SIGN_MATRIX_CACHE.get(key)
-    if cached is not None:
-        return cached
+    Every product xᵢ·sᵢ is exact (sᵢ = ±1), and any summation order of
+    d doubles lands within γ_{d−1}·Σ|xᵢ| of the real sum (γ_d =
+    d·u/(1−d·u), u = 2⁻⁵³).  So wherever the matmul's value lies
+    outside ±2·γ_d·Σ|xᵢ| both it and the ordered fold carry the real
+    sum's (nonzero) sign; only rows with some plane inside that band —
+    a zero vector, exact cancellation, summation-order-sensitive
+    magnitudes — re-run the ordered fold, column by column.  A NaN
+    (non-finite input or matmul overflow) fails the ``>`` test and is
+    recomputed too.  ``recomputed`` is the boolean row mask."""
     import numpy as np
 
-    plane_ids = [t * 1000 + p for t in range(n_tables) for p in range(n_planes)]
-    # xxhash64 is typed: plane literal and index must be INT like the
-    # F.sequence elements inside _hyperplane_sign
-    rows = (
-        spark.range(dim)
-        .select(
-            F.col("id").cast("int").alias("i"),
-            *[
-                (
-                    2 * F.pmod(
-                        F.xxhash64(F.lit(pl), F.col("id").cast("int")),
-                        F.lit(2),
-                    ).cast("int") - 1
-                ).alias(f"s{j}")
-                for j, pl in enumerate(plane_ids)
-            ],
-        )
-        .orderBy("i")
-        .collect()
-    )
-    mat = np.array(
-        [[r[f"s{j}"] for j in range(len(plane_ids))] for r in rows],
-        dtype=np.float64,
-    )
-    _SIGN_MATRIX_CACHE[key] = mat.T  # (n_tables*n_planes, dim)
-    return _SIGN_MATRIX_CACHE[key]
+    d = X.shape[1]
+    V = X @ S.T
+    du = d * 2.0**-53
+    band = 2 * (du / (1 - du)) * np.abs(X).sum(axis=1, keepdims=True)
+    redo = ~(np.abs(V) > band).all(axis=1)
+    bits = V > 0
+    if redo.any():
+        Xr = X[redo]
+        acc = np.zeros((len(Xr), S.shape[0]))
+        for i in range(d):
+            acc += Xr[:, i : i + 1] * S[:, i]
+        bits[redo] = acc > 0
+    return bits, redo
 
 
-def _lsh_sigs_udf(sign_mat, n_tables: int, n_planes: int):
-    """pandas UDF: all n_tables signatures of a vector batch from one
-    matmul against the fixed sign matrix."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    S = sign_mat
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @pandas_udf("array<int>")
-    def sigs(v: pd.Series) -> pd.Series:
-        X = np.vstack(v.to_numpy()).astype(np.float64)
-        bits = (X @ S.T) > 0
-        vals = (
-            bits.reshape(len(X), n_tables, n_planes) * weights
-        ).sum(-1).astype(np.int32)
-        return pd.Series(list(vals))
-
-    return sigs
-
-
-def _lsh_sig_array(df, vec: str, n_planes: int, n_tables: int, seed_mode: str):
+def _lsh_sig_array(vec: str, n_planes: int, n_tables: int) -> Column:
     """Column expression: the per-table signature array (index = table)
     of ``vec`` — the one signature computation both the exploded bucket
-    rows and the canonical-dedup filter derive from."""
-    if seed_mode == "xxhash":
-        dim = df.select(F.size(F.col(vec))).first()[0]
-        sig_mat = _xxhash_sign_matrix(df.sparkSession, n_tables, n_planes, dim)
-        sig_udf = _lsh_sigs_udf(sig_mat, n_tables, n_planes)
-        return sig_udf(F.col(vec))
-    # md5 mode (r14): same vectorized shape, but the ±1 signs are
-    # plan-time hashlib constants and the per-plane accumulation is
-    # ORDERED (column by column) so buckets stay bit-identical to the
-    # in-plan fold the DuckDB oracle replays — measured 10.5 → ~2 s on
-    # knn_cosine_lsh at sf0.1 (the fold paid tables·planes·dim
-    # interpreted md5 calls per row).  Empty input falls back to the
-    # fold (nothing to probe, nothing to pay).
-    probe = df.select(F.size(F.col(vec))).first()
-    if probe is not None and probe[0] is not None:
-        sig_mat = _md5_sign_matrix(n_tables, n_planes, probe[0])
-        return _md5_sigs_udf(sig_mat, n_tables, n_planes)(F.col(vec))
-    return F.array(
-        *[
-            lsh_signature(F.col(vec), n_planes, table=t, seed_mode=seed_mode)
-            for t in range(n_tables)
-        ]
-    )
+    rows and the canonical-dedup filter derive from.  A pandas UDF over
+    Arrow batches: the sign matrix is built once per partition from the
+    batch width, then :func:`_hyperplane_bits` signs every row, so the
+    buckets equal :func:`lsh_signature`'s and the DuckDB twins'.
+    Contract: fixed-width vectors."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
+
+    @pandas_udf("array<int>")
+    def sigs(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        S = None
+        for v in batches:
+            X = np.vstack(v.to_numpy()).astype(np.float64)
+            if S is None:
+                S = _md5_sign_matrix(n_tables, n_planes, X.shape[1])
+            bits, _ = _hyperplane_bits(X, S)
+            vals = (
+                bits.reshape(len(X), n_tables, n_planes) * weights
+            ).sum(-1).astype(np.int32)
+            yield pd.Series(list(vals))
+
+    return sigs(F.col(vec))
 
 
 def _lsh_sig_side(
@@ -326,7 +249,6 @@ def _lsh_sig_side(
     out_vec: str,
     n_planes: int,
     n_tables: int,
-    seed_mode: str,
     sigs_col: str | None = None,
 ):
     """One side of an LSH bucket join: (id, vector, table, signature)
@@ -341,7 +263,7 @@ def _lsh_sig_side(
     that would evaluate the signature UDF a second time per row (an
     empty/null array yields null join keys, dropped by the inner
     bucket join — same pair set)."""
-    arr = _lsh_sig_array(df, vec, n_planes, n_tables, seed_mode)
+    arr = _lsh_sig_array(vec, n_planes, n_tables)
     if sigs_col is not None:
         return df.select(F.col(id_col), arr.alias(sigs_col)).select(
             id_col,
@@ -428,7 +350,6 @@ def cosine_topk_lsh(
     n_planes: int = 4,
     n_tables: int = 8,
     digits: int = 6,
-    seed_mode: str = "xxhash",
 ) -> DataFrame:
     """Approximate top-k: candidates = corpus vectors sharing a bucket
     with the query in ANY of ``n_tables`` independent hyperplane tables
@@ -442,12 +363,11 @@ def cosine_topk_lsh(
     size ↑) × (n_tables ↑ recall ↑ cost ↑); see the calibration table
     in README.
 
-    The ``xxhash`` (production) mode computes all signatures through an
-    Arrow-batched matmul against a once-materialized ±1 sign matrix —
-    n_tables·n_planes·dim interpreted hash-ops per ROW become one
-    dim-row JVM job + one numpy matmul per batch (measured 20×+ on the
-    100k bench fixture).  The ``md5`` mode stays fully in-plan so the
-    DuckDB oracle can recompute the buckets bit-for-bit.
+    Every call uses the one md5-derived hyperplane family, which the
+    DuckDB twin replays bit-for-bit: the signatures come from an
+    Arrow-batched matmul against the ±1 sign matrix, with the ordered
+    fold re-run only on rows whose dot products sit too near zero for
+    the summation order to be irrelevant (:func:`_hyperplane_bits`).
 
     Pair plumbing (r14): the bucket join moves THIN id pairs only —
     the vectors and their norms re-attach afterwards by id joins
@@ -463,11 +383,11 @@ def cosine_topk_lsh(
     Norms are computed once per side row; each pair pays one dot
     fold."""
     q = _lsh_sig_side(
-        queries, query_id, vec, "__qv", n_planes, n_tables, seed_mode,
+        queries, query_id, vec, "__qv", n_planes, n_tables,
         sigs_col="__lsigs",
     )
     c = _lsh_sig_side(
-        corpus, corpus_id, vec, "__cv", n_planes, n_tables, seed_mode,
+        corpus, corpus_id, vec, "__cv", n_planes, n_tables,
         sigs_col="__rsigs",
     )
     thin = _canonical_lsh_pairs(
@@ -552,13 +472,14 @@ def knn_join_candidates(
     vec: str = "embedding",
     n_planes: int | None = None,
     n_tables: int | None = None,
-    seed_mode: str = "xxhash",
     target_bucket: int = 256,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Candidate-pair relation of :func:`knn_join_lsh` — exposed so
     gates/benches can assert the candidate count stays sub-quadratic
     (≲ n_left · n_tables · target_bucket) before paying for scoring.
+    Buckets come from the one md5 hyperplane family of
+    :func:`lsh_signature`, which the DuckDB twins replay bit-for-bit.
 
     ``n_planes=None`` (the default) derives the signature width from
     the right-side row count via :func:`knn_join_planes`; the one
@@ -592,11 +513,11 @@ def knn_join_candidates(
     if max_bucket is None:
         max_bucket = 64 * target_bucket
     ls = _lsh_sig_side(
-        left, left_id, vec, "__lv", n_planes, n_tables, seed_mode,
+        left, left_id, vec, "__lv", n_planes, n_tables,
         sigs_col="__lsigs",
     )
     rs = _lsh_sig_side(
-        right, right_id, vec, "__rv", n_planes, n_tables, seed_mode,
+        right, right_id, vec, "__rv", n_planes, n_tables,
         sigs_col="__rsigs",
     )
     # Skew census (r14): the oversized buckets are FEW by construction
@@ -649,7 +570,6 @@ def knn_join_candidate_census(
     vec: str = "embedding",
     n_planes: int | None = None,
     n_tables: int | None = None,
-    seed_mode: str = "xxhash",
     target_bucket: int = 256,
     max_bucket: int | None = None,
 ) -> int:
@@ -660,15 +580,16 @@ def knn_join_candidate_census(
     count, so "measure before you pay": sizing a derived-``n_tables``
     run at 100× data costs two signature scans + a groupBy, not the
     pair shuffle the census is there to predict.  Exact same bucket
-    machinery (planes/tables/skew-cap derivation) as the operator."""
+    machinery (md5 hyperplanes, planes/tables/skew-cap derivation) as
+    the operator."""
     if n_planes is None:
         n_planes = knn_join_planes(max(right.count(), 1), target_bucket)
     if n_tables is None:
         n_tables = knn_join_tables(n_planes)
     if max_bucket is None:
         max_bucket = 64 * target_bucket
-    ls = _lsh_sig_side(left, left_id, vec, "__lv", n_planes, n_tables, seed_mode)
-    rs = _lsh_sig_side(right, right_id, vec, "__rv", n_planes, n_tables, seed_mode)
+    ls = _lsh_sig_side(left, left_id, vec, "__lv", n_planes, n_tables)
+    rs = _lsh_sig_side(right, right_id, vec, "__rv", n_planes, n_tables)
     lc = ls.groupBy("__t", "__sig").agg(F.count("*").alias("__ln"))
     rc = rs.groupBy("__t", "__sig").agg(F.count("*").alias("__rn")).filter(
         F.col("__rn") <= max_bucket
@@ -691,7 +612,6 @@ def knn_join_lsh(
     n_planes: int | None = None,
     n_tables: int | None = None,
     digits: int = 6,
-    seed_mode: str = "xxhash",
     target_bucket: int = 256,
     max_bucket: int | None = None,
     candidates: DataFrame | None = None,
@@ -712,6 +632,8 @@ def knn_join_lsh(
     on the driver or in a broadcast. That is the shape of
     embedding-based corpus linking (dedup across datasets, retrieval
     supervision mining, cross-modal alignment) at 10^9 × 10^9 rows.
+    Signatures use the one md5 hyperplane family, so the registered
+    ``knn_join_lsh`` query's DuckDB twin replays every bucket.
 
     Sizing (round-10 fix): ``n_planes`` defaults to DATA-DERIVED via
     :func:`knn_join_planes` — expected bucket ≈ ``target_bucket`` rows,
@@ -744,7 +666,6 @@ def knn_join_lsh(
             vec=vec,
             n_planes=n_planes,
             n_tables=n_tables,
-            seed_mode=seed_mode,
             target_bucket=target_bucket,
             max_bucket=max_bucket,
         )

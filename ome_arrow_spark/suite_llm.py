@@ -512,7 +512,7 @@ def _lsh_oracle(
     q_where: str = "vec_id < 10",
     c_where: str = "vec_id >= 10",
 ) -> str:
-    """DuckDB twin of cosine_topk_lsh(seed_mode='md5'): the hyperplane
+    """DuckDB twin of cosine_topk_lsh: the hyperplane
     sign of plane P over vector col ``{v}`` is the md5-hex-parity fold
     — the exact SQL the Spark HOF evaluates (same fold order, same
     strings hashed), so buckets, candidates, and ranks all match."""
@@ -558,13 +558,13 @@ def _lsh_oracle(
 
 @register("knn_cosine_lsh", _lsh_oracle())
 def knn_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH ANN with md5-derived hyperplanes (seed_mode='md5') so the
-    DuckDB oracle re-derives every bucket and rank bit-identically;
-    the production path keeps xxhash64 planes (similarity.py)."""
+    """LSH ANN with the md5-derived hyperplanes every similarity.py
+    call uses, so the DuckDB oracle re-derives every bucket and rank
+    bit-identically."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("qid"), "embedding")
     c = emb.filter(F.col("vec_id") >= 10).select(F.col("vec_id").alias("cid"), "embedding")
-    return cosine_topk_lsh(q, c, k=3, seed_mode="md5")
+    return cosine_topk_lsh(q, c, k=3)
 
 
 @register(
@@ -4533,8 +4533,8 @@ def _dyn_tables_sql(np_cte: str = "np") -> str:
 def _knn_join_oracle(
     k: int, q_where: str, c_where: str, target_bucket: int = 256
 ) -> str:
-    """DuckDB twin of knn_join_lsh(seed_mode='md5', n_planes=None,
-    n_tables=None): the plane count is recomputed from the corpus
+    """DuckDB twin of knn_join_lsh(n_planes=None, n_tables=None): the
+    plane count is recomputed from the corpus
     COUNT(*) with the exact knn_join_planes formula, the table count
     from it with the exact knn_join_tables formula (r14 — recall no
     longer collapses as the derived width grows), and the signature is
@@ -4614,14 +4614,14 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bound scales with the r14 DATA-DERIVED table count — still
     # linear in |left| with a log(n_right) table factor
     n_tab = knn_join_tables(knn_join_planes(max(right.count(), 1)))
-    cand = knn_join_candidates(left, right, seed_mode="md5").persist()
+    cand = knn_join_candidates(left, right).persist()
     n_left = left.count()
     n_cand = cand.count()
     assert n_cand <= 2 * n_left * n_tab * 256, (
         f"knn_join_lsh candidate blowup: {n_cand} pairs for {n_left} left rows "
         f"(bound {2 * n_left * n_tab * 256}) — n_planes/n_tables sizing regressed"
     )
-    return KJ(left, right, k=2, seed_mode="md5", candidates=cand)
+    return KJ(left, right, k=2, candidates=cand)
 
 
 # ---------------------------------------------------------------------------
@@ -4972,8 +4972,8 @@ def pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # not shingles. Corpus = embeddings ∪ planted perturbed copies
 # (first component +0.5 → cosine ≈ 0.88-0.92 vs ≤0.51 for random
 # pairs at this dim). Candidate pairs come from the SAME data-derived
-# LSH bucket machinery as knn_join_lsh (md5 mode, dynamic plane
-# count), filtered at cosine ≥ 0.8, clustered by min-label connected
+# LSH bucket machinery as knn_join_lsh (md5 hyperplanes, dynamic
+# plane count), filtered at cosine ≥ 0.8, clustered by min-label connected
 # components, and reduced to canonical winners — the keep/drop
 # decision at embedding level. The oracle replays buckets, cosines,
 # the recursive walk and the member aggregation bit-for-bit; LSH
@@ -5077,7 +5077,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_id="id_b",
         vec="v",
         n_tables=8,
-        seed_mode="md5",
     )
     # r14: knn_join_candidates now carries per-side norms — one dot
     # fold per pair (bit-identical to the fused cosine).

@@ -127,32 +127,98 @@ def test_arrow_adc_equals_plan(spark, tmp_path):
     assert arrow == plan
 
 
+def _planted_rows(S, dim=64):
+    """Rows that stress the guarded matmul of ``_hyperplane_bits``, and
+    how many of them lead the list as rows it must recompute: an
+    all-zero vector, a row whose ± terms cancel exactly on the first
+    plane, and ``[1e16, 1, -1e16, ...]`` rows whose sign depends on the
+    summation order; then rows of magnitude around 1e-300, which the
+    matmul alone must sign correctly."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    zero = np.zeros(dim)
+    i, j = 0, int(np.flatnonzero(S[0] != S[0, 0])[0])
+    cancel = np.zeros(dim)
+    cancel[[i, j]] = 0.75  # s_i·x_i + s_j·x_j = 0 on plane 0
+    big = []
+    for rest in (np.zeros(dim - 3), 0.25 * rng.normal(size=dim - 3)):
+        big.append(np.concatenate([[1e16, 1.0, -1e16], rest]))
+        big.append(np.concatenate([[1.0, 1e16, -1e16], rest]))
+    tiny = 1e-300 * rng.normal(size=(4, dim))
+    recompute = [zero, cancel, *big]
+    return np.vstack([*recompute, *tiny]), len(recompute)
+
+
+def test_hyperplane_bits_equal_ordered_fold(tmp_path):
+    """The guarded matmul kernel returns the ordered fold's bits on the
+    64-dim fixture plus the planted rows, and re-runs the fold on
+    exactly the planted rows whose sign the summation order could
+    decide."""
+    import math
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from ome_arrow_spark.operators.similarity import (
+        _hyperplane_bits,
+        _md5_sign_matrix,
+    )
+
+    S = _md5_sign_matrix(4, 8, 64)
+    corpus_path, _, _ = make_ann_fixture(str(tmp_path), n_vectors=500)
+    fixture = np.vstack(pq.read_table(corpus_path)["embedding"].to_numpy(
+        zero_copy_only=False
+    ))
+    planted, n_redo = _planted_rows(S)
+    X = np.vstack([planted, fixture.astype(np.float64)])
+    bits, redo = _hyperplane_bits(X, S)
+    acc = np.zeros((len(X), len(S)))
+    for i in range(X.shape[1]):
+        acc = acc + X[:, i : i + 1] * S[:, i]
+    assert (bits == (acc > 0)).all()
+    assert np.flatnonzero(redo).tolist() == list(range(n_redo))
+    # the planted rows are order-sensitive: the correctly rounded sum
+    # disagrees with the ordered fold on some plane
+    exact = np.array([[math.fsum(x * s) for s in S] for x in X[:n_redo]])
+    assert ((exact > 0) != (acc[:n_redo] > 0)).any()
+
+
 @pytest.mark.heavy
 def test_vectorized_lsh_signatures_equal_expression(spark, tmp_path):
-    """The matmul signature path must bucket exactly like the in-plan
-    xxhash hyperplane expressions (same sign matrix by construction)."""
+    """The one signature UDF must bucket BIT-IDENTICALLY to the in-plan
+    ``lsh_signature`` fold (the form the DuckDB twins replay) on the
+    64-dim ``array<float>`` fixture and on planted ``array<double>``
+    rows where the summation order would decide a sign."""
     from pyspark.sql import functions as F
 
     from ome_arrow_spark.operators.similarity import (
-        _lsh_sigs_udf,
-        _xxhash_sign_matrix,
+        _lsh_sig_array,
+        _md5_sign_matrix,
         lsh_signature,
     )
 
-    corpus_path, _, _ = make_ann_fixture(str(tmp_path), n_vectors=500)
-    corpus = spark.read.parquet(corpus_path)
     n_tables, n_planes = 4, 8
-    exprs = [
-        lsh_signature(F.col("embedding"), n_planes, table=t).alias(f"t{t}")
-        for t in range(n_tables)
+    corpus_path, _, _ = make_ann_fixture(str(tmp_path), n_vectors=500)
+    planted, _ = _planted_rows(_md5_sign_matrix(n_tables, n_planes, 64))
+    sides = [
+        spark.read.parquet(corpus_path),
+        spark.createDataFrame(
+            [(i, row.tolist()) for i, row in enumerate(planted)],
+            "cid long, embedding array<double>",
+        ),
     ]
-    a = corpus.select("cid", *exprs).orderBy("cid").collect()
-    sig = _lsh_sigs_udf(
-        _xxhash_sign_matrix(spark, n_tables, n_planes, 64), n_tables, n_planes
-    )
-    b = corpus.select("cid", sig(F.col("embedding")).alias("s")).orderBy("cid").collect()
-    for ra, rb in zip(a, b):
-        assert [ra[f"t{t}"] for t in range(n_tables)] == list(rb["s"])
+    for corpus in sides:
+        exprs = [
+            lsh_signature(F.col("embedding"), n_planes, table=t)
+            for t in range(n_tables)
+        ]
+        rows = corpus.select(
+            "cid",
+            F.array(*exprs).alias("fold"),
+            _lsh_sig_array("embedding", n_planes, n_tables).alias("udf"),
+        ).collect()
+        assert rows and all(r["fold"] == r["udf"] for r in rows)
 
 
 def test_sample_train_rejects_unknown_mode(spark, tmp_path):

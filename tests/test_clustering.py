@@ -203,54 +203,67 @@ def test_canonical_dedup_equals_dropduplicates(spark, sf_dir):
     right = emb.filter(F.col("vec_id") % 3 != 0).select(
         F.col("vec_id").alias("cid"), "embedding"
     )
-    for seed_mode in ("xxhash", "md5"):
-        for max_bucket in (4, 10**9):
-            got = {
-                (r["qid"], r["cid"])
-                for r in knn_join_candidates(
-                    left,
-                    right,
-                    n_planes=4,
-                    n_tables=8,
-                    seed_mode=seed_mode,
-                    max_bucket=max_bucket,
-                )
-                .select("qid", "cid")
-                .collect()
-            }
-            # reference: the pre-r14 allow-list + dropDuplicates form
-            ls = _lsh_sig_side(
-                left, "qid", "embedding", "__lv", 4, 8, seed_mode
-            ).select("qid", "__t", "__sig")
-            rs = _lsh_sig_side(
-                right, "cid", "embedding", "__rv", 4, 8, seed_mode
-            ).select("cid", "__t", "__sig")
-            allowed = (
-                rs.groupBy("__t", "__sig")
-                .agg(F.count("*").alias("__n"))
-                .filter(F.col("__n") <= max_bucket)
-                .select("__t", "__sig")
+    for max_bucket in (4, 10**9):
+        got = {
+            (r["qid"], r["cid"])
+            for r in knn_join_candidates(
+                left, right, n_planes=4, n_tables=8, max_bucket=max_bucket
             )
-            want = {
-                (r["qid"], r["cid"])
-                for r in ls.join(F.broadcast(allowed), ["__t", "__sig"])
-                .join(rs, ["__t", "__sig"])
-                .select("qid", "cid")
-                .dropDuplicates(["qid", "cid"])
-                .collect()
-            }
-            assert got == want, (
-                f"canonical dedup diverged ({seed_mode}, max_bucket="
-                f"{max_bucket}): {len(got)} vs {len(want)} pairs"
-            )
-            if max_bucket == 4:
-                # the cap must actually engage on this fixture, or the
-                # disallowed branch wasn't exercised
-                n_uncapped = knn_join_candidates(
-                    left, right, n_planes=4, n_tables=8,
-                    seed_mode=seed_mode, max_bucket=10**9,
-                ).count()
-                assert len(got) < n_uncapped, "skew cap never engaged"
+            .select("qid", "cid")
+            .collect()
+        }
+        # reference: the pre-r14 allow-list + dropDuplicates form
+        ls = _lsh_sig_side(left, "qid", "embedding", "__lv", 4, 8).select(
+            "qid", "__t", "__sig"
+        )
+        rs = _lsh_sig_side(right, "cid", "embedding", "__rv", 4, 8).select(
+            "cid", "__t", "__sig"
+        )
+        allowed = (
+            rs.groupBy("__t", "__sig")
+            .agg(F.count("*").alias("__n"))
+            .filter(F.col("__n") <= max_bucket)
+            .select("__t", "__sig")
+        )
+        want = {
+            (r["qid"], r["cid"])
+            for r in ls.join(F.broadcast(allowed), ["__t", "__sig"])
+            .join(rs, ["__t", "__sig"])
+            .select("qid", "cid")
+            .dropDuplicates(["qid", "cid"])
+            .collect()
+        }
+        assert got == want, (
+            f"canonical dedup diverged (max_bucket={max_bucket}): "
+            f"{len(got)} vs {len(want)} pairs"
+        )
+        if max_bucket == 4:
+            # the cap must actually engage on this fixture, or the
+            # disallowed branch wasn't exercised
+            n_uncapped = knn_join_candidates(
+                left, right, n_planes=4, n_tables=8, max_bucket=10**9
+            ).count()
+            assert len(got) < n_uncapped, "skew cap never engaged"
+
+
+def test_lsh_joins_with_an_empty_side(spark, sf_dir):
+    """An empty left or right side yields no rows and a zero census —
+    no signature probe of the empty input, no crash."""
+    from ome_arrow_spark.operators.similarity import (
+        cosine_topk_lsh,
+        knn_join_candidate_census,
+        knn_join_lsh,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    full = emb.filter(F.col("vec_id") < 50)
+    empty = emb.filter(F.lit(False))
+    for lhs, rhs in ((empty, full), (full, empty)):
+        left = lhs.select(F.col("vec_id").alias("qid"), "embedding")
+        right = rhs.select(F.col("vec_id").alias("cid"), "embedding")
+        assert knn_join_lsh(left, right, k=2).count() == 0
+        assert cosine_topk_lsh(left, right, k=2).count() == 0
+        assert knn_join_candidate_census(left, right) == 0
 
 
 def test_knn_join_tables_formula():

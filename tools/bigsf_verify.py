@@ -188,14 +188,12 @@ def verify_knn(spark, sf_dir: str) -> dict:
     )
 
     # VERDICT #7: the FULL candidate count vs the linearity gate.
-    # The md5-mode runs here PIN n_tables=8: the soundness contract
+    # The runs here PIN n_tables=8: the soundness contract
     # (emitted == exact top-k over the operator's own candidate set)
-    # is table-count-independent, and the in-plan md5 signature fold
-    # at sf10's derived 117 tables would cost ~15× this probe for no
-    # extra verification power.  Recall and linearity at the r14
-    # DERIVED table default are measured (xxhash production mode, all
-    # four table points) by tools/knn_recall_sweep.py —
-    # knn_recall_sweep_stamp.json carries sf0.01/sf1/sf10 blocks.
+    # is table-count-independent, and sf10's derived 117 tables would
+    # cost ~15× this probe for no extra verification power.  Recall
+    # and linearity at the r14 DERIVED table default are frozen in
+    # knn_recall_sweep_stamp.json (sf0.01/sf1/sf10 blocks).
     from ome_arrow_spark.operators.similarity import (
         knn_join_planes,
         knn_join_tables,
@@ -204,9 +202,7 @@ def verify_knn(spark, sf_dir: str) -> dict:
     n_left = left.count()
     pinned_tables = 8
     derived_tables = knn_join_tables(knn_join_planes(max(right.count(), 1)))
-    cand = knn_join_candidates(
-        left, right, seed_mode="md5", n_tables=pinned_tables
-    )
+    cand = knn_join_candidates(left, right, n_tables=pinned_tables)
     n_cand = cand.count()
     bound = 2 * n_left * pinned_tables * 256
     cand_wall = round(time.perf_counter() - t0, 2)
@@ -217,8 +213,7 @@ def verify_knn(spark, sf_dir: str) -> dict:
         left.orderBy(F.md5(F.col("qid").cast("string")))
         .limit(N_KNN_SAMPLE)
     )
-    got = KJ(sample_q, right, k=2, seed_mode="md5",
-             n_tables=pinned_tables).collect()
+    got = KJ(sample_q, right, k=2, n_tables=pinned_tables).collect()
     by_q: dict[int, list] = {}
     for r in got:
         by_q.setdefault(r["qid"], []).append(
@@ -226,8 +221,7 @@ def verify_knn(spark, sf_dir: str) -> dict:
         )
     # the operator's own candidate relation for the sample (thin ids)
     cand_pairs = (
-        knn_join_candidates(sample_q, right, seed_mode="md5",
-                            n_tables=pinned_tables)
+        knn_join_candidates(sample_q, right, n_tables=pinned_tables)
         .select("qid", "cid")
         .collect()
     )
