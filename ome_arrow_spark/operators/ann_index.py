@@ -252,9 +252,7 @@ def ivf_index_search(
     if not probe_pairs:  # empty query set → empty, correctly-typed result
         return spark.createDataFrame([], empty_schema)
 
-    live: set[str] = set()
-    for c in sorted(needed):
-        live.update(tl._prune(snap["files"], [("centroid_id", "=", c)]))
+    live = tl._files_for_keys(snap["files"], "centroid_id", needed)
     if not live:  # probed lists currently hold no files
         return spark.createDataFrame([], empty_schema)
     lists = spark.read.schema(schema).parquet(
@@ -424,9 +422,7 @@ def ivf_sharded_search(
             continue
         paths: list[str] = []
         for t, snap in g["snaps"]:
-            live: set[str] = set()
-            for c in sorted(needed):
-                live.update(tl._prune(snap["files"], [("centroid_id", "=", c)]))
+            live = tl._files_for_keys(snap["files"], "centroid_id", needed)
             paths.extend(os.path.join(t, p) for p in sorted(live))
         if not paths:
             continue
@@ -500,7 +496,5 @@ def ivf_index_file_stats(
     snap = tl._resolve_snapshot(table)
     if clusters is None:
         return len(snap["files"]), len(snap["files"])
-    live: set[str] = set()
-    for c in sorted(clusters):
-        live.update(tl._prune(snap["files"], [("centroid_id", "=", c)]))
+    live = tl._files_for_keys(snap["files"], "centroid_id", clusters)
     return len(live), len(snap["files"])

@@ -898,9 +898,7 @@ def ivfpq_rerank_search(
         }
         broadcast_luts = False
     snap = tl._resolve_snapshot(table)
-    live: set[str] = set()
-    for c in sorted(needed):
-        live.update(tl._prune(snap["files"], [("centroid_id", "=", c)]))
+    live = tl._files_for_keys(snap["files"], "centroid_id", needed)
     if not live:
         return empty
     schema = T.StructType.fromJson(json.loads(snap["schema"]))

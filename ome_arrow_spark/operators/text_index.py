@@ -186,9 +186,11 @@ def update_docs_in_text_index(
     if changed_ids.isEmpty():
         return tl.current_version(table)
     # Old contribution of these docs to the corpus scalars, computed
-    # DISTRIBUTIVELY (semi-join + aggregate → one scalar row) — the id
-    # set itself never reaches the driver, so a full-corpus re-ingest
-    # is as driver-safe as a 3-doc delta (VERDICT r7 "Next round" #3).
+    # DISTRIBUTIVELY (semi-join + aggregate → one scalar row).  The
+    # key delete below brings at most ``_DRIVER_KEY_CAP`` ids to the
+    # driver and keeps larger id sets distributed, so a full-corpus
+    # re-ingest is as driver-safe as a 3-doc delta (VERDICT r7 "Next
+    # round" #3).
     row = (
         tl.read_table(spark, table)
         .join(changed_ids, "doc_id", "left_semi")
@@ -241,9 +243,7 @@ def _pruned_postings(
     from ome_arrow_spark.sources import table_log as tl
 
     snap = tl._resolve_snapshot(table)
-    live: set[str] = set()
-    for t in sorted(set(terms)):
-        live.update(tl._prune(snap["files"], [("term", "=", t)]))
+    live = tl._files_for_keys(snap["files"], "term", terms)
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
     if not live:
         return spark.createDataFrame([], schema)
@@ -541,7 +541,5 @@ def text_index_file_stats(
     total = len(snap["files"])
     if not terms:
         return total, total
-    live: set[str] = set()
-    for t in sorted(set(terms)):
-        live.update(tl._prune(snap["files"], [("term", "=", t)]))
+    live = tl._files_for_keys(snap["files"], "term", terms)
     return len(live), total

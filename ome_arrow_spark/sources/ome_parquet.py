@@ -308,82 +308,3 @@ def spark_table_from_records(spark: SparkSession, records: list[dict]) -> DataFr
 
 def exists(path: str) -> bool:
     return os.path.exists(path)
-
-
-def _staged_replace(df: DataFrame, path: str, prefix: str) -> None:
-    """Crash-safe table rewrite: write the full result to a sibling
-    staging directory (same filesystem), then swap it in with two
-    directory renames — target → .old, staging → target. Directory
-    rename is atomic on POSIX, so a reader never observes a
-    partially-written target; any failure leaves either the original
-    or the completed new table at ``path``, and the cleanup runs in
-    ``finally``. On object stores / HDFS use Delta or Iceberg, whose
-    commit log provides this atomicity natively."""
-    import shutil
-
-    path = os.path.abspath(path)
-    parent, base = os.path.dirname(path), os.path.basename(path)
-    staging = os.path.join(parent, f".{base}.{prefix}.staging")
-    backup = os.path.join(parent, f".{base}.{prefix}.old")
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(backup, ignore_errors=True)
-    try:
-        # executes the (lazy) read of the current table — must complete
-        # before the swap touches `path`
-        df.write.mode("overwrite").option("compression", "zstd").parquet(staging)
-        tags = read_table_tags(path) if os.path.isdir(path) else {}
-        if tags:  # carry the sidecar through the rewrite
-            write_table_tags(staging, {k: v for k, v in tags.items()})
-        swapped = False
-        try:
-            if os.path.exists(path):
-                os.rename(path, backup)
-                swapped = True
-            os.rename(staging, path)
-        except Exception:
-            if swapped and not os.path.exists(path):
-                os.rename(backup, path)  # restore the original
-            raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(backup, ignore_errors=True)
-
-
-def upsert_ome_parquet(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    column: str = DEFAULT_COLUMN,
-) -> None:
-    """Upsert by image id: existing rows with matching ids are replaced,
-    new ids appended (MERGE-by-rewrite) through the crash-safe staged
-    swap of :func:`_staged_replace`; on a production lakehouse use
-    Delta/Iceberg MERGE INTO, which this mirrors semantically."""
-    key = f"{column}.id"
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        kept = existing.join(
-            updates.select(F.col(key).alias("__uid")),
-            existing[key] == F.col("__uid"),
-            "left_anti",
-        )
-        merged = kept.unionByName(updates)
-    else:
-        merged = updates
-    _staged_replace(merged, path, "upsert")
-
-
-def compact_ome_parquet(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction: rewrite the images table into
-    ~target_bytes partitions (byte-estimated from metadata, not row
-    counts — pixel rows are MB-scale). Returns the new file count."""
-    from ome_arrow_spark.plans.tuning import repartition_images
-
-    df = spark.read.parquet(path)
-    compacted = repartition_images(df, target_bytes=target_bytes)
-    _staged_replace(compacted, path, "compact")
-    return len([f for f in os.listdir(path) if f.endswith(".parquet")])

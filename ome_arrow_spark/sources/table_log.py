@@ -1,12 +1,10 @@
 """Atomic transaction-log table format over plain parquet.
 
 The reference keeps one parquet file per image and delegates table
-semantics to the filesystem (export.py:377-422); this engine's
-``upsert_ome_parquet`` / ``compact_ome_parquet`` (ome_parquet.py)
-upgraded that to crash-safe staged-swap MERGE-by-rewrite.  This module
-closes the remaining gap (README "Table format" design note) with a
-self-contained Delta/Iceberg-style commit log — no external library —
-so table mutations are **atomic**, readers get **snapshot isolation**
+semantics to the filesystem (export.py:377-422).  This module closes
+that gap (README "Table format" design note) with a self-contained
+Delta/Iceberg-style commit log — no external library — so table
+mutations are **atomic**, readers get **snapshot isolation**
 and **time travel**, and scans get **manifest-based file skipping**
 instead of directory listing:
 
@@ -33,10 +31,13 @@ instead of directory listing:
   checkpoint + a bounded log suffix instead of replaying the whole
   history — commit count no longer degrades planning.
 
-MERGE (:func:`upsert_table`) rewrites only the files whose key
-min/max range can contain an update key; untouched files are carried
-by reference.  That is the Delta ``MERGE INTO`` file-pruning shape:
-cost scales with the touched fraction of the table, not table size.
+MERGE (:func:`upsert_table`) rewrites only the files that can hold an
+update key — by key min/max range and, on bloomed tables, by Bloom
+filter; untouched files are carried by reference.  That is the Delta
+``MERGE INTO`` file-pruning shape: cost scales with the touched
+fraction of the table, not table size.  MERGE, key deletes, id lookups
+and index probes all ask :func:`_files_for_keys` which files can hold
+a set of key values.
 """
 
 from __future__ import annotations
@@ -834,13 +835,8 @@ def _build_bloom(values) -> str | None:
     return base64.b64encode(bytes(bits)).decode()
 
 
-def _bloom_might_contain(b64: str, v: Any) -> bool:
-    import base64
-
-    hs = _bloom_hashes(v)
-    if hs is None:
-        return True
-    bits = base64.b64decode(b64)
+def _bloom_might_contain(bits: bytes, hs: tuple[int, int]) -> bool:
+    """Probe a decoded bitset with a value's :func:`_bloom_hashes`."""
     h1, h2 = hs
     for i in range(_BLOOM_K):
         pos = (h1 + i * h2) % _BLOOM_M
@@ -1153,14 +1149,16 @@ def upsert_table(
     order_by: str | Sequence[str] | None = None,
     cluster_by: str | None = None,
 ) -> int:
-    """MERGE by key with manifest pruning: only files whose footer
-    ``[min,max]`` range on ``key`` can contain an update key are
+    """MERGE by key with manifest pruning: only files that can hold an
+    update key — by footer ``[min,max]`` range on ``key`` and, on
+    bloomed tables, by Bloom filter (:func:`_files_for_key_set`) — are
     rewritten (kept-rows anti-join ∪ updates); every other file is
     carried by reference.  Over-selection is harmless (non-matching
     rows survive the anti-join); under-selection cannot happen because
-    any matching key is inside its file's min/max.  Cost scales with
-    the touched fraction of the table, not table size — the Delta
-    ``MERGE INTO`` shape (README design note, item 1).
+    neither test has false negatives.  At most ``_DRIVER_KEY_CAP``
+    update keys reach the driver.  Cost scales with the touched
+    fraction of the table, not table size — the Delta ``MERGE INTO``
+    shape (README design note, item 1).
 
     ``order_by`` makes the merge CONDITIONAL (Delta ``WHEN MATCHED AND
     s.ord > t.ord``): per key, the row with the greatest ``order_by``
@@ -1180,60 +1178,12 @@ def upsert_table(
     _enforce_constraints(updates, snap, table)
     version = snap["version"] + 1
 
-    bounds = updates.agg(
-        F.min(key).alias("lo"), F.max(key).alias("hi")
-    ).collect()[0]
-    # Same encoding as the stored stats, so comparisons are type-safe.
-    lo, hi = _json_safe(bounds["lo"], -1), _json_safe(bounds["hi"], +1)
-
-    touched: list[str] = []
-    carried: list[str] = []
-    for path, add in snap["files"].items():
-        st = add.get("columns", {}).get(key)
-        if lo is None:  # empty updates: nothing can match
-            carried.append(path)
-        elif st is None or st["min"] is None:
-            touched.append(path)  # no stats → must assume overlap
-        elif st["max"] < lo or st["min"] > hi:
-            carried.append(path)
-        else:
-            touched.append(path)
-
-    # Bloom phase: range overlap is a weak test on high-cardinality
-    # keys (every file of uuid-like ids spans the whole key space).
-    # When the update batch is small enough to enumerate and the table
-    # carries blooms on the key, drop candidates whose bloom rejects
-    # EVERY update key — a wrong drop is impossible (blooms have no
-    # false negatives), a false positive just rewrites one extra file.
-    _BLOOM_KEY_CAP = 10_000
-    if key in _bloom_cols(snap) and touched:
-        bloomed = [
-            p for p in touched if snap["files"][p].get("bloom", {}).get(key)
-        ]
-        if bloomed:
-            ukeys = [
-                r[0]
-                for r in updates.select(key)
-                .distinct()
-                .limit(_BLOOM_KEY_CAP + 1)
-                .collect()
-            ]
-            if len(ukeys) <= _BLOOM_KEY_CAP:
-                for p in bloomed:
-                    bits = snap["files"][p]["bloom"][key]["bits"]
-                    if not any(_bloom_might_contain(bits, k) for k in ukeys):
-                        touched.remove(p)
-                        carried.append(p)
+    touched, has_keys = _files_for_key_set(spark, snap, key, updates)
 
     actions: list[dict[str, Any]] = []
     if touched:
-        existing = _scan(
-            spark,
-            table,
-            snap["files"],
-            touched,
-            T.StructType.fromJson(json.loads(snap["schema"])),
-        )
+        schema = T.StructType.fromJson(json.loads(snap["schema"]))
+        existing = _scan(spark, table, snap["files"], touched, schema)
         if order_by is None:
             kept = existing.join(
                 updates.select(F.col(key).alias("__uk")).distinct(),
@@ -1258,7 +1208,7 @@ def upsert_table(
             )
     else:
         merged = updates
-    if lo is not None or touched:
+    if has_keys:
         # Rewrite range-clustered on the merge key: the touched files'
         # replacements keep tight key min/max (and Bloom) stats, so the
         # NEXT merge prunes as well as this one did — without this,
@@ -1420,75 +1370,26 @@ def delete_keys_from_table(
     100 TB: the cost is the matched rows' positions, not a rewrite of
     every file that contains one key.
 
-    Nothing about the key set ever reaches the driver:
+    At most ``_DRIVER_KEY_CAP`` keys ever reach the driver:
 
-    * file candidacy is decided by joining the manifest's per-file
-      ``(min, max)`` stats ranges (driver metadata, O(files)) against
-      the keys **distributively**; only the O(touched-files) path list
-      is collected,
+    * file candidacy comes from :func:`_files_for_key_set` — a key set
+      up to the cap is probed on the driver against each file's
+      ``(min, max)`` stats range and Bloom filter; a larger one is
+      joined against the manifest's ranges **distributively**, and only
+      the O(touched-files) path list is collected,
     * the rewrite is a ``LEFT ANTI`` join of the touched files against
-      the keys — no ``IN (...)`` literal list, no ``collect()`` of ids.
+      the keys — no ``IN (...)`` literal list.
 
-    Files whose stats range provably contains no key are carried by
-    reference untouched, so cost still scales with the touched
-    fraction.  (Files with no stats for ``key`` are conservatively
-    rewritten.)"""
+    Files that provably hold no key are carried by reference
+    untouched, so cost still scales with the touched fraction.  (Files
+    with no stats for ``key`` are conservatively rewritten.)"""
     if mode not in ("rewrite", "dv"):
         raise TableLogError(f"delete mode must be 'rewrite' or 'dv': {mode!r}")
     snap = _resolve_snapshot(table)
     version = snap["version"] + 1
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
     kdf = keys.select(F.col(key).alias("_del_key")).distinct()
-    ranged, statless = [], []
-    for p, a in snap["files"].items():
-        st = a.get("columns", {}).get(key)
-        if st is not None and st["min"] is not None and st["max"] is not None:
-            ranged.append((p, st["min"], st["max"]))
-        else:
-            statless.append(p)
-    touched = list(statless)
-    if ranged:
-        key_dt = schema[key].dataType
-        cmp_key = F.col("_del_key")
-        if isinstance(
-            key_dt, (T.DateType, T.TimestampType, T.TimestampNTZType)
-        ):
-            # _stats stores temporal min/max as ISO strings
-            # (_json_safe); build the ranges as strings and cast back —
-            # exact, since ISO lexicographic order == temporal order.
-            ranges_df = spark.createDataFrame(
-                [(p, str(lo), str(hi)) for p, lo, hi in ranged],
-                "_path string, _lo string, _hi string",
-            ).select(
-                "_path",
-                F.col("_lo").cast(key_dt).alias("_lo"),
-                F.col("_hi").cast(key_dt).alias("_hi"),
-            )
-        elif isinstance(key_dt, T.DecimalType):
-            # decimal stats are stored as floats widened outward by one
-            # ulp; compare in double space (monotone rounding keeps the
-            # bound conservative) instead of casting float→decimal.
-            ranges_df = spark.createDataFrame(
-                [(p, float(lo), float(hi)) for p, lo, hi in ranged],
-                "_path string, _lo double, _hi double",
-            )
-            cmp_key = F.col("_del_key").cast("double")
-        else:
-            key_type = key_dt.simpleString()
-            ranges_df = spark.createDataFrame(
-                ranged, f"_path string, _lo {key_type}, _hi {key_type}"
-            )
-        touched += [
-            r["_path"]
-            for r in F.broadcast(ranges_df)
-            .join(
-                kdf,
-                (cmp_key >= F.col("_lo")) & (cmp_key <= F.col("_hi")),
-                "left_semi",
-            )
-            .select("_path")
-            .collect()
-        ]
+    touched, _ = _files_for_key_set(spark, snap, key, keys)
     actions: list[dict[str, Any]] = []
     if touched and mode == "dv":
         raw = spark.read.schema(schema).parquet(
@@ -1703,6 +1604,109 @@ def recluster_table(
 
 
 # ---------------------------------------------------------------------------
+# Key-set file pruning
+# ---------------------------------------------------------------------------
+
+# Key sets up to this size are tested on the driver (range + Bloom per
+# file); larger ones are matched against the file ranges by a
+# distributed join and never reach the driver.
+_DRIVER_KEY_CAP = 10_000
+
+
+def _files_for_keys(
+    files: dict[str, dict[str, Any]], col: str, values: Iterable[Any]
+) -> list[str]:
+    """Files that can hold a row whose ``col`` equals one of
+    ``values``: a file is kept when some value lies inside its footer
+    ``[min, max]`` range AND passes its Bloom filter.  Values are
+    coerced through ``_json_safe``, the encoding the stats were stored
+    with.  Missing stats or Bloom keep the file, and so does a value
+    that cannot be ordered against the stats or hashed — a skip is
+    always a proof."""
+    import base64
+
+    probes = [(v, _bloom_hashes(v)) for v in map(_json_safe, values)]
+    out = []
+    for path, add in files.items():
+        st = add.get("columns", {}).get(col) or {}
+        lo, hi = st.get("min"), st.get("max")
+        bl = add.get("bloom", {}).get(col)
+        bits = base64.b64decode(bl["bits"]) if bl is not None else None
+        for v, hs in probes:
+            if lo is not None and hi is not None:
+                try:
+                    if v < lo or v > hi:
+                        continue
+                except TypeError:
+                    pass  # incomparable value/stat types: keep
+            if bits is None or hs is None or _bloom_might_contain(bits, hs):
+                out.append(path)
+                break
+    return out
+
+
+def _files_for_key_set(
+    spark: SparkSession, snap: dict[str, Any], key: str, keys: DataFrame
+) -> tuple[list[str], bool]:
+    """Live files of ``snap`` that can hold one of the non-null ``key``
+    values of ``keys``, and whether ``keys`` has any such value.
+
+    One probe fetches up to ``_DRIVER_KEY_CAP + 1`` keys.  Within the
+    cap they go through :func:`_files_for_keys` (range + Bloom).  Past
+    it the key set stays distributed: it is semi-joined against the
+    broadcast per-file ``(min, max)`` ranges and only the matching
+    paths are collected; files without stats are kept."""
+    import datetime
+
+    kcol = keys.select(F.col(key).alias("_k")).where(F.col("_k").isNotNull())
+    probe = [r[0] for r in kcol.limit(_DRIVER_KEY_CAP + 1).collect()]
+    if len(probe) <= _DRIVER_KEY_CAP:
+        if isinstance(kcol.schema["_k"].dataType, T.TimestampType):
+            # collected timestamps are naive local time; the footer
+            # stats of a timestamp column are UTC-aware ISO strings
+            probe = [v.astimezone(datetime.timezone.utc) for v in probe]
+        return _files_for_keys(snap["files"], key, probe), bool(probe)
+    ranged, touched = [], []
+    for p, a in snap["files"].items():
+        st = a.get("columns", {}).get(key)
+        if st is not None and st["min"] is not None and st["max"] is not None:
+            ranged.append((p, st["min"], st["max"]))
+        else:
+            touched.append(p)
+    if ranged:
+        key_dt = T.StructType.fromJson(json.loads(snap["schema"]))[key].dataType
+        cmp_key = F.col("_k")
+        if isinstance(key_dt, T.DecimalType):
+            # decimal stats are floats widened outward by one ulp;
+            # compare in double space (monotone rounding keeps the
+            # bound conservative) instead of casting float→decimal.
+            key_dt, cmp_key = T.DoubleType(), cmp_key.cast("double")
+        # Ship the stats as strings and cast back: exact for numbers
+        # (shortest round-trip repr) and for the ISO strings _json_safe
+        # stores temporal stats as (ISO order == temporal order).
+        ranges_df = spark.createDataFrame(
+            [(p, str(lo), str(hi)) for p, lo, hi in ranged],
+            "_path string, _lo string, _hi string",
+        ).select(
+            "_path",
+            F.col("_lo").cast(key_dt).alias("_lo"),
+            F.col("_hi").cast(key_dt).alias("_hi"),
+        )
+        touched += [
+            r["_path"]
+            for r in F.broadcast(ranges_df)
+            .join(
+                kcol.distinct(),
+                (cmp_key >= F.col("_lo")) & (cmp_key <= F.col("_hi")),
+                "left_semi",
+            )
+            .select("_path")
+            .collect()
+        ]
+    return touched, True
+
+
+# ---------------------------------------------------------------------------
 # Read path
 # ---------------------------------------------------------------------------
 
@@ -1714,9 +1718,9 @@ def _prune(
     predicates: Iterable[tuple[str, str, Any]] | None,
 ) -> list[str]:
     """Manifest file skipping: drop a file only when its footer stats
-    (or, for equality, its per-file Bloom filter) PROVE no row can
-    satisfy an AND-ed ``(column, op, literal)`` conjunct; missing
-    stats/bloom keep the file (conservative).
+    PROVE no row can satisfy an AND-ed ``(column, op, literal)``
+    conjunct; equality is :func:`_files_for_keys` (range + Bloom).
+    Missing stats/bloom keep the file (conservative).
 
     Literals are coerced through the same ``_json_safe`` encoding the
     stats were stored with (date/datetime → ISO string), so callers
@@ -1724,36 +1728,29 @@ def _prune(
     literal that still cannot be ordered against a stored stat (e.g.
     int vs string-column stats) conservatively KEEPS the file rather
     than raising."""
-    if not predicates:
-        return list(files)
-    out = []
-    for path, add in files.items():
-        keep = True
-        for col, op, lit in predicates:
-            if op not in _OPS:
-                raise TableLogError(f"unsupported prune op: {op}")
-            lit = _json_safe(lit)
-            st = add.get("columns", {}).get(col)
-            if st is not None and st["min"] is not None and st["max"] is not None:
-                lo, hi = st["min"], st["max"]
-                try:
-                    if (
-                        (op == "=" and (lit < lo or lit > hi))
-                        or (op in ("<", "<=") and (lo > lit or (op == "<" and lo == lit)))
-                        or (op in (">", ">=") and (hi < lit or (op == ">" and hi == lit)))
-                    ):
-                        keep = False
-                        break
-                except TypeError:
-                    pass  # incomparable literal/stat types: keep the file
-            if op == "=":
-                bl = add.get("bloom", {}).get(col)
-                if bl is not None and not _bloom_might_contain(bl["bits"], lit):
-                    keep = False
-                    break
-        if keep:
+    live = list(files)
+    for col, op, lit in predicates or ():
+        if op not in _OPS:
+            raise TableLogError(f"unsupported prune op: {op}")
+        if op == "=":
+            live = _files_for_keys({p: files[p] for p in live}, col, [lit])
+            continue
+        lit = _json_safe(lit)
+        out = []
+        for path in live:
+            st = files[path].get("columns", {}).get(col) or {}
+            lo, hi = st.get("min"), st.get("max")
+            try:
+                if lo is not None and hi is not None and (
+                    (op in ("<", "<=") and (lo > lit or (op == "<" and lo == lit)))
+                    or (op in (">", ">=") and (hi < lit or (op == ">" and hi == lit)))
+                ):
+                    continue
+            except TypeError:
+                pass  # incomparable literal/stat types: keep the file
             out.append(path)
-    return out
+        live = out
+    return live
 
 
 def read_table(
@@ -1936,69 +1933,71 @@ def optimize_table(
     data); the z-value is a pure Catalyst bit-weave expression; the
     rewrite is one ``repartitionByRange`` shuffle on the z-value plus
     a within-partition sort.  No global single-partition window
-    anywhere (``ntile`` over the whole table would be one)."""
+    anywhere (``ntile`` over the whole table would be one).
+
+    Without ``zorder_by`` this is :func:`compact_table`: files already
+    at ``target_bytes`` are carried by reference."""
+    if not zorder_by:
+        return compact_table(spark, table, target_bytes=target_bytes)
     snap = _resolve_snapshot(table)
     version = snap["version"] + 1
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
+    numeric = (
+        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+        T.FloatType, T.DoubleType, T.DecimalType,
+    )
+    for col in zorder_by:
+        if col not in schema.fieldNames() or not isinstance(
+            schema[col].dataType, numeric
+        ):
+            raise TableLogError(
+                f"zorder_by column {col!r} must be a numeric table "
+                "column (quantile bucketing); cluster strings via a "
+                "numeric surrogate (e.g. xxhash64) or plain "
+                "repartitionByRange before create"
+            )
     files = list(snap["files"])
     df = _scan(spark, table, snap["files"], files, schema)
     total = sum(a.get("bytes", 0) for a in snap["files"].values())
     n = max(1, -(-total // target_bytes))
-    if zorder_by:
-        numeric = (
-            T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-            T.FloatType, T.DoubleType, T.DecimalType,
-        )
-        for col in zorder_by:
-            if col not in schema.fieldNames() or not isinstance(
-                schema[col].dataType, numeric
-            ):
-                raise TableLogError(
-                    f"zorder_by column {col!r} must be a numeric table "
-                    "column (quantile bucketing); cluster strings via a "
-                    "numeric surrogate (e.g. xxhash64) or plain "
-                    "repartitionByRange before create"
+    n_buckets = 1 << bits_per_col
+    # quantile boundaries → equal-population buckets even on
+    # skewed columns (plain min/max scaling would collapse); the
+    # multi-column list form runs ONE Greenwald-Khanna job for all
+    # zorder columns instead of one scan per column
+    all_qs = df.stat.approxQuantile(
+        list(zorder_by),
+        [i / n_buckets for i in range(1, n_buckets)],
+        0.001,
+    )
+    zcols = []
+    for col, qs in zip(zorder_by, all_qs):
+        bucket = F.lit(0)
+        for b in qs:  # rank = #boundaries below the value
+            bucket = bucket + F.when(F.col(col) > F.lit(b), 1).otherwise(0)
+        zcols.append(bucket.cast("long"))
+    weave = F.lit(0).cast("long")
+    for bit in range(bits_per_col):
+        for ci, zc in enumerate(zcols):
+            weave = weave.bitwiseOR(
+                F.shiftleft(
+                    F.shiftright(zc, bit).bitwiseAND(F.lit(1)),
+                    bit * len(zcols) + ci,
                 )
-        n_buckets = 1 << bits_per_col
-        # quantile boundaries → equal-population buckets even on
-        # skewed columns (plain min/max scaling would collapse); the
-        # multi-column list form runs ONE Greenwald-Khanna job for all
-        # zorder columns instead of one scan per column
-        all_qs = df.stat.approxQuantile(
-            list(zorder_by),
-            [i / n_buckets for i in range(1, n_buckets)],
-            0.001,
-        )
-        zcols = []
-        for col, qs in zip(zorder_by, all_qs):
-            bucket = F.lit(0)
-            for b in qs:  # rank = #boundaries below the value
-                bucket = bucket + F.when(F.col(col) > F.lit(b), 1).otherwise(0)
-            zcols.append(bucket.cast("long"))
-        weave = F.lit(0).cast("long")
-        for bit in range(bits_per_col):
-            for ci, zc in enumerate(zcols):
-                weave = weave.bitwiseOR(
-                    F.shiftleft(
-                        F.shiftright(zc, bit).bitwiseAND(F.lit(1)),
-                        bit * len(zcols) + ci,
-                    )
-                )
-        clustered = (
-            df.withColumn("__z", weave)
-            .repartitionByRange(max(n, 2), "__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-    else:
-        clustered = df.repartition(n)
+            )
+    clustered = (
+        df.withColumn("__z", weave)
+        .repartitionByRange(max(n, 2), "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z")
+    )
     adds = _write_data_files(clustered, table, version, _bloom_cols(snap))
     _commit(
         table,
         version,
         {
             "version": version,
-            "operation": "zorder" if zorder_by else "compact",
+            "operation": "zorder",
             "actions": [{"add": a} for a in adds]
             + [{"remove": {"path": p}} for p in files],
         },
@@ -2161,11 +2160,10 @@ def upsert_ome_table(
         F.col(f"{column}.id").alias("image_id"), F.col(column)
     )
     # Materialize the batch ONCE (r14): upsert_table evaluates its
-    # updates relation up to three times (key-bounds agg, bloom-key
-    # probe, rewrite), and in the streaming foreachBatch sink each
-    # evaluation re-runs the image DECODE plan — measured ~0.9 s of
-    # scan + Python-worker job overhead per extra pass at 50-image
-    # batches.  A micro-batch is O(new-data) by contract, so one
+    # updates relation twice (key probe, rewrite), and in the
+    # streaming foreachBatch sink each evaluation re-runs the image
+    # DECODE plan — measured ~0.9 s of scan + Python-worker job
+    # overhead per extra pass at 50-image batches.  A micro-batch is O(new-data) by contract, so one
     # eager local materialization is bounded at any scale (the same
     # source-materialization a Delta MERGE performs).
     return upsert_table(
@@ -2205,13 +2203,11 @@ def read_ome_table(
     """Snapshot read of the images table; an ``image_ids`` point-lookup
     list prunes files per id (range stats + Bloom filters, OR-ed
     across ids) before the scan — a k-image lookup on a million-image
-    table reads k files, not the table."""
-    if not image_ids:
+    table reads k files, not the table.  An empty list reads nothing."""
+    if image_ids is None:
         return read_table(spark, table, version=version).select(column)
     snap = _resolve_snapshot(table, version)
-    live: set[str] = set()
-    for iid in image_ids:
-        live.update(_prune(snap["files"], [("image_id", "=", iid)]))
+    live = _files_for_keys(snap["files"], "image_id", image_ids)
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
     df = _scan(spark, table, snap["files"], sorted(live), schema)
     return df.filter(F.col("image_id").isin(list(image_ids))).select(column)

@@ -1,5 +1,5 @@
-"""Composed pipelines: near-dedup end-to-end, upsert/compaction table
-maintenance, streaming image ingest."""
+"""Composed pipelines: near-dedup end-to-end, OME-Parquet table tags,
+streaming sinks."""
 
 from __future__ import annotations
 
@@ -8,15 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ome_arrow_spark import synth
-from ome_arrow_spark.operators.describe import describe
 from ome_arrow_spark.operators.pipeline import drop_near_duplicates, near_dedup
-from ome_arrow_spark.sources.ome_parquet import (
-    compact_ome_parquet,
-    read_ome_parquet,
-    upsert_ome_parquet,
-    write_ome_parquet,
-)
-from ome_arrow_spark.streaming.images import ingest_available_now
+from ome_arrow_spark.sources.ome_parquet import read_ome_parquet, write_ome_parquet
 
 
 def _docs(spark):
@@ -69,68 +62,9 @@ def test_near_dedup_pipeline(spark):
     assert kept == [0, 1, 2, 200, 201, 202]
 
 
-def test_upsert_images(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    v1 = synth.golden_images_df(spark, ids=["z-series", "img-0001"])
-    write_ome_parquet(v1, path, mode="overwrite")
-
-    # replace img-0001 with a renamed version + add time-series
-    updated = synth.golden_images_df(spark, ids=["time-series", "img-0001"]).withColumn(
-        "ome_arrow",
-        F.col("ome_arrow").withField("name", F.lit("updated!")),
-    )
-    upsert_ome_parquet(spark, updated, path)
-
-    back = read_ome_parquet(spark, path)
-    assert back.count() == 3
-    names = {
-        r["id"]: r["name"]
-        for r in back.select(
-            F.col("ome_arrow.id").alias("id"), F.col("ome_arrow.name").alias("name")
-        ).collect()
-    }
-    assert names["img-0001"] == "updated!"
-    assert names["z-series"] == "z-series"  # untouched rows survive
-
-
-def test_upsert_failure_leaves_table_intact(spark, tmp_path):
-    """Crash-safety: an upsert whose merged-result write fails mid-job
-    must leave the original table readable and unchanged (the staged
-    write never touches the target before the rename swap)."""
-    import pytest
-    from pyspark.sql import types as T
-
-    path = str(tmp_path / "tbl")
-    v1 = synth.golden_images_df(spark, ids=["z-series", "img-0001"])
-    write_ome_parquet(v1, path, mode="overwrite")
-    before = sorted(
-        r["id"] for r in read_ome_parquet(spark, path).select("ome_arrow.id").collect()
-    )
-
-    @F.udf(T.StringType())
-    def boom(s):
-        raise RuntimeError("injected failure")
-
-    bad = synth.golden_images_df(spark, ids=["time-series"]).withColumn(
-        "ome_arrow", F.col("ome_arrow").withField("name", boom(F.col("ome_arrow.id")))
-    )
-    with pytest.raises(Exception, match="injected failure|Job aborted"):
-        upsert_ome_parquet(spark, bad, path)
-
-    after = sorted(
-        r["id"] for r in read_ome_parquet(spark, path).select("ome_arrow.id").collect()
-    )
-    assert after == before
-    import os
-
-    leftovers = [f for f in os.listdir(tmp_path) if "staging" in f or ".old" in f]
-    assert not leftovers, f"staged swap must clean up: {leftovers}"
-
-
 def test_table_tags_sidecar_roundtrip(spark, tmp_path):
     """write_ome_parquet tags multi-row Spark tables via the directory
-    sidecar; the tags survive upsert/compaction rewrites and a foreign
-    type warns (soft check) instead of failing."""
+    sidecar, and a foreign type warns (soft check) instead of failing."""
     import warnings
 
     from ome_arrow_spark.sources.ome_parquet import read_table_tags, write_table_tags
@@ -142,45 +76,12 @@ def test_table_tags_sidecar_roundtrip(spark, tmp_path):
     assert tags.get("ome.arrow.type") == "ome.arrow"
     assert "ome.arrow.version" in tags
 
-    # tags survive the staged-swap rewrite
-    upsert_ome_parquet(spark, synth.golden_images_df(spark, ids=["time-series"]), path)
-    assert read_table_tags(path) == tags
-
     # foreign tag → warn, still reads
     write_table_tags(path, {"ome.arrow.type": "something-else"})
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        assert read_ome_parquet(spark, path).count() == 3
+        assert read_ome_parquet(spark, path).count() == 2
     assert any("something-else" in str(x.message) for x in w)
-
-
-def test_compaction(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    imgs = synth.golden_images_df(spark, ids=["nviz-2ch-single", "nviz-1ch-stack", "img-0001"])
-    # fragment: one file per image
-    write_ome_parquet(imgs.repartition(3), path, mode="overwrite")
-    import os
-
-    before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    after = compact_ome_parquet(spark, path)
-    assert before == 3 and after <= 2
-    assert read_ome_parquet(spark, path).count() == 3
-
-
-def test_streaming_image_ingest(spark, tmp_path):
-    from ome_arrow_spark.sources.tiff import encode_ftif
-
-    src = tmp_path / "drop"
-    src.mkdir()
-    for i in range(5):
-        vol = np.full((1, 1, 1, 4, 4), i, dtype=np.int32)
-        (src / f"acq_{i}.ftif").write_bytes(encode_ftif(vol, image_id=f"acq{i}"))
-    table = str(tmp_path / "images_table")
-    n = ingest_available_now(spark, str(src), table, glob="*.ftif")
-    assert n == 5
-    back = read_ome_parquet(spark, table)
-    ids = sorted(r["image_id"] for r in describe(back).collect())
-    assert ids == [f"acq{i}" for i in range(5)]
 
 
 def test_foreach_batch_streaming_upsert(spark, tmp_path):

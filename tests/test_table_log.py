@@ -5,11 +5,14 @@ MERGE pruning, compaction, vacuum, and the OME-table property carrier
 
 from __future__ import annotations
 
+import base64
 import json
+import math
 import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -399,6 +402,37 @@ class TestZOrder:
         assert tl.table_history(tdir)[-1]["operation"] == "compact"
         assert tl.read_table(spark, tdir).count() == 200
 
+    def test_optimize_without_zorder_carries_at_target_files(
+        self, spark, tdir
+    ):
+        """No-zorder OPTIMIZE is the compaction policy: a file already
+        at target size is carried by reference, only the small files
+        are rewritten."""
+        tl.create_table(spark, _base(spark, 2000).coalesce(1), tdir)
+        (big,) = tl._resolve_snapshot(tdir)["files"].items()
+        for lo in (2000, 2010, 2020):
+            tl.append_table(
+                spark,
+                spark.range(lo, lo + 10).select(
+                    F.col("id").alias("k"),
+                    (F.col("id") * 2).alias("v"),
+                    F.lit("x").alias("s"),
+                ),
+                tdir,
+            )
+        small = set(tl._resolve_snapshot(tdir)["files"]) - {big[0]}
+        tl.optimize_table(spark, tdir, target_bytes=big[1]["bytes"])
+        after = tl._resolve_snapshot(tdir)["files"]
+        assert after[big[0]] == big[1]
+        assert not small & set(after)
+        removed = {
+            a["remove"]["path"]
+            for a in tl._read_entry(tdir, tl.current_version(tdir))["actions"]
+            if "remove" in a
+        }
+        assert removed == small
+        assert tl.read_table(spark, tdir).count() == 2030
+
 
 class TestBloom:
     def test_bloom_prunes_absent_point_lookup(self, spark, tdir):
@@ -470,9 +504,145 @@ class TestBloom:
         assert (h1s, h2s) == (16226788219323896761, 17343288595532086069)
         b = tl._build_bloom([1, "two", b"three"])
         assert b is not None
+        bits = base64.b64decode(b)
         for v in (1, "two", b"three"):
-            assert tl._bloom_might_contain(b, v)
-        assert not tl._bloom_might_contain(b, 999999)
+            assert tl._bloom_might_contain(bits, tl._bloom_hashes(v))
+        assert not tl._bloom_might_contain(bits, tl._bloom_hashes(999999))
+
+
+def _files_holding(spark, table, key, keys):
+    """Manifest paths of the live files that really hold a key."""
+    snap = tl._resolve_snapshot(table)
+    return {
+        r[0]
+        for r in spark.read.parquet(
+            *[os.path.join(table, p) for p in snap["files"]]
+        )
+        .select(key, F.col("_metadata.file_name").alias("f"))
+        .join(keys.select(key), key, "left_semi")
+        .select("f")
+        .distinct()
+        .collect()
+    }
+
+
+def _removed_files(table):
+    entry = tl._read_entry(table, tl.current_version(table))
+    return {a["remove"]["path"] for a in entry["actions"] if "remove" in a}
+
+
+class TestKeySetPruner:
+    """One key-set file test (range + Bloom) behind MERGE, key deletes,
+    id lookups and index probes."""
+
+    def _case(self, spark, tdir, kind):
+        """Create a 4-file table keyed on ``k`` of type ``kind`` and
+        return a key set for it; the date, timestamp and decimal
+        inputs follow TestTemporalKeyDelete."""
+        day0 = F.lit("2024-01-01").cast("date")
+        ts0 = F.lit("2024-01-01 00:00:00").cast("timestamp")
+        cols = {
+            "int": (F.col("id") * 3).alias("k"),
+            "string": F.md5(F.col("id").cast("string")).alias("k"),
+            "date": F.date_add(day0, F.col("id").cast("int")).alias("k"),
+            "timestamp": (
+                ts0 + F.make_interval(hours=F.col("id").cast("int"))
+            ).alias("k"),
+            "decimal": (F.col("id").cast("decimal(10,2)") / 4).alias("k"),
+        }
+        df = spark.range(0, 120).select(cols[kind], F.col("id").alias("v"))
+        if kind == "string":  # round-robin: every file spans the key space
+            tl.create_table(spark, df.repartition(4), tdir, bloom_columns=["k"])
+        else:
+            tl.create_table(spark, df.repartitionByRange(4, "k"), tdir)
+        if kind == "decimal":  # pyarrow keeps no decimal footer stats
+            p = tl._version_file(tdir, 0)
+            entry = json.load(open(p))
+            for a in entry["actions"]:
+                vals = pq.read_table(
+                    os.path.join(tdir, a["add"]["path"]), columns=["k"]
+                )["k"].to_pylist()
+                a["add"]["columns"]["k"] = {
+                    "min": math.nextafter(float(min(vals)), -math.inf),
+                    "max": math.nextafter(float(max(vals)), math.inf),
+                    "nulls": 0,
+                }
+            json.dump(entry, open(p, "w"), separators=(",", ":"))
+        assert all(
+            "k" in a["columns"]
+            for a in tl._resolve_snapshot(tdir)["files"].values()
+        )
+        # the first file's min key, a key in the last file, and (int
+        # only) an absent value and a null
+        keys = df.filter("v IN (0, 110)").select("k")
+        if kind == "int":
+            keys = keys.union(
+                spark.createDataFrame([(1,), (None,)], "k long")
+            )
+        return keys
+
+    @pytest.mark.parametrize(
+        "kind", ["int", "string", "date", "timestamp", "decimal"]
+    )
+    def test_driver_and_distributed_branches_agree(
+        self, spark, tdir, kind, monkeypatch
+    ):
+        """Both branches keep every file that holds a key, and the
+        driver branch (range + Bloom) keeps a subset of the distributed
+        range join's files."""
+        # timestamp footer stats need TIMESTAMP_MICROS (INT96 has none)
+        old = spark.conf.get("spark.sql.parquet.outputTimestampType")
+        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        try:
+            keys = self._case(spark, tdir, kind)
+        finally:
+            spark.conf.set("spark.sql.parquet.outputTimestampType", old)
+        snap = tl._resolve_snapshot(tdir)
+        driver, has = tl._files_for_key_set(spark, snap, "k", keys)
+        monkeypatch.setattr(tl, "_DRIVER_KEY_CAP", 0)
+        dist, has_d = tl._files_for_key_set(spark, snap, "k", keys)
+        holders = _files_holding(spark, tdir, "k", keys)
+        assert has and has_d
+        assert holders and holders <= set(driver) <= set(dist)
+        assert len(driver) < len(snap["files"])  # pruning engaged
+
+    def test_key_delete_bloom_prunes_uuid_keys(self, spark, tdir):
+        """uuid-like string keys: every file's min/max spans the key
+        space, so only the Bloom filter can skip files; a small key
+        delete rewrites just the files that hold a key."""
+        df = spark.range(0, 400).select(
+            F.md5(F.col("id").cast("string")).alias("k"),
+            F.col("id").alias("v"),
+        )
+        tl.create_table(spark, df.repartition(8), tdir, bloom_columns=["k"])
+        keys = df.filter("v IN (5, 250)").select("k")
+        holders = _files_holding(spark, tdir, "k", keys)
+        tl.delete_keys_from_table(spark, tdir, keys, key="k")
+        assert _removed_files(tdir) == holders
+        assert len(holders) <= 2
+        assert tl.read_table(spark, tdir).count() == 398
+
+    def test_upsert_job_count(self, spark, tdir):
+        """One upsert of a 4-key batch into a bloomed table runs a
+        single key probe: 7 jobs in all.  With a min/max aggregate plus
+        a separate distinct-key Bloom probe, the same upsert ran 9."""
+        tl.create_table(
+            spark, _base(spark, 400).repartition(4), tdir, bloom_columns=["k"]
+        )
+        updates = spark.createDataFrame(
+            [(k, -1, "u") for k in (3, 120, 233, 1000)],
+            "k long, v long, s string",
+        )
+        sc = spark.sparkContext
+        group = f"upsert-jobs-{time.time_ns()}"
+        sc.setJobGroup(group, "upsert job count")
+        try:
+            tl.upsert_table(spark, updates, tdir, key="k")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+        assert tl.read_table(spark, tdir).count() == 401
 
 
 class TestIncrementalAgg:
@@ -619,6 +789,11 @@ class TestOmeTable:
         assert sorted(
             r[0] for r in back.df.select("ome_arrow.id").collect()
         ) == sorted(r[0] for r in ome_images_df.select("ome_arrow.id").collect())
+
+    def test_empty_id_list_reads_nothing(self, spark, tdir, ome_images_df):
+        tl.create_ome_table(spark, ome_images_df, tdir)
+        assert tl.read_ome_table(spark, tdir, image_ids=[]).count() == 0
+        assert tl.read_ome_table(spark, tdir).count() == 3
 
     def test_point_lookup_prunes(self, spark, tdir, ome_images_df):
         tl.create_ome_table(
