@@ -1,22 +1,15 @@
-"""Direct Arrow construction for decoded OME records (r14).
+"""Decoded OME records → Arrow, the one conversion every ingest path uses.
 
-The ingest decode UDFs used to yield pandas DataFrames holding one
-Python dict per image and let Spark's pandas→Arrow serializer convert
-them.  For the nested OME struct that conversion is the DOMINANT cost
-of the whole decode path — measured 3.59 ms/img against 1.48 ms/img
-for the actual FTIF decode at 512² (the pixel lists walk a generic
-python-object converter).  Building the Arrow arrays directly —
-pixels as ONE concatenated int32 buffer + offsets, plane/struct
-wrappers via ``pa.StructArray.from_arrays`` — produces the identical
-column for a fraction of the cost, and `mapInArrow` skips the pandas
-detour entirely (guide §4.2: hand whole batches to vectorized native
-code; binary/list columns are buffer + offsets).
+A record dict (built by ``numpy_ingest.to_ome_arrow``) becomes one
+element of the ``ome_arrow`` struct column.  The PLANES subtree is
+built from buffers — pixels as ONE concatenated int32 buffer plus
+offsets, plane/struct wrappers via ``pa.StructArray.from_arrays`` — so
+no pixel is ever boxed into a Python int, and ``mapInArrow`` decodes
+hand the batch straight to Spark with no pandas detour.
 
-Only the PLANES subtree goes through the buffer path; the per-image
-metadata fields (a handful of scalars + the channels list) convert via
-``pa.array``'s python-object path, which is what the pandas serializer
-did — same values, same nullability, negligible cost at ~10 fields per
-image."""
+The per-image metadata fields (a handful of scalars + the channels
+list) convert via ``pa.array``'s python-object path — negligible at
+~10 fields per image."""
 
 from __future__ import annotations
 
@@ -26,7 +19,7 @@ import numpy as np
 import pyarrow as pa
 
 
-def ome_arrow_field_type(spark_session=None) -> pa.DataType:
+def ome_arrow_field_type() -> pa.DataType:
     """Arrow type Spark expects for the ``ome_arrow`` struct column in
     a ``mapInArrow`` exchange — derived from the declared Spark schema
     with the same helper Spark's serializer uses, so field order,
@@ -44,8 +37,7 @@ def records_to_arrow_batch(
     """One decoded-image-records list → a single-column RecordBatch of
     ``ome_type`` (the ``ome_arrow_struct()`` Arrow twin).  ``pixels``
     entries may be numpy integer arrays or sequences; they are
-    flattened into one int32 values buffer (same dtype the old
-    ``_record_to_row`` normalization produced)."""
+    flattened into one int32 values buffer."""
     n = len(records)
     struct_t = ome_type
     plane_list_t = struct_t.field("planes").type

@@ -8,10 +8,11 @@ axes become singletons and axes are permuted to canonical TCZYX
 planes emit t-major (ingest.py:256-263); dimension_order records
 "XYZCT" iff Z>1 else "XYCT" (ingest.py:267).
 
-Record construction is driver-side (one image is one row); at scale,
-feed ``records`` from any per-partition decode loop and use
-``spark_table_from_records`` or the binaryFile+UDF path in
-sources/tiff.py.
+Every record in the package is built by :func:`to_ome_arrow` (one image
+is one row) and becomes Arrow through
+``arrow_records.records_to_arrow_batch``: locally via
+``spark_table_from_records``, on executors inside the ``mapInArrow``
+decodes of sources/tiff.py, zarr.py and stack_pattern.py.
 """
 
 from __future__ import annotations
@@ -22,9 +23,23 @@ from typing import Any, Sequence
 import numpy as np
 
 from ome_arrow_spark.meta import OME_ARROW_TYPE, OME_ARROW_VERSION, dimension_order
-from ome_arrow_spark.synth import default_channel
 
 CANONICAL = "TCZYX"
+
+#: Default white channel synthesized when none specified
+#: (reference ingest.py:83-93).
+WHITE_RGBA = 4294967295
+
+
+def default_channel(i: int) -> dict:
+    return {
+        "id": f"ch-{i}",
+        "name": f"C{i}",
+        "emission_um": 0.0,
+        "excitation_um": 0.0,
+        "illumination": "Unknown",
+        "color_rgba": WHITE_RGBA,
+    }
 
 
 def normalize_axes(arr: np.ndarray, dim_order: str = "TCZYX") -> np.ndarray:
@@ -67,49 +82,38 @@ def from_numpy(
     channel_names: Sequence[str] | None = None,
     acquisition_datetime: datetime | None = None,
 ) -> dict[str, Any]:
-    """ndarray → OME-Arrow record dict (S2)."""
+    """ndarray → OME-Arrow record dict (S2), built by :func:`to_ome_arrow`."""
     vol = normalize_axes(np.asarray(arr), dim_order)
     vol = clamp_uint16(vol) if clamp_to_uint16 else vol.astype(np.int32)
     t, c, z, y, x = vol.shape
-    channels = []
-    for i in range(c):
-        ch = default_channel(i)
-        if channel_names is not None and i < len(channel_names):
-            ch["name"] = str(channel_names[i])
-        channels.append(ch)
+    channels = [default_channel(i) for i in range(c)]
+    if channel_names is not None:
+        for ch, n in zip(channels, channel_names):
+            ch["name"] = str(n)
     planes = [
         {"z": zi, "t": ti, "c": ci, "pixels": vol[ti, ci, zi].ravel()}
         for ti in range(t)
         for ci in range(c)
         for zi in range(z)
     ]
-    if acquisition_datetime is None:
-        acquisition_datetime = datetime.now(timezone.utc).replace(tzinfo=None)
-    return {
-        "type": OME_ARROW_TYPE,
-        "version": OME_ARROW_VERSION,
-        "id": str(image_id),
-        "name": str(name if name is not None else image_id),
-        "acquisition_datetime": acquisition_datetime,
-        "pixels_meta": {
-            "dimension_order": dimension_order(z),
-            "type": "uint16",
-            "size_x": x,
-            "size_y": y,
-            "size_z": z,
-            "size_c": c,
-            "size_t": t,
-            "physical_size_x": float(physical_size_x),
-            "physical_size_y": float(physical_size_y),
-            "physical_size_z": float(physical_size_z),
-            "physical_size_x_unit": physical_size_unit,
-            "physical_size_y_unit": physical_size_unit,
-            "physical_size_z_unit": physical_size_unit,
-            "channels": channels,
-        },
-        "planes": planes,
-        "masks": None,
-    }
+    return to_ome_arrow(
+        image_id=image_id,
+        name=name,
+        size_x=x,
+        size_y=y,
+        size_z=z,
+        size_c=c,
+        size_t=t,
+        channels=channels,
+        planes=planes,
+        acquisition_datetime=acquisition_datetime,
+        physical_size_x=float(physical_size_x),
+        physical_size_y=float(physical_size_y),
+        physical_size_z=float(physical_size_z),
+        physical_size_x_unit=physical_size_unit,
+        physical_size_y_unit=physical_size_unit,
+        physical_size_z_unit=physical_size_unit,
+    )
 
 
 def to_ome_arrow(

@@ -291,19 +291,15 @@ def read_ome_record(
 
 def spark_table_from_records(spark: SparkSession, records: list[dict]) -> DataFrame:
     """Records → canonical Spark table (signed widenings applied)."""
-    from ome_arrow_spark.synth import arrow_ome_struct
+    from ome_arrow_spark.sources.arrow_records import (
+        ome_arrow_field_type,
+        records_to_arrow_batch,
+    )
 
-    cleaned = []
-    for r in records:
-        r = dict(r)
-        r["masks"] = None
-        cleaned.append(r)
-    arr = pa.array(cleaned, type=arrow_ome_struct())
-    tbl = pa.table({DEFAULT_COLUMN: arr})
-    try:
-        return spark.createDataFrame(tbl)
-    except Exception:
-        return spark.createDataFrame(tbl.to_pylist())
+    batch = records_to_arrow_batch(
+        [{**r, "masks": None} for r in records], DEFAULT_COLUMN, ome_arrow_field_type()
+    )
+    return spark.createDataFrame(pa.Table.from_batches([batch]))
 
 
 def exists(path: str) -> bool:

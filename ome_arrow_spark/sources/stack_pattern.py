@@ -23,15 +23,19 @@ Grammar (matched behavior, fresh implementation):
   (ingest.py:646-655).
 
 Distributed shape: pattern expansion is a driver-side compile against
-one directory listing (O(#choices) + O(#files), no file I/O); the
-pixel work — decode, shape checks, zero-fill, assembly — runs on
-executors: binaryFile scan of exactly the matched files, a
-(path→t,c,z) manifest joined in, mapInPandas decode to plane rows,
-dims-frame LEFT JOIN zero-fill, and a sorted collect into one record
-row. Note one deliberate divergence: when an in-file Z-stack bumps
-size_z, we zero-fill the FULL (t,c,z) cross product of the final
-sizes; the reference only fills combos visited before the bump
-(a loop-ordering artifact).
+one directory listing (O(#choices) + O(#files), no file I/O). A
+binaryFile scan of exactly the matched files, joined to a
+(path→t,c,z) manifest, decodes on the executors in one ``mapInArrow``
+into one row per file (its planes as an Arrow int32 buffer). One
+assembly task then checks that all files share a plane shape,
+zero-fills a dense (T,C,Z,Y,X)
+volume (ingest.py:584-589) and emits the record through
+``from_numpy`` + ``records_to_arrow_batch``, like every other ingest
+path. Errors in the files (multi-page T/C, shape mismatch) surface when
+the result is evaluated. Note one deliberate divergence: when an
+in-file Z-stack bumps size_z, we zero-fill the FULL (t,c,z) cross
+product of the final sizes; the reference only fills combos visited
+before the bump (a loop-ordering artifact).
 """
 
 from __future__ import annotations
@@ -39,15 +43,17 @@ from __future__ import annotations
 import itertools
 import os
 import re
+from datetime import datetime
 from typing import Any, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ome_arrow_spark.meta import OME_ARROW_TYPE, OME_ARROW_VERSION, ome_arrow_struct
+from ome_arrow_spark.meta import ome_images_schema
+from ome_arrow_spark.sources.numpy_ingest import from_numpy
 
 DIM_TOKENS = {
     "C": {"c", "ch", "w", "wavelength"},
@@ -189,6 +195,7 @@ def from_stack_pattern(
         raise ValueError(
             f"channel_names length {len(channel_names)} != size_c {size_c}"
         )
+    channel_names = channel_names or literal_channels
 
     manifest = spark.createDataFrame(
         [Row(path=os.path.abspath(p), t=k[0], c=k[1], z=k[2]) for k, p in matched.items()]
@@ -201,140 +208,74 @@ def from_stack_pattern(
     files = bin_df.join(manifest, "path")
 
     clamp = bool(clamp_to_uint16)
+    img_id = image_id or os.path.splitext(os.path.basename(pattern_path))[0]
+    display_name = name or pattern_path
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    # one row per file: its (t, c, z) slot, its (Z, Y, X) shape and
+    # its planes as one int32 list (an Arrow buffer, never boxed)
+    file_schema = pa.schema(
+        [(n, pa.int32()) for n in ("t", "c", "z")]
+        + [("shape", pa.list_(pa.int32())), ("pixels", pa.list_(pa.int32()))]
+    )
+
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ome_arrow_spark.sources.tiff import decode_volume_bytes
 
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for path, blob, t, c, z in zip(
-                pdf["path"], pdf["content"], pdf["t"], pdf["c"], pdf["z"]
-            ):
-                vol, _, _, _ = decode_volume_bytes(path, bytes(blob))
-                tn, cn, zn, yy, xx = vol.shape
+        for batch in batches:
+            cols = batch.to_pydict()
+            shapes, pixels = [], []
+            for path, blob in zip(cols.pop("path"), cols.pop("content")):
+                vol, _, _, _ = decode_volume_bytes(path, blob)
+                tn, cn = vol.shape[:2]
                 if tn > 1 or cn > 1:
                     raise ValueError(
                         f"{os.path.basename(path)} contains multiple pages across "
                         f"T/C={tn},{cn}; only Z>1 with T=C=1 is supported inside "
                         "one file. Express T/C via the filename pattern."
                     )
-                v = np.clip(vol, 0, 65535).astype(np.int32) if clamp else vol.astype(np.int32)
-                for zl in range(zn):
-                    rows.append(
-                        {
-                            "t": int(t),
-                            "c": int(c),
-                            "z": int(z) + zl,
-                            "size_y": yy,
-                            "size_x": xx,
-                            "pixels": v[0, 0, zl].ravel().tolist(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["t", "c", "z", "size_y", "size_x", "pixels"]
+                shapes.append(list(vol.shape[2:]))
+                v = np.clip(vol, 0, 65535) if clamp else vol
+                pixels.append(v.astype(np.int32).ravel())
+            yield pa.RecordBatch.from_pydict(
+                {**cols, "shape": shapes, "pixels": pixels}, schema=file_schema
             )
 
-    plane_schema = (
-        "t int, c int, z int, size_y int, size_x int, pixels array<int>"
-    )
-    planes = files.mapInPandas(decode, schema=plane_schema).cache()
-
-    # shape probe + consistency + final z size — one aggregate pass
-    probe = planes.agg(
-        F.countDistinct("size_y", "size_x").alias("n_shapes"),
-        F.first("size_y").alias("size_y"),
-        F.first("size_x").alias("size_x"),
-        (F.max("z") + 1).alias("size_z_data"),
-    ).first()
-    if probe["n_shapes"] != 1:
-        planes.unpersist()
-        raise ValueError("Shape mismatch across stack files")
-    size_y, size_x = probe["size_y"], probe["size_x"]
-    size_z = max(size_z0, probe["size_z_data"])
-
-    if not channel_names:
-        channel_names = literal_channels or [f"C{i}" for i in range(size_c)]
-
-    # dense dims frame LEFT JOIN → zero-fill (ingest.py:584-589)
-    dims = (
-        spark.range(size_t)
-        .withColumnRenamed("id", "t")
-        .crossJoin(spark.range(size_c).withColumnRenamed("id", "c"))
-        .crossJoin(spark.range(size_z).withColumnRenamed("id", "z"))
-        .select(
-            F.col("t").cast("int"), F.col("c").cast("int"), F.col("z").cast("int")
+    def assemble(tbl: pa.Table) -> pa.Table:
+        from ome_arrow_spark.sources.arrow_records import (
+            ome_arrow_field_type,
+            records_to_arrow_batch,
         )
-    )
-    dense = dims.join(planes.select("t", "c", "z", "pixels"), ["t", "c", "z"], "left").select(
-        "t",
-        "c",
-        "z",
-        F.coalesce(F.col("pixels"), F.array_repeat(F.lit(0), size_x * size_y)).alias(
-            "pixels"
-        ),
-    )
 
-    # single-record assembly: sorted struct collect (t-major like
-    # ingest.py:581-583), then canonical field order — built with lit()
-    # columns so arbitrary ids/names (regex chars, quotes) are safe
-    from datetime import datetime
-
-    stem = os.path.splitext(os.path.basename(pattern_path))[0]
-    img_id = image_id or stem
-    display_name = name or pattern_path
-    dim_order = "XYZCT" if size_z > 1 else "XYCT"
-
-    fl = lambda v: F.lit(float(v)).cast("float")  # noqa: E731
-    channels_col = F.array(
-        *[
-            F.struct(
-                F.lit(f"ch-{i}").alias("id"),
-                F.lit(str(n)).alias("name"),
-                fl(0.0).alias("emission_um"),
-                fl(0.0).alias("excitation_um"),
-                F.lit("Unknown").alias("illumination"),
-                F.lit(4294967295).alias("color_rgba"),
+        shapes = tbl["shape"].to_pylist()
+        if len({tuple(s[1:]) for s in shapes}) != 1:
+            raise ValueError("Shape mismatch across stack files")
+        _, yy, xx = shapes[0]
+        t, c, z = (tbl[n].to_pylist() for n in ("t", "c", "z"))
+        size_z = max(size_z0, max(zi + s[0] for zi, s in zip(z, shapes)))
+        vol = np.zeros((size_t, size_c, size_z, yy, xx), np.int32)
+        pixels = tbl["pixels"].combine_chunks()
+        # (t, c, z) order: where an in-file Z-stack runs into the next
+        # file's slot, the later file wins on every run
+        for i in np.lexsort((z, c, t)):
+            depth = shapes[i][0]
+            vol[t[i], c[i], z[i] : z[i] + depth] = (
+                pixels[int(i)].values.to_numpy().reshape(depth, yy, xx)
             )
-            for i, n in enumerate(channel_names)
-        ]
-    )
-    pm_col = F.struct(
-        F.lit(dim_order).alias("dimension_order"),
-        F.lit("uint16").alias("type"),
-        F.lit(size_x).cast("int").alias("size_x"),
-        F.lit(size_y).cast("int").alias("size_y"),
-        F.lit(size_z).cast("int").alias("size_z"),
-        F.lit(size_c).cast("smallint").alias("size_c"),
-        F.lit(size_t).cast("int").alias("size_t"),
-        fl(1.0).alias("physical_size_x"),
-        fl(1.0).alias("physical_size_y"),
-        fl(1.0).alias("physical_size_z"),
-        F.lit("µm").alias("physical_size_x_unit"),
-        F.lit("µm").alias("physical_size_y_unit"),
-        F.lit("µm").alias("physical_size_z_unit"),
-        channels_col.alias("channels"),
-    )
-    planes_col = F.transform(
-        F.col("planes_tcz"),
-        lambda p: F.struct(
-            p["z"].alias("z"),
-            p["t"].alias("t"),
-            p["c"].cast("smallint").alias("c"),
-            p["pixels"].alias("pixels"),
-        ),
-    )
-    ome_col = F.struct(
-        F.lit(OME_ARROW_TYPE).alias("type"),
-        F.lit(OME_ARROW_VERSION).alias("version"),
-        F.lit(img_id).alias("id"),
-        F.lit(display_name).alias("name"),
-        F.lit(datetime(2025, 1, 1)).alias("acquisition_datetime"),
-        pm_col.alias("pixels_meta"),
-        planes_col.alias("planes"),
-        F.lit(None).cast("string").alias("masks"),
-    )
-    return dense.agg(
-        F.sort_array(F.collect_list(F.struct("t", "c", "z", "pixels"))).alias(
-            "planes_tcz"
+        rec = from_numpy(
+            vol,
+            image_id=img_id,
+            name=display_name,
+            clamp_to_uint16=False,
+            channel_names=channel_names,
+            acquisition_datetime=datetime(2025, 1, 1),
         )
-    ).select(ome_col.alias(column))
+        return pa.Table.from_batches(
+            [records_to_arrow_batch([rec], column, ome_arrow_field_type())]
+        )
+
+    files_df = files.mapInArrow(
+        decode, "t int, c int, z int, shape array<int>, pixels array<int>"
+    )
+    return files_df.groupBy(F.lit(img_id)).applyInArrow(
+        assemble, ome_images_schema(column)
+    )

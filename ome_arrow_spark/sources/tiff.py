@@ -2,8 +2,8 @@
 ingest.py:293-400) and the matching sink (reference K3 ``to_ome_tiff``
 export.py:116-228).
 
-Canonical distributed shape: ``binaryFile`` scan → Arrow-batched
-``mapInPandas`` decode → one OME struct row per file. One task per
+Canonical distributed shape: ``binaryFile`` scan → ``mapInArrow``
+decode → one OME struct row per file. One task per
 image; a 1000-executor cluster decodes 1000 TIFFs concurrently and the
 scan parallelism comes from file listing, not file splitting (TIFFs
 aren't splittable).
@@ -25,14 +25,14 @@ import io
 import json
 import os
 from datetime import datetime
-from typing import Any, Iterator
+from typing import Any
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ome_arrow_spark.meta import ome_arrow_struct
+from ome_arrow_spark.meta import ome_images_schema
 from ome_arrow_spark.sources.numpy_ingest import from_numpy
 
 try:  # pragma: no cover - not present in this container
@@ -207,7 +207,7 @@ def from_tiff_dir(
     column: str = "ome_arrow",
     on_error: str = "fail",
 ) -> DataFrame:
-    """binaryFile scan + mapInPandas decode → images table.
+    """binaryFile scan + mapInArrow decode → images table.
 
     Scale: ``binaryFile`` gives (path, length, content) rows; Spark
     packs small files per task (maxPartitionBytes) and Arrow ships each
@@ -227,21 +227,13 @@ def from_tiff_dir(
     )
     return bin_df.mapInArrow(
         _decode_arrow_fn(column, on_error),
-        schema=_decode_out_schema(column),
+        schema=ome_images_schema(column),
     )
 
 
-def _decode_out_schema(column: str):
-    from pyspark.sql.types import StructField, StructType
-
-    return StructType([StructField(column, ome_arrow_struct())])
-
-
 def _decode_arrow_fn(column: str, on_error: str):
-    """mapInArrow decode: records are assembled into Arrow arrays
-    DIRECTLY (sources/arrow_records.py) — the pandas→Arrow struct
-    conversion the old mapInPandas path paid per image cost 2.4× the
-    FTIF decode itself (3.59 vs 1.48 ms/img at 512², r14 profile)."""
+    """mapInArrow decode: each batch's records become one Arrow batch
+    through ``arrow_records.records_to_arrow_batch``."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be fail/skip, got {on_error!r}")
     from ome_arrow_spark.sources.arrow_records import (
@@ -289,7 +281,7 @@ def from_tiff_stream(
     so restarts neither drop nor double-ingest images.
     ``max_files_per_trigger`` bounds micro-batch size (decode memory ∝
     files per batch, not directory size)."""
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import StructType
 
     src_schema = StructType.fromDDL(
         "path string, modificationTime timestamp, length long, content binary"
@@ -304,7 +296,7 @@ def from_tiff_stream(
     bin_df = reader.load(path).select("path", "content")
     return bin_df.mapInArrow(
         _decode_arrow_fn(column, on_error),
-        schema=_decode_out_schema(column),
+        schema=ome_images_schema(column),
     )
 
 
@@ -318,19 +310,6 @@ def _arrow_cell_to_record(cell: Any) -> dict[str, Any]:
     rec["pixels_meta"] = dict(rec["pixels_meta"])
     ch = rec["pixels_meta"].get("channels")
     rec["pixels_meta"]["channels"] = list(ch) if ch is not None else None
-    return rec
-
-
-def _record_to_row(rec: dict[str, Any]) -> dict[str, Any]:
-    """Arrow-friendly normalization: pixels stay numpy int32 arrays —
-    pyarrow converts them zero-boxing, where ``.tolist()`` would
-    materialize 10⁵–10⁷ Python ints per image (measured ~2× ingest
-    throughput difference at 512²)."""
-    rec = dict(rec)
-    rec["planes"] = [
-        {**p, "pixels": np.ascontiguousarray(p["pixels"], dtype=np.int32)}
-        for p in rec["planes"]
-    ]
     return rec
 
 

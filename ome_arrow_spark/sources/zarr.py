@@ -28,14 +28,13 @@ from __future__ import annotations
 import json
 import os
 from datetime import datetime
-from typing import Any, Iterator
+from typing import Any
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ome_arrow_spark.meta import ome_arrow_struct
+from ome_arrow_spark.meta import ome_images_schema
 from ome_arrow_spark.sources.numpy_ingest import from_numpy
 
 try:  # pragma: no cover
@@ -177,16 +176,13 @@ def from_zarr_manifest(
     """Manifest-parallel ingest: one store per task row. Contrast S3's
     binaryFile path — directories can't stream as single blobs, so the
     manifest IS the scan."""
-    from pyspark.sql.types import StructField, StructType
-
+    schema = ome_images_schema(column)
+    if not store_paths:
+        return spark.createDataFrame([], schema)
     manifest = spark.createDataFrame(
         [(os.path.abspath(p),) for p in store_paths], "store_path string"
     ).repartition(min(len(store_paths), 64))
-    schema = StructType([StructField(column, ome_arrow_struct())])
 
-    # direct-Arrow batch assembly (r14, sources/arrow_records.py): the
-    # old path additionally paid a per-plane ``.tolist()`` — 10⁵ Python
-    # ints per plane — before the pandas→Arrow struct walk
     from ome_arrow_spark.sources.arrow_records import (
         ome_arrow_field_type,
         records_to_arrow_batch,

@@ -2022,8 +2022,8 @@ def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Time-series gap fill: dense (day × event_type) grid LEFT JOIN sparse
 # daily counts, zeros coalesced in, plus running cumulative totals —
-# the same dims-frame/zero-fill pattern the OME ingest uses for missing
-# planes (SURVEY §2B), applied to the relational surface.
+# the relational form of the zero-fill stack ingest applies to missing
+# planes (SURVEY §2B).
 # Scale: the calendar is a one-row aggregate exploded then broadcast
 # against the distinct type set; daily counts shuffle once on
 # (day, type); the window runs per type over |days| rows.

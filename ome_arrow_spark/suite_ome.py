@@ -144,8 +144,8 @@ def ome_slice_conftest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Pure-SQL plane construction: Spark builds the dense plane set with
 # sequence/transform higher-order functions (no Python data at all) and
-# aggregates; DuckDB re-derives with generate_series. Validates the
-# zero-fill/dims-frame machinery used by ingest (SURVEY.md §2A S6).
+# aggregates; DuckDB re-derives with generate_series. The dense plane
+# grid is the one stack ingest zero-fills (SURVEY.md §2A S6).
 @register(
     "ome_planes_sql",
     """
@@ -183,7 +183,8 @@ def ome_planes_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Full distributed stack ingest in the driver gate: write a small FTIF
 # stack to a temp dir, ingest via the pattern engine (binaryFile +
-# mapInPandas decode + zero-fill + assembly), aggregate per-plane sums.
+# mapInArrow decode + one zero-fill/assembly task), aggregate
+# per-plane sums.
 # Plane (c, z) holds constant value c*100+z on a 16×16 grid, with
 # (c=1, z=2) missing → zero-filled; the oracle recomputes arithmetic.
 @register(
@@ -226,7 +227,7 @@ def ome_stack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (magic 43, 8-byte offsets) LZW variant, new-style JPEG
 # (Compression=7) strips, CCITT Group 4 bilevel fax, and Zstd
 # (Compression=50000, the modern tifffile default) + Predictor-2 — and
-# ingest via the distributed binaryFile+mapInPandas path. Pixels follow a formula
+# ingest via the distributed binaryFile+mapInArrow path. Pixels follow a formula
 # the DuckDB oracle recomputes arithmetically, so a single wrong byte
 # anywhere in encode→decode breaks the hash. (Reference reads these
 # compressed classes via BioIO/tifffile, ingest.py:321-330; writes them
@@ -800,16 +801,15 @@ def ome_bg_subtract(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t*31 + c*17 + z*7; this fixture remaps c→c*100 via a custom
     image to make per-channel bases distinct."""
     import numpy as np
-    import pyarrow as pa
 
-    from ome_arrow_spark.synth import arrow_ome_struct, golden_record
+    from ome_arrow_spark.sources.ome_parquet import spark_table_from_records
+    from ome_arrow_spark.synth import golden_record
 
     rec = golden_record("bg", 1, 2, 22, 128, 128)
     for p in rec["planes"]:
         base = p["c"] * 100 + p["z"] * 7
         p["pixels"] = (base + np.arange(128 * 128, dtype=np.int64)).astype(np.int32)
-    tbl = pa.table({"ome_arrow": pa.array([rec], type=arrow_ome_struct())})
-    imgs = spark.createDataFrame(tbl)
+    imgs = spark_table_from_records(spark, [rec])
 
     from ome_arrow_spark.operators.views import planes_df
 

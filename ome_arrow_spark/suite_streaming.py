@@ -238,7 +238,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_ome_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous microscopy ingest, end to end: golden OME-TIFF files
     land in a watched directory → streaming binaryFile source +
-    mapInPandas decode (sources/tiff.from_tiff_stream, one file per
+    mapInArrow decode (sources/tiff.from_tiff_stream, one file per
     micro-batch) → foreachBatch MERGEs each batch into the
     transaction-log images table (Bloom-pruned by image_id) → the
     driver aggregates the committed snapshot. The oracle re-derives

@@ -7,7 +7,8 @@ environment; their shapes and metadata are fully specified in
 equivalents: ``pixel(t,c,z,y,x) = (t*31 + c*17 + z*7 + y*size_x + x)
 % 65536``.
 
-Construction goes through pyarrow (vectorized numpy → Arrow, then
+Records come from ``numpy_ingest.to_ome_arrow`` and become Arrow through
+``arrow_records.records_to_arrow_batch`` (numpy pixel buffers, then
 ``spark.createDataFrame`` on the Arrow table) — building 16M pixel
 values as Python lists would dominate test runtime.
 """
@@ -19,7 +20,15 @@ from datetime import datetime
 import numpy as np
 import pyarrow as pa
 
-from ome_arrow_spark.meta import OME_ARROW_TYPE, OME_ARROW_VERSION, dimension_order
+from ome_arrow_spark.meta import DEFAULT_COLUMN, OME_ARROW_TYPE
+from ome_arrow_spark.sources.arrow_records import (
+    ome_arrow_field_type,
+    records_to_arrow_batch,
+)
+from ome_arrow_spark.sources.numpy_ingest import (  # noqa: F401 (re-exported)
+    default_channel,
+    to_ome_arrow,
+)
 
 #: (image_id, T, C, Z, Y, X) — one per golden fixture shape
 #: (reference tests/test_core.py:14-248; FIXTURES.md §B1).
@@ -40,10 +49,6 @@ GOLDEN_SHAPES: list[tuple[str, int, int, int, int, int]] = [
     ("examplehuman-d2", 1, 1, 1, 512, 512),
 ]
 
-#: Default white channel synthesized when none specified
-#: (reference ingest.py:83-93).
-WHITE_RGBA = 4294967295
-
 _SYNTH_DT = datetime(2025, 1, 1, 0, 0, 0)
 
 
@@ -53,61 +58,34 @@ def pixel_plane(t: int, c: int, z: int, size_y: int, size_x: int) -> np.ndarray:
     return ((base + np.arange(size_y * size_x, dtype=np.int64)) % 65536).astype(np.int32)
 
 
-def default_channel(i: int) -> dict:
-    return {
-        "id": f"ch-{i}",
-        "name": f"C{i}",
-        "emission_um": 0.0,
-        "excitation_um": 0.0,
-        "illumination": "Unknown",
-        "color_rgba": WHITE_RGBA,
-    }
-
-
 def golden_record(
     image_id: str, t: int, c: int, z: int, y: int, x: int, with_pixels: bool = True
 ) -> dict:
     """One OME-Arrow record dict for a golden shape; planes dense over
     the (t,c,z) cross product in t-major order (reference
     ingest.py:258-263)."""
-    planes = []
-    for ti in range(t):
-        for ci in range(c):
-            for zi in range(z):
-                planes.append(
-                    {
-                        "z": zi,
-                        "t": ti,
-                        "c": ci,
-                        "pixels": pixel_plane(ti, ci, zi, y, x) if with_pixels
-                        else np.zeros(0, dtype=np.int32),
-                    }
-                )
-    return {
-        "type": OME_ARROW_TYPE,
-        "version": OME_ARROW_VERSION,
-        "id": image_id,
-        "name": image_id,
-        "acquisition_datetime": _SYNTH_DT,
-        "pixels_meta": {
-            "dimension_order": dimension_order(z),
-            "type": "uint16",
-            "size_x": x,
-            "size_y": y,
-            "size_z": z,
-            "size_c": c,
-            "size_t": t,
-            "physical_size_x": 1.0,
-            "physical_size_y": 1.0,
-            "physical_size_z": 1.0,
-            "physical_size_x_unit": "µm",
-            "physical_size_y_unit": "µm",
-            "physical_size_z_unit": "µm",
-            "channels": [default_channel(i) for i in range(c)],
-        },
-        "planes": planes,
-        "masks": None,
-    }
+    planes = [
+        {
+            "z": zi,
+            "t": ti,
+            "c": ci,
+            "pixels": pixel_plane(ti, ci, zi, y, x) if with_pixels
+            else np.zeros(0, dtype=np.int32),
+        }
+        for ti in range(t)
+        for ci in range(c)
+        for zi in range(z)
+    ]
+    return to_ome_arrow(
+        image_id=image_id,
+        size_x=x,
+        size_y=y,
+        size_z=z,
+        size_c=c,
+        size_t=t,
+        planes=planes,
+        acquisition_datetime=_SYNTH_DT,
+    )
 
 
 def conftest_record() -> dict:
@@ -165,61 +143,14 @@ def conftest_record() -> dict:
 
 def arrow_ome_struct() -> pa.StructType:
     """Arrow twin of meta.ome_arrow_struct() (signed widenings applied)."""
-    channel = pa.struct(
-        [
-            ("id", pa.string()),
-            ("name", pa.string()),
-            ("emission_um", pa.float32()),
-            ("excitation_um", pa.float32()),
-            ("illumination", pa.string()),
-            ("color_rgba", pa.int64()),
-        ]
-    )
-    pixels_meta = pa.struct(
-        [
-            ("dimension_order", pa.string()),
-            ("type", pa.string()),
-            ("size_x", pa.int32()),
-            ("size_y", pa.int32()),
-            ("size_z", pa.int32()),
-            ("size_c", pa.int16()),
-            ("size_t", pa.int32()),
-            ("physical_size_x", pa.float32()),
-            ("physical_size_y", pa.float32()),
-            ("physical_size_z", pa.float32()),
-            ("physical_size_x_unit", pa.string()),
-            ("physical_size_y_unit", pa.string()),
-            ("physical_size_z_unit", pa.string()),
-            ("channels", pa.list_(channel)),
-        ]
-    )
-    plane = pa.struct(
-        [
-            ("z", pa.int32()),
-            ("t", pa.int32()),
-            ("c", pa.int16()),
-            ("pixels", pa.list_(pa.int32())),
-        ]
-    )
-    return pa.struct(
-        [
-            ("type", pa.string()),
-            ("version", pa.string()),
-            ("id", pa.string()),
-            ("name", pa.string()),
-            ("acquisition_datetime", pa.timestamp("us")),
-            ("pixels_meta", pixels_meta),
-            ("planes", pa.list_(plane)),
-            ("masks", pa.string()),
-        ]
-    )
+    return ome_arrow_field_type()
 
 
 def golden_arrow_table(
     ids: list[str] | None = None,
     with_pixels: bool = True,
     include_conftest: bool = True,
-    column_name: str = "ome_arrow",
+    column_name: str = DEFAULT_COLUMN,
 ) -> pa.Table:
     records = [
         golden_record(i, t, c, z, y, x, with_pixels)
@@ -228,14 +159,11 @@ def golden_arrow_table(
     ]
     if include_conftest and (ids is None or "img-0001" in ids):
         records.append(conftest_record())
-    arr = pa.array(records, type=arrow_ome_struct())
-    return pa.table({column_name: arr})
+    return pa.Table.from_batches(
+        [records_to_arrow_batch(records, column_name, ome_arrow_field_type())]
+    )
 
 
 def golden_images_df(spark, ids=None, with_pixels=True, include_conftest=True):
     """Golden image table as a Spark DataFrame (one struct row per image)."""
-    tbl = golden_arrow_table(ids, with_pixels, include_conftest)
-    try:
-        return spark.createDataFrame(tbl)  # Spark 4: native Arrow-table path
-    except Exception:
-        return spark.createDataFrame(tbl.to_pylist())
+    return spark.createDataFrame(golden_arrow_table(ids, with_pixels, include_conftest))

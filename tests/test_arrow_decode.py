@@ -1,13 +1,13 @@
-"""Focused tests for the r14 direct-Arrow decode assembly
+"""Focused tests for the direct-Arrow decode assembly
 (sources/arrow_records.py): the mapInArrow ingest paths must produce
-EXACTLY the rows the old pandas-object conversion produced."""
+EXACTLY the rows Spark's own python-object conversion of the same
+records produces."""
 
 import os
 import tempfile
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from ome_arrow_spark.meta import ome_arrow_struct
 
@@ -37,29 +37,37 @@ def tiff_dir(spark):
     return d
 
 
+def _reference_rows(spark, recs):
+    """Reference conversion: build the DataFrame from record dicts
+    through createDataFrame (Spark's own python→Catalyst conversion)."""
+    from pyspark.sql import types as T
+
+    # createDataFrame's python verifier rejects numpy arrays; the
+    # VALUES are what is under test, so list-ify for the reference
+    recs = [
+        {
+            **r,
+            "planes": [
+                {**pl, "pixels": [int(x) for x in pl["pixels"]]} for pl in r["planes"]
+            ],
+        }
+        for r in recs
+    ]
+    schema = T.StructType([T.StructField("ome_arrow", ome_arrow_struct())])
+    return spark.createDataFrame([(r,) for r in recs], schema).collect()
+
+
 def _expected_rows(spark, d, glob):
-    """Reference conversion: decode driver-side, build the DataFrame
-    through createDataFrame (Spark's own python→Catalyst conversion) —
-    the semantics the old pandas-object mapInPandas path had."""
+    """Decode in-process, then the reference conversion."""
     import glob as g
 
-    from ome_arrow_spark.sources.tiff import _record_to_row, decode_image_bytes
+    from ome_arrow_spark.sources.tiff import decode_image_bytes
 
     recs = []
     for p in sorted(g.glob(os.path.join(d, glob))):
         with open(p, "rb") as f:
-            rec = _record_to_row(decode_image_bytes(p, f.read()))
-        # createDataFrame's python verifier rejects numpy arrays; the
-        # VALUES are what is under test, so list-ify for the reference
-        rec["planes"] = [
-            {**pl, "pixels": [int(x) for x in pl["pixels"]]}
-            for pl in rec["planes"]
-        ]
-        recs.append(rec)
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField("ome_arrow", ome_arrow_struct())])
-    return spark.createDataFrame([(r,) for r in recs], schema).collect()
+            recs.append(decode_image_bytes(p, f.read()))
+    return _reference_rows(spark, recs)
 
 
 def _key(rows):
@@ -148,3 +156,47 @@ def test_zarr_decode_matches_reference_conversion(spark):
     )
     assert list(px[:5]) == [0, 1, 2, 3, 4]
     assert len(px) == side * side
+
+
+def test_zarr_empty_manifest_yields_typed_empty(spark):
+    from ome_arrow_spark.meta import ome_images_schema
+    from ome_arrow_spark.sources.zarr import from_zarr_manifest
+
+    df = from_zarr_manifest(spark, [])
+    assert df.count() == 0
+    assert df.schema == ome_images_schema()
+
+
+def test_stack_pattern_matches_reference_conversion(spark, tmp_path):
+    """Full-row parity of stack ingest with a numpy-assembled volume
+    through ``from_numpy``: a missing file (zero plane), inputs above
+    65535 (clamped), literal channel names, and an in-file Z-stack that
+    bumps size_z (the full (t,c,z) cross product zero-fills)."""
+    from datetime import datetime
+
+    from ome_arrow_spark.sources.numpy_ingest import from_numpy
+    from ome_arrow_spark.sources.stack_pattern import from_stack_pattern
+    from ome_arrow_spark.sources.tiff import encode_ftif
+
+    rng = np.random.default_rng(11)
+    y, x = 6, 7
+    want = np.zeros((1, 2, 4, y, x), np.int64)
+    files = {("DAPI", 0): 1, ("DAPI", 2): 1, ("GFP", 0): 1, ("GFP", 1): 1, ("GFP", 2): 2}
+    for (ch, z), depth in files.items():
+        vol = rng.integers(0, 70000, size=(1, 1, depth, y, x))
+        (tmp_path / f"st_w{ch}_z{z}.tif").write_bytes(encode_ftif(vol, image_id="f"))
+        want[0, ["DAPI", "GFP"].index(ch), z : z + depth] = np.clip(vol[0, 0], 0, 65535)
+
+    pattern = str(tmp_path / "st_w<DAPI,GFP>_z<0-2>.tif")
+    got = from_stack_pattern(spark, pattern, image_id="st").collect()
+    ref = _reference_rows(
+        spark,
+        [
+            from_numpy(
+                want, image_id="st", name=pattern, channel_names=["DAPI", "GFP"],
+                acquisition_datetime=datetime(2025, 1, 1),
+            )
+        ],
+    )
+    assert want.max() == 65535
+    assert _key(got) == _key(ref)

@@ -14,8 +14,8 @@ in one task — the same concentration any per-image writer has.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +23,21 @@ from ome_arrow_spark import synth
 from ome_arrow_spark.operators.views import planes_df
 
 T_, C_, Z_, Y_, X_ = 3, 2, 8, 2048, 2048
+
+
+def _scrub(spark):
+    """Unpersist every cached relation and checkpoint, drop Python-side
+    references so the ContextCleaner can reap finished checkpoint /
+    broadcast blocks, then force the JVM GC that triggers it."""
+    import gc
+    import time
+
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(0.5)
 
 
 @pytest.fixture(autouse=True, scope="module")
@@ -37,36 +52,25 @@ def _clean_session_memory(spark):
     suite's leftovers.  MODULE scope, not per-test: the `mega` df is
     itself a module-scoped localCheckpoint — a per-test scrub reaps
     its blocks between tests (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
-    import gc
-    import time
-
-    def scrub():
-        spark.catalog.clearCache()
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-        # drop Python-side references so the ContextCleaner can reap
-        # finished checkpoint/broadcast blocks, then force the JVM GC
-        # that triggers it
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.5)
-
-    scrub()
+    _scrub(spark)
     yield
-    scrub()
+    _scrub(spark)
 
 
-def _build_mega(spark):
+def _build_image(spark, image_id, t_, c_, z_, side, n_tasks):
     """Distributed generation: one task per (t,c,z) plane, then a
     grouped assembly into the single OME-Arrow row."""
+    from ome_arrow_spark.meta import ome_images_schema
+    from ome_arrow_spark.sources.arrow_records import (
+        ome_arrow_field_type,
+        records_to_arrow_batch,
+    )
     from ome_arrow_spark.sources.numpy_ingest import to_ome_arrow
-    from ome_arrow_spark.sources.tiff import _decode_out_schema, _record_to_row
-    from ome_arrow_spark.synth import default_channel
 
     combos = spark.createDataFrame(
-        [(t, c, z) for t in range(T_) for c in range(C_) for z in range(Z_)],
+        [(t, c, z) for t in range(t_) for c in range(c_) for z in range(z_)],
         "t int, c int, z int",
-    ).repartition(16)
+    ).repartition(n_tasks)
 
     def gen(batches):
         for pdf in batches:
@@ -77,46 +81,39 @@ def _build_mega(spark):
                         "t": int(t),
                         "c": int(c),
                         "z": int(z),
-                        "pixels": synth.pixel_plane(int(t), int(c), int(z), Y_, X_),
+                        "pixels": synth.pixel_plane(int(t), int(c), int(z), side, side),
                     }
                 )
             yield pd.DataFrame(recs)
 
     pl = combos.mapInPandas(gen, "t int, c int, z int, pixels array<int>")
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["t", "c", "z"])  # t-major plane order
+    def assemble(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by([(n, "ascending") for n in ("t", "c", "z")])  # t-major
+        pixels = tbl["pixels"].combine_chunks()
         planes = [
-            {
-                "z": int(r.z),
-                "t": int(r.t),
-                "c": int(r.c),
-                "pixels": np.asarray(r.pixels, dtype=np.int32),
-            }
-            for r in pdf.itertuples()
+            {"z": z, "t": t, "c": c, "pixels": pixels[i].values.to_numpy()}
+            for i, (t, c, z) in enumerate(
+                zip(*(tbl[n].to_pylist() for n in ("t", "c", "z")))
+            )
         ]
         rec = to_ome_arrow(
-            image_id="mega",
-            size_x=X_, size_y=Y_, size_z=Z_, size_c=C_, size_t=T_,
-            channels=[default_channel(i) for i in range(C_)],
+            image_id=image_id,
+            size_x=side, size_y=side, size_z=z_, size_c=c_, size_t=t_,
             planes=planes,
         )
-        return pd.DataFrame(
-            {"ome_arrow": pd.Series([_record_to_row(rec)], dtype=object)}
+        return pa.Table.from_batches(
+            [records_to_arrow_batch([rec], "ome_arrow", ome_arrow_field_type())]
         )
 
-    return (
-        pl.withColumn("g", F.lit(1))
-        .groupBy("g")
-        .applyInPandas(lambda pdf: assemble(pdf), schema=_decode_out_schema("ome_arrow"))
-    )
+    return pl.groupBy(F.lit(image_id)).applyInArrow(assemble, ome_images_schema())
 
 
 @pytest.fixture(scope="module")
 def mega(spark):
     # localCheckpoint: materialize the 800 MB row ONCE; every pipeline
     # stage below reuses it instead of regenerating 48 planes
-    df = _build_mega(spark).localCheckpoint()
+    df = _build_image(spark, "mega", T_, C_, Z_, X_, 16).localCheckpoint()
     return df
 
 
@@ -252,53 +249,13 @@ def test_8k_plane_pipeline(spark):
     from ome_arrow_spark.operators.multiscale import multiscale_levels
     from ome_arrow_spark.operators.slice_op import slice_images
     from ome_arrow_spark.operators.view_ops import max_intensity_projection
-    from ome_arrow_spark.sources.numpy_ingest import to_ome_arrow
-    from ome_arrow_spark.sources.tiff import _decode_out_schema, _record_to_row
-    from ome_arrow_spark.synth import default_channel
 
+    # the module's `mega` row is not used here and runs last: release its
+    # ~0.8 GB of checkpoint blocks so two jumbo rows are never resident
+    # in the session JVM at once (together they outgrow a 15 GB host)
+    _scrub(spark)
     side, n_z = 8192, 3
-    combos = spark.createDataFrame(
-        [(0, 0, z) for z in range(n_z)], "t int, c int, z int"
-    ).repartition(n_z)
-
-    def gen(batches):
-        for pdf in batches:
-            recs = []
-            for t, c, z in zip(pdf["t"], pdf["c"], pdf["z"]):
-                recs.append({
-                    "t": int(t), "c": int(c), "z": int(z),
-                    "pixels": synth.pixel_plane(
-                        int(t), int(c), int(z), side, side
-                    ),
-                })
-            yield pd.DataFrame(recs)
-
-    pl = combos.mapInPandas(gen, "t int, c int, z int, pixels array<int>")
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["t", "c", "z"])
-        planes = [
-            {"z": int(r.z), "t": int(r.t), "c": int(r.c),
-             "pixels": np.asarray(r.pixels, dtype=np.int32)}
-            for r in pdf.itertuples()
-        ]
-        rec = to_ome_arrow(
-            image_id="mega8k", size_x=side, size_y=side, size_z=n_z,
-            size_c=1, size_t=1, channels=[default_channel(0)],
-            planes=planes,
-        )
-        return pd.DataFrame(
-            {"ome_arrow": pd.Series([_record_to_row(rec)], dtype=object)}
-        )
-
-    mega8k = (
-        pl.withColumn("g", F.lit(1))
-        .groupBy("g")
-        .applyInPandas(
-            lambda pdf: assemble(pdf), schema=_decode_out_schema("ome_arrow")
-        )
-        .localCheckpoint()
-    )
+    mega8k = _build_image(spark, "mega8k", 1, 1, n_z, side, n_z).localCheckpoint()
 
     d = describe(mega8k).collect()[0].asDict()
     assert (d["size_y"], d["size_x"], d["size_z"]) == (side, side, n_z)

@@ -236,15 +236,10 @@ def test_reference_null_masks_interop(spark, tmp_path):
 def test_many_images_table_ops(spark):
     """Row-wise scaling smoke: 200 small images through describe,
     slice, planes explode, and a pixel aggregate in one go."""
-    import pyarrow as pa
-
     from ome_arrow_spark.operators.slice_op import slice_images
-    from ome_arrow_spark.operators.views import plane_stats
-    from ome_arrow_spark.synth import arrow_ome_struct, golden_record
 
-    recs = [golden_record(f"m{i:03d}", 1, 2, 2, 8, 9) for i in range(200)]
-    tbl = pa.table({"ome_arrow": pa.array(recs, type=arrow_ome_struct())})
-    imgs = spark.createDataFrame(tbl)
+    recs = [synth.golden_record(f"m{i:03d}", 1, 2, 2, 8, 9) for i in range(200)]
+    imgs = OP.spark_table_from_records(spark, recs)
     assert describe(imgs).count() == 200
     sliced = slice_images(imgs, 2, 6, 1, 7, c_indices=[1])
     st = plane_stats(sliced)

@@ -11,11 +11,7 @@ from pyspark.sql import functions as F
 
 from ome_arrow_spark.operators.describe import describe
 from ome_arrow_spark.operators.views import plane_stats
-from ome_arrow_spark.sources.stack_pattern import (
-    expand_matches,
-    from_stack_pattern,
-    parse_pattern,
-)
+from ome_arrow_spark.sources.stack_pattern import from_stack_pattern, parse_pattern
 from ome_arrow_spark.sources.tiff import encode_ftif
 
 
@@ -154,3 +150,50 @@ def test_no_match_raises(spark, tmp_path):
     d.mkdir()
     with pytest.raises(FileNotFoundError):
         from_stack_pattern(spark, str(d / "nope_<0-3>.tif"))
+
+
+def test_shape_mismatch_raises(spark, tmp_path):
+    """Files of two plane shapes cannot form one image.  The check runs
+    in the assembly task, so the error surfaces when the result is
+    evaluated (here: collect), not when ``from_stack_pattern`` returns."""
+    d = tmp_path / "shapes"
+    d.mkdir()
+    _write(d, "s_Z0.tif", _plane(1, 8, 9))
+    _write(d, "s_Z1.tif", _plane(2, 9, 8))
+    imgs = from_stack_pattern(spark, str(d / "s_Z<0-1>.tif"))
+    with pytest.raises(Exception, match="Shape mismatch"):
+        imgs.collect()
+
+
+def _stack_2x2(d):
+    d.mkdir()
+    for c in range(2):
+        for z in range(2):
+            if (c, z) != (1, 1):  # one hole
+                _write(d, f"k_C{c}_Z{z}.tif", _plane(10 * c + z))
+    return str(d / "k_C<0-1>_Z<0-1>.tif")
+
+
+def test_ingest_leaves_no_persistent_rdd(spark, tmp_path):
+    pattern = _stack_2x2(tmp_path / "leak")
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    assert len(from_stack_pattern(spark, pattern).collect()) == 1
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == before
+
+
+def test_ingest_job_count(spark, tmp_path):
+    """One ingest + collect of a 3-file stack runs 3 Spark jobs.  With an
+    eager shape probe over a cached plane relation, a ``spark.range``
+    cross join and a LEFT JOIN zero-fill, the same ingest ran 10."""
+    import time
+
+    pattern = _stack_2x2(tmp_path / "jobs")
+    sc = spark.sparkContext
+    group = f"stack-jobs-{time.time_ns()}"
+    sc.setJobGroup(group, "stack ingest job count")
+    try:
+        from_stack_pattern(spark, pattern).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
