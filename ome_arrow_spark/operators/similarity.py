@@ -220,7 +220,9 @@ def _lsh_sig_array(vec: str, n_planes: int, n_tables: int) -> Column:
     Arrow batches: the sign matrix is built once per partition from the
     batch width, then :func:`_hyperplane_bits` signs every row, so the
     buckets equal :func:`lsh_signature`'s and the DuckDB twins'.
-    Contract: fixed-width vectors."""
+    Contract: fixed-width vectors.  A null or empty vector gets a null
+    array, as :func:`lsh_signature` gives it a null signature: the row
+    collides with nothing."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -230,14 +232,20 @@ def _lsh_sig_array(vec: str, n_planes: int, n_tables: int) -> Column:
     def sigs(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         S = None
         for v in batches:
-            X = np.vstack(v.to_numpy()).astype(np.float64)
+            ok = [x is not None and len(x) > 0 for x in v]
+            if not any(ok):
+                yield pd.Series([None] * len(v), dtype=object)
+                continue
+            X = np.vstack(v[ok].to_numpy()).astype(np.float64)
             if S is None:
                 S = _md5_sign_matrix(n_tables, n_planes, X.shape[1])
             bits, _ = _hyperplane_bits(X, S)
-            vals = (
-                bits.reshape(len(X), n_tables, n_planes) * weights
-            ).sum(-1).astype(np.int32)
-            yield pd.Series(list(vals))
+            vals = iter(
+                (bits.reshape(len(X), n_tables, n_planes) * weights)
+                .sum(-1)
+                .astype(np.int32)
+            )
+            yield pd.Series([next(vals) if o else None for o in ok])
 
     return sigs(F.col(vec))
 
@@ -255,14 +263,14 @@ def _lsh_sig_side(
     rows — ALL tables from ONE pass (posexplode of the per-table
     signature array, never a per-table rescan).
 
-    ``sigs_col`` (r14) retains the FULL signature array on every
-    exploded row instead of the vector — the canonical-first-collision
-    dedup filter needs both sides' arrays to test "did this pair
-    already collide in an earlier table".  posexplode_outer keeps
-    Catalyst from inferring a ``size(arr) > 0`` pre-Generate filter
-    that would evaluate the signature UDF a second time per row (an
-    empty/null array yields null join keys, dropped by the inner
-    bucket join — same pair set)."""
+    ``sigs_col`` retains the FULL signature array on every exploded row
+    instead of the vector — the canonical-first-collision dedup filter
+    needs both sides' arrays to test "did this pair already collide in
+    an earlier table".  posexplode_outer keeps Catalyst from inferring
+    a ``size(arr) > 0`` pre-Generate filter that would evaluate the
+    signature UDF a second time per row (a null array — a null or
+    empty vector — yields null join keys, dropped by the inner bucket
+    join — same pair set)."""
     arr = _lsh_sig_array(vec, n_planes, n_tables)
     if sigs_col is not None:
         return df.select(F.col(id_col), arr.alias(sigs_col)).select(
@@ -287,56 +295,62 @@ def _canonical_lsh_pairs(
     broadcast_left: bool = False,
 ):
     """DISTINCT candidate pairs from two exploded signature sides with
-    NO dedup shuffle (r14): a pair is emitted only by the FIRST table
-    (lowest ``__t``) whose buckets collide — later collisions are
-    filtered map-side by comparing the carried signature arrays.  The
-    emitted set is exactly ``dropDuplicates(left_id, right_id)`` of the
-    bucket join (every surviving pair has a unique minimal colliding
-    table), but the 2-phase aggregate + exchange of the full pre-dedup
-    pair stream is gone; what's carried instead is one n_tables-int
-    array per SIGNATURE row — ~4·n·T² bytes on the signature shuffle
-    vs ~24·n·T·target_bucket through the dedup exchange, under 10%
-    of it even at T=128.
+    NO dedup shuffle: a pair is emitted only by the FIRST table (lowest
+    ``__t``) whose buckets collide — later collisions are filtered
+    map-side by comparing the carried signature arrays.  The emitted
+    set is exactly ``dropDuplicates(left_id, right_id)`` of the bucket
+    join (every surviving pair has a unique minimal colliding table),
+    without the 2-phase aggregate + exchange of the full pre-dedup pair
+    stream; what's carried instead is one n_tables-int array per
+    SIGNATURE row — ~4·n·T² bytes on the signature shuffle vs
+    ~24·n·T·target_bucket through a dedup exchange, under 10% of it
+    even at T=128.
 
     ``dis_by_t`` maps table → skew-capped (disallowed) signature set,
     collected on the driver; those buckets are pruned from BOTH sides
     and treated as non-collisions in the canonical test, so the pair
-    set equals the old broadcast-allow-list form exactly.
+    set equals the allow-list + ``dropDuplicates`` form exactly.  Each
+    predicate is one SQL string (one parse instead of a py4j Column
+    call per term; SQL ``arr[t]`` is the same 0-based ``GetArrayItem``
+    as ``col[t]``).
 
-    The returned pairs are repartitioned on ``left_id``: with every
-    join upstream broadcast-sized, nothing else forces an exchange
-    before the consumer — a local run would otherwise score millions
-    of pairs in the input's single scan task (measured 55 s vs 7 s on
-    the 20k×20k bench join), and every consumer (top-k window,
-    threshold filter + components) partitions by ``left_id`` anyway,
-    so the thin-pair exchange it introduces is one a consumer window
-    reuses (no second scored-row shuffle)."""
+    The returned pairs are hash-partitioned on ``left_id`` into
+    ``defaultParallelism`` partitions — one task wave.  With every join
+    upstream broadcast-sized, nothing else forces an exchange before
+    the consumer, so without it a local run scores millions of pairs
+    in the input's single scan task (measured 55 s vs 7 s on the
+    20k×20k bench join).  The width is explicit because AQE coalesces
+    a repartition by column by bytes, and the thin pairs (~24 B each)
+    then land in one task that runs every re-attach join, dot fold and
+    top-k window while the other slots idle.  Every consumer (top-k
+    window, threshold filter + components) partitions by ``left_id``
+    anyway, so it reuses this exchange."""
     dis_by_t = dis_by_t or {}
 
-    def keep(df):
-        pred = None
-        for t, sigs in dis_by_t.items():
-            p = (F.col("__t") == t) & F.col("__sig").isin(*sorted(sigs))
-            pred = p if pred is None else (pred | p)
-        return df if pred is None else df.filter(~pred)
+    def in_list(sigs):
+        return ", ".join(str(s) for s in sorted(sigs))
 
-    lhs = keep(ls)
+    lhs, rhs = ls, rs
+    if dis_by_t:
+        pruned = " OR ".join(
+            f"(__t = {t} AND __sig IN ({in_list(sigs)}))"
+            for t, sigs in sorted(dis_by_t.items())
+        )
+        lhs, rhs = ls.filter(f"NOT ({pruned})"), rs.filter(f"NOT ({pruned})")
     if broadcast_left:
         lhs = F.broadcast(lhs)
-    j = lhs.join(keep(rs), ["__t", "__sig"])
-    earlier = F.lit(False)
+    earlier = []
     for t in range(n_tables):
-        coll = (F.lit(t) < F.col("__t")) & (
-            F.col("__lsigs")[t] == F.col("__rsigs")[t]
-        )
-        sigs = dis_by_t.get(t)
-        if sigs:
-            coll = coll & ~F.col("__lsigs")[t].isin(*sorted(sigs))
-        earlier = earlier | coll
+        term = f"{t} < __t AND __lsigs[{t}] = __rsigs[{t}]"
+        if dis_by_t.get(t):
+            term += f" AND __lsigs[{t}] NOT IN ({in_list(dis_by_t[t])})"
+        earlier.append(f"({term})")
+    width = ls.sparkSession.sparkContext.defaultParallelism
     return (
-        j.filter(~earlier)
+        lhs.join(rhs, ["__t", "__sig"])
+        .filter(f"NOT ({' OR '.join(earlier)})")
         .select(left_id, right_id)
-        .repartition(F.col(left_id))
+        .repartition(width, F.col(left_id))
     )
 
 
@@ -368,20 +382,18 @@ def cosine_topk_lsh(
     Arrow-batched matmul against the ±1 sign matrix, with the ordered
     fold re-run only on rows whose dot products sit too near zero for
     the summation order to be irrelevant (:func:`_hyperplane_bits`).
+    A query or corpus row with a null or empty vector matches nothing.
 
-    Pair plumbing (r14): the bucket join moves THIN id pairs only —
-    the vectors and their norms re-attach afterwards by id joins
-    (query side broadcast per the |Q|-small contract).  The previous
-    form carried BOTH embedding arrays through a (query_id, corpus_id)
-    dedup exchange — ~16·dim bytes per PRE-dedup pair, the same
-    payload-through-shuffle anti-pattern the round-9 knn-join incident
-    was about — and measured 14.9 s vs 2.9 s for the thin form on the
+    Pair plumbing: the bucket join moves THIN id pairs only — the
+    vectors and their norms re-attach afterwards by id joins (query
+    side broadcast per the |Q|-small contract).  Carrying BOTH
+    embedding arrays through the pair stream costs ~16·dim bytes per
+    pair; the thin form measured 2.9 s vs 14.9 s for that one on the
     100k bench fixture (217k candidate pairs), results bit-identical.
-    The dedup exchange itself is now gone too: pairs are emitted only
-    by their FIRST colliding table (map-side canonical filter over the
-    carried signature arrays — see :func:`_canonical_lsh_pairs`).
-    Norms are computed once per side row; each pair pays one dot
-    fold."""
+    Pairs are emitted only by their FIRST colliding table (map-side
+    canonical filter over the carried signature arrays — see
+    :func:`_canonical_lsh_pairs`), so no dedup exchange runs.  Norms
+    are computed once per side row; each pair pays one dot fold."""
     q = _lsh_sig_side(
         queries, query_id, vec, "__qv", n_planes, n_tables,
         sigs_col="__lsigs",
@@ -427,11 +439,11 @@ def knn_join_planes(n_right: int, target_bucket: int = 256) -> int:
     """Signature width that keeps the EXPECTED right-side bucket near
     ``target_bucket`` rows: 2^planes buckets per table must cover
     n_right / target_bucket.  A FIXED plane count makes candidate
-    volume Θ(n²/2^planes) — quadratic in the corpus — which is exactly
-    the round-9 bench failure (4 planes → 16 buckets → 49 GB of
-    candidate shuffle at a 20k×20k self-join).  Scaling planes with
-    log2(n) pins candidates at ~n_left · n_tables · target_bucket:
-    LINEAR in the left side at any corpus size."""
+    volume Θ(n²/2^planes) — quadratic in the corpus (4 planes → 16
+    buckets measured 49 GB of candidate shuffle at a 20k×20k
+    self-join).  Scaling planes with log2(n) pins candidates at
+    ~n_left · n_tables · target_bucket: LINEAR in the left side at any
+    corpus size."""
     import math
 
     if n_right <= target_bucket:
@@ -441,9 +453,9 @@ def knn_join_planes(n_right: int, target_bucket: int = 256) -> int:
 
 def knn_join_tables(n_planes: int) -> int:
     """Table count that holds kNN-join recall roughly CONSTANT as the
-    data-derived signature widens (r14 — VERDICT r13 #1: with tables
-    fixed at 8, measured recall@2 collapsed 0.70 → 0.44 → 0.084 across
-    sf0.01 → sf1 → sf10 as :func:`knn_join_planes` grew 4 → 6 → 10).
+    data-derived signature widens: with tables fixed at 8, measured
+    recall@2 collapses 0.70 → 0.44 → 0.084 across sf0.01 → sf1 → sf10
+    as :func:`knn_join_planes` grows 4 → 6 → 10.
 
     Per-table collision probability for a fixed-similarity pair decays
     geometrically in the plane count — the measured per-table recall
@@ -464,6 +476,27 @@ def knn_join_tables(n_planes: int) -> int:
     return min(128, max(8, (8 * 25**d + 16**d - 1) // 16**d))
 
 
+def _knn_join_sizing(
+    right: DataFrame,
+    n_planes: int | None,
+    n_tables: int | None,
+    target_bucket: int,
+    max_bucket: int | None,
+) -> tuple[int, int, int, int]:
+    """``(n_right, n_planes, n_tables, max_bucket)`` of one kNN join:
+    one ``right.count()`` job, then each ``None`` derived — the width by
+    :func:`knn_join_planes`, the table count from that width by
+    :func:`knn_join_tables`, the skew cap as 64 × ``target_bucket``."""
+    n_right = right.count()
+    if n_planes is None:
+        n_planes = knn_join_planes(n_right, target_bucket)
+    if n_tables is None:
+        n_tables = knn_join_tables(n_planes)
+    if max_bucket is None:
+        max_bucket = 64 * target_bucket
+    return n_right, n_planes, n_tables, max_bucket
+
+
 def knn_join_candidates(
     left: DataFrame,
     right: DataFrame,
@@ -481,37 +514,32 @@ def knn_join_candidates(
     Buckets come from the one md5 hyperplane family of
     :func:`lsh_signature`, which the DuckDB twins replay bit-for-bit.
 
-    ``n_planes=None`` (the default) derives the signature width from
-    the right-side row count via :func:`knn_join_planes`; the one
-    ``right.count()`` job is O(scan) and trivially cheaper than a
-    mis-sized candidate explosion.  ``n_tables=None`` (the default,
-    r14) derives the table count from that width via
-    :func:`knn_join_tables` so recall does not silently collapse as
-    the corpus grows — pass an explicit int to pin cost instead.
-    ``max_bucket=None`` derives the skew cap as 64 × target_bucket —
-    reachable (64× the expected bucket), unlike the old fixed 100k cap
-    that could never engage below ~1.6M-row buckets.
+    One ``right.count()`` job sizes the join (O(scan), trivially
+    cheaper than a mis-sized candidate explosion).  ``n_planes=None``
+    (the default) derives the signature width from it via
+    :func:`knn_join_planes`; ``n_tables=None`` (the default) derives
+    the table count from that width via :func:`knn_join_tables` so
+    recall does not silently collapse as the corpus grows — pass an
+    explicit int to pin cost instead.  ``max_bucket=None`` derives the
+    skew cap as 64 × target_bucket — reachable (64× the expected
+    bucket), unlike a fixed 100k cap that could never engage below
+    ~1.6M-row buckets.
 
-    Pairs are DISTINCT on (left_id, right_id) with no dedup shuffle
-    (r14): each pair is emitted only by its first colliding table —
-    the map-side canonical filter of :func:`_canonical_lsh_pairs` over
-    carried signature arrays replaces the old
-    ``dropDuplicates`` 2-phase aggregate + exchange of the full
-    pre-dedup pair stream (measured 6.65 → 1.52 s on the 20k×20k
-    bench join's pair stage, identical 7.8M-pair output).  The
-    embedding vectors re-attach afterwards by id-equi-joins against
-    the original relations: carrying two dim-double vectors through
-    the bucket join multiplies its shuffle by ~16·dim bytes per pair
-    (the other half of the round-9 49 GB incident); the thin form is
-    ~24 bytes/pair regardless of dim, and the re-attach joins are
-    id-partitioned sort-merge (or AQE-broadcast when a side is
-    small)."""
-    if n_planes is None:
-        n_planes = knn_join_planes(max(right.count(), 1), target_bucket)
-    if n_tables is None:
-        n_tables = knn_join_tables(n_planes)
-    if max_bucket is None:
-        max_bucket = 64 * target_bucket
+    Pairs are DISTINCT on (left_id, right_id) with no dedup shuffle:
+    each pair is emitted only by its first colliding table — the
+    map-side canonical filter of :func:`_canonical_lsh_pairs` over
+    carried signature arrays stands in for a ``dropDuplicates`` 2-phase
+    aggregate + exchange of the full pre-dedup pair stream (measured
+    1.52 vs 6.65 s on the 20k×20k bench join's pair stage, identical
+    7.8M-pair output).  The embedding vectors re-attach afterwards by
+    id-equi-joins against the original relations: carrying two
+    dim-double vectors through the bucket join multiplies its shuffle
+    by ~16·dim bytes per pair; the thin form is ~24 bytes/pair
+    regardless of dim, and the re-attach joins are id-partitioned
+    sort-merge (or AQE-broadcast when a side is small)."""
+    n_right, n_planes, n_tables, max_bucket = _knn_join_sizing(
+        right, n_planes, n_tables, target_bucket, max_bucket
+    )
     ls = _lsh_sig_side(
         left, left_id, vec, "__lv", n_planes, n_tables,
         sigs_col="__lsigs",
@@ -520,31 +548,31 @@ def knn_join_candidates(
         right, right_id, vec, "__rv", n_planes, n_tables,
         sigs_col="__rsigs",
     )
-    # Skew census (r14): the oversized buckets are FEW by construction
-    # (the guard exists for boilerplate/zero-vector mega-buckets), so
-    # collect them to the driver and prune with literal predicates —
-    # the canonical-first-collision filter in _canonical_lsh_pairs
-    # needs the disallowed set IN-EXPRESSION (a collision in a
-    # disallowed table must not suppress the pair's allowed emission),
-    # which a broadcast-joined allow-list cannot provide.  Same census
-    # aggregate the old broadcast allow-list ran; one extra collect-
-    # sized driver hop, bounded by n_tables · 2^n_planes rows.
-    dis_rows = (
-        rs.groupBy("__t", "__sig")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") > max_bucket)
-        .select("__t", "__sig")
-        .collect()
-    )
+    # Skew census, skipped when n_right <= max_bucket: no bucket can
+    # hold more right rows than the right side has.  Otherwise the
+    # oversized buckets are FEW by construction (the guard exists for
+    # boilerplate/zero-vector mega-buckets), so they are collected to
+    # the driver and pruned with literal predicates — the canonical-
+    # first-collision filter in _canonical_lsh_pairs needs the
+    # disallowed set IN-EXPRESSION (a collision in a disallowed table
+    # must not suppress the pair's allowed emission), which a
+    # broadcast-joined allow-list cannot provide.
     dis_by_t: dict[int, set[int]] = {}
-    for r in dis_rows:
-        dis_by_t.setdefault(int(r["__t"]), set()).add(int(r["__sig"]))
+    if n_right > max_bucket:
+        for r in (
+            rs.groupBy("__t", "__sig")
+            .agg(F.count("*").alias("__n"))
+            .filter((F.col("__n") > max_bucket) & F.col("__sig").isNotNull())
+            .select("__t", "__sig")
+            .collect()
+        ):
+            dis_by_t.setdefault(int(r["__t"]), set()).add(int(r["__sig"]))
     pairs = _canonical_lsh_pairs(
         ls, rs, left_id, right_id, n_tables, dis_by_t=dis_by_t
     )
-    # r14: re-attach norms alongside the vectors — computed once per
-    # source row in the (small) side projections, so pair scoring pays
-    # one dot fold per candidate instead of dot + two norms.
+    # Norms re-attach alongside the vectors — computed once per source
+    # row in the (small) side projections, so pair scoring pays one dot
+    # fold per candidate instead of dot + two norms.
     return pairs.join(
         left.select(
             F.col(left_id),
@@ -576,18 +604,14 @@ def knn_join_candidate_census(
     """PRE-DEDUP candidate-pair count of :func:`knn_join_candidates`
     from bucket-size aggregates alone — Σ over allowed (table, sig)
     buckets of |left ∩ bucket| · |right ∩ bucket| — without ever
-    materializing a pair row (r14).  An upper bound on the deduped
-    count, so "measure before you pay": sizing a derived-``n_tables``
-    run at 100× data costs two signature scans + a groupBy, not the
-    pair shuffle the census is there to predict.  Exact same bucket
-    machinery (md5 hyperplanes, planes/tables/skew-cap derivation) as
-    the operator."""
-    if n_planes is None:
-        n_planes = knn_join_planes(max(right.count(), 1), target_bucket)
-    if n_tables is None:
-        n_tables = knn_join_tables(n_planes)
-    if max_bucket is None:
-        max_bucket = 64 * target_bucket
+    materializing a pair row.  An upper bound on the deduped count, so
+    "measure before you pay": sizing a derived-``n_tables`` run at 100×
+    data costs two signature scans + a groupBy, not the pair shuffle
+    the census is there to predict.  Exact same bucket machinery (md5
+    hyperplanes, :func:`_knn_join_sizing`) as the operator."""
+    _, n_planes, n_tables, max_bucket = _knn_join_sizing(
+        right, n_planes, n_tables, target_bucket, max_bucket
+    )
     ls = _lsh_sig_side(left, left_id, vec, "__lv", n_planes, n_tables)
     rs = _lsh_sig_side(right, right_id, vec, "__rv", n_planes, n_tables)
     lc = ls.groupBy("__t", "__sig").agg(F.count("*").alias("__ln"))
@@ -622,8 +646,7 @@ def knn_join_lsh(
     ``candidates`` lets a caller that already materialized (e.g.
     persisted) the :func:`knn_join_candidates` relation — say, to
     assert its size before paying for scoring, the registered-gate
-    pattern — reuse it instead of rebuilding it (VERDICT r10
-    "What's wrong" #2: the gate used to compute candidates twice).
+    pattern — reuse it instead of building it a second time.
 
     :func:`cosine_topk_lsh` broadcasts its query side (the
     interactive-search contract, |Q| small); this is the corpus-scale
@@ -633,30 +656,33 @@ def knn_join_lsh(
     embedding-based corpus linking (dedup across datasets, retrieval
     supervision mining, cross-modal alignment) at 10^9 × 10^9 rows.
     Signatures use the one md5 hyperplane family, so the registered
-    ``knn_join_lsh`` query's DuckDB twin replays every bucket.
+    ``knn_join_lsh`` query's DuckDB twin replays every bucket.  A row
+    with a null or empty vector matches nothing.
 
-    Sizing (round-10 fix): ``n_planes`` defaults to DATA-DERIVED via
+    Sizing: ``n_planes`` defaults to DATA-DERIVED via
     :func:`knn_join_planes` — expected bucket ≈ ``target_bucket`` rows,
     so candidate volume is ~n_left · n_tables · target_bucket, linear
-    in |left| at any corpus size.  The old fixed ``n_planes=4`` gave a
-    16-bucket space and Θ(n²/16) candidates (measured 49 GB of shuffle
-    at a 20k×20k self-join before the fix).  ``n_tables`` defaults to
-    DATA-DERIVED too (r14, :func:`knn_join_tables`): a fixed table
-    count under a growing plane width silently trades recall for the
-    pinned cost — measured recall@2 fell 0.70 → 0.084 across
-    sf0.01 → sf10 at the old fixed 8 — so the default now buys the
-    extra tables (cost still linear in |left|, ~T(log n) factor) and
-    explicit ``n_tables`` remains the pin-the-cost escape hatch.
+    in |left| at any corpus size (a fixed ``n_planes=4`` gives a
+    16-bucket space and Θ(n²/16) candidates: 49 GB of shuffle at a
+    20k×20k self-join).  ``n_tables`` defaults to DATA-DERIVED too
+    (:func:`knn_join_tables`): a fixed table count under a growing
+    plane width silently trades recall for the pinned cost — recall@2
+    falls 0.70 → 0.084 across sf0.01 → sf10 at a fixed 8 — so the
+    default buys the extra tables (cost still linear in |left|, ~T(log
+    n) factor) and explicit ``n_tables`` is the pin-the-cost escape
+    hatch.
 
     Skew guard: hyperplane buckets are balanced for centered data, but
     real corpora have boilerplate/zero-ish vectors that collapse into
     mega-buckets; any bucket with more than ``max_bucket`` RIGHT rows
     (default 64 × target_bucket) is dropped from candidate generation
     (the LSH-dedup ``max_bucket`` rationale — a B-row bucket emits
-    |left∩bucket|·B candidate pairs).  The bucket census is tiny
-    (≤ n_tables·2^n_planes rows), so the allow-list is broadcast.
-    Candidates dedup on (left_id, right_id), exact cosine ranks
-    inside, ties break on right id."""
+    |left∩bucket|·B candidate pairs).  The disallowed buckets are
+    counted by a census of the right side and collected to the driver
+    (≤ n_tables·2^n_planes rows); when the right side has no more than
+    ``max_bucket`` rows no bucket can exceed it, and the census is
+    skipped.  Candidates dedup on (left_id, right_id), exact cosine
+    ranks inside, ties break on right id."""
     if candidates is None:
         candidates = knn_join_candidates(
             left,
@@ -669,8 +695,8 @@ def knn_join_lsh(
             target_bucket=target_bucket,
             max_bucket=max_bucket,
         )
-    # r14: use side-attached norms when the candidate relation carries
-    # them (knn_join_candidates emits __lv__n/__rv__n); a caller-built
+    # Side-attached norms when the candidate relation carries them
+    # (knn_join_candidates emits __lv__n/__rv__n); a caller-built
     # candidates df without them falls back to the fused cosine. Both
     # forms produce bit-identical doubles.
     if "__lv__n" in candidates.columns and "__rv__n" in candidates.columns:

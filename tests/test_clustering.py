@@ -4,6 +4,8 @@ determinism, grouped-map applyInPandas normalization."""
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -185,12 +187,14 @@ def test_knn_join_candidate_bound_and_auto_planes(spark, sf_dir):
 
 
 def test_canonical_dedup_equals_dropduplicates(spark, sf_dir):
-    """r14 canonical-first-collision dedup: knn_join_candidates' pair
-    set must equal the old form — bucket join over an allow-list,
-    then dropDuplicates — INCLUDING when the skew cap engages (a pair
-    whose only early collision sits in a disallowed bucket must still
-    be emitted by its first ALLOWED table).  max_bucket is forced tiny
-    so real buckets get disallowed on this fixture."""
+    """Canonical-first-collision dedup: knn_join_candidates' pair set
+    must equal the bucket join over an allow-list, then dropDuplicates
+    — INCLUDING when the skew cap engages (a pair whose only early
+    collision sits in a disallowed bucket must still be emitted by its
+    first ALLOWED table).  max_bucket is forced tiny so real buckets get
+    disallowed on this fixture; the derived cap (64 × target_bucket)
+    engages once target_bucket is small enough that the census runs
+    (64 · target_bucket < n_right), and a cap above n_right skips it."""
     from ome_arrow_spark.operators.similarity import (
         _lsh_sig_side,
         knn_join_candidates,
@@ -203,26 +207,31 @@ def test_canonical_dedup_equals_dropduplicates(spark, sf_dir):
     right = emb.filter(F.col("vec_id") % 3 != 0).select(
         F.col("vec_id").alias("cid"), "embedding"
     )
-    for max_bucket in (4, 10**9):
+    n_right = right.count()
+    # (n_planes, max_bucket, target_bucket); at 3 planes the largest
+    # right buckets of this fixture hold 74 and 65 rows, above 64 · 1
+    for planes, max_bucket, target in ((4, 4, 256), (4, 10**9, 256), (3, None, 1)):
+        cap = 64 * target if max_bucket is None else max_bucket
         got = {
             (r["qid"], r["cid"])
             for r in knn_join_candidates(
-                left, right, n_planes=4, n_tables=8, max_bucket=max_bucket
+                left, right, n_planes=planes, n_tables=8,
+                target_bucket=target, max_bucket=max_bucket,
             )
             .select("qid", "cid")
             .collect()
         }
-        # reference: the pre-r14 allow-list + dropDuplicates form
-        ls = _lsh_sig_side(left, "qid", "embedding", "__lv", 4, 8).select(
+        # reference: the allow-list + dropDuplicates form
+        ls = _lsh_sig_side(left, "qid", "embedding", "__lv", planes, 8).select(
             "qid", "__t", "__sig"
         )
-        rs = _lsh_sig_side(right, "cid", "embedding", "__rv", 4, 8).select(
+        rs = _lsh_sig_side(right, "cid", "embedding", "__rv", planes, 8).select(
             "cid", "__t", "__sig"
         )
         allowed = (
             rs.groupBy("__t", "__sig")
             .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") <= max_bucket)
+            .filter(F.col("__n") <= cap)
             .select("__t", "__sig")
         )
         want = {
@@ -234,16 +243,103 @@ def test_canonical_dedup_equals_dropduplicates(spark, sf_dir):
             .collect()
         }
         assert got == want, (
-            f"canonical dedup diverged (max_bucket={max_bucket}): "
+            f"canonical dedup diverged (planes={planes}, cap={cap}): "
             f"{len(got)} vs {len(want)} pairs"
         )
-        if max_bucket == 4:
+        if cap < n_right:
             # the cap must actually engage on this fixture, or the
             # disallowed branch wasn't exercised
             n_uncapped = knn_join_candidates(
-                left, right, n_planes=4, n_tables=8, max_bucket=10**9
+                left, right, n_planes=planes, n_tables=8, max_bucket=10**9
             ).count()
             assert len(got) < n_uncapped, "skew cap never engaged"
+
+
+def test_knn_join_plan_shape(spark, sf_dir):
+    """A default knn_join_lsh whose right side is no larger than the
+    skew cap runs no census (its right row count proves no bucket can
+    exceed the cap): 7 jobs for this join + collect, 9 with the census.
+    The thin pairs are spread over one wave of ``defaultParallelism``
+    tasks, so the scoring stage (re-attach, dot fold, top-k window)
+    runs on every task slot; a repartition by column alone lets AQE
+    coalesce them into 1 task."""
+    from ome_arrow_spark.operators.similarity import knn_join_lsh
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    left = emb.filter(F.col("vec_id") % 4 == 0).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    right = emb.filter(F.col("vec_id") % 4 != 0).select(
+        F.col("vec_id").alias("cid"), "embedding"
+    )
+    sc = spark.sparkContext
+    group = f"knn-join-jobs-{time.time_ns()}"
+    sc.setJobGroup(group, "knn_join_lsh plan shape")
+    try:
+        rows = knn_join_lsh(left, right, k=2).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert rows and len(jobs) == 7
+    scoring = tracker.getStageInfo(max(tracker.getJobInfo(max(jobs)).stageIds))
+    assert scoring.numTasks == sc.defaultParallelism
+
+
+def test_lsh_null_embedding_matches_nothing(spark):
+    """A null or empty vector gets a null signature array, as the
+    in-plan lsh_signature fold gives it a null signature, so both LSH
+    joins return exactly the other rows' results instead of failing in
+    the signature UDF."""
+    from ome_arrow_spark.operators.similarity import (
+        _lsh_sig_array,
+        cosine_topk_lsh,
+        knn_join_lsh,
+        lsh_signature,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (0, [1.0, 0.5, -0.2, 0.3]),
+            (1, [0.9, 0.4, -0.1, 0.2]),
+            (2, None),
+            (3, [-1.0, 0.2, 0.7, -0.4]),
+            (4, []),
+        ],
+        "id long, embedding array<double>",
+    )
+    n_planes, n_tables = 4, 3
+    folds = [lsh_signature(F.col("embedding"), n_planes, t) for t in range(n_tables)]
+    for r in df.select(
+        "id",
+        F.array(*folds).alias("fold"),
+        _lsh_sig_array("embedding", n_planes, n_tables).alias("udf"),
+    ).collect():
+        if r["id"] in (2, 4):
+            assert r["udf"] is None and r["fold"] == [None] * n_tables
+        else:
+            assert r["udf"] == r["fold"]
+
+    def rows(join, frame):
+        left = frame.select(F.col("id").alias("qid"), "embedding")
+        right = frame.select(F.col("id").alias("cid"), "embedding")
+        return sorted(tuple(r) for r in join(left, right, k=3).collect())
+
+    valid = df.filter(F.size("embedding") > 0)
+    for join in (knn_join_lsh, cosine_topk_lsh):
+        got = rows(join, df)
+        assert got and got == rows(join, valid)
+    # 70 more null rows outnumber the derived skew cap (64 × 1): the
+    # census runs and must not take the null key for a bucket
+    nulls = spark.range(100, 170).select(
+        "id", F.lit(None).cast("array<double>").alias("embedding")
+    )
+
+    def capped(left, right, k):
+        return knn_join_lsh(left, right, k=k, n_planes=4, target_bucket=1)
+
+    assert rows(capped, df.unionByName(nulls)) == rows(capped, valid)
 
 
 def test_lsh_joins_with_an_empty_side(spark, sf_dir):
