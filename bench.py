@@ -605,13 +605,14 @@ IDLE_BW_GBPS = 15.9
 
 
 def ambient_bw_probe(n: int = 5) -> tuple[float, float]:
-    """(best, worst) GB/s of an N-round 256 MB buffer copy — the
-    bandwidth twin of the spin sentinel."""
+    """(best, worst) GB/s of an N-round 32 MB buffer copy (64 MB
+    resident: source + destination) — the bandwidth twin of the spin
+    sentinel."""
     import numpy as np
 
-    src = np.empty(32 * 1024 * 1024, dtype=np.int64)  # 256 MB
+    src = np.empty(4 * 1024 * 1024, dtype=np.int64)  # 32 MB
     src[:] = 1
-    dst = np.empty_like(src)
+    dst = np.ones_like(src)  # touched: page faults are not bandwidth
     nbytes = 2 * src.nbytes  # read + write
     walls = []
     for _ in range(n):
@@ -868,7 +869,7 @@ def _emit_stamp(
     print(f"# ambient_load_factor: {load}", file=sys.stderr)
     print(
         f"# ambient_bw_gbps: best {bw_best} worst {bw_worst} "
-        f"(idle calibration {IDLE_BW_GBPS})",
+        f"(box-specific idle calibration {IDLE_BW_GBPS})",
         file=sys.stderr,
     )
 
@@ -903,6 +904,11 @@ def _emit_stamp(
         "ambient_load_factor": load,
         "ambient_bw_gbps": bw_best,
         "ambient_bw_worst_gbps": bw_worst,
+        # the idle references the two ambient ratios are read against;
+        # measured on one box, not portable to another
+        "box_specific_calibration": {
+            "idle_spin_sec": IDLE_SPIN_SEC, "idle_bw_gbps": IDLE_BW_GBPS,
+        },
         "detail": "BENCH_DETAIL.json",
     }
     if errors:

@@ -47,11 +47,11 @@ import os
 import shutil
 import time
 import uuid
-from typing import Any, Iterable, Sequence
+from typing import Any, Callable, Iterable, Sequence
 
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -372,35 +372,19 @@ def _txn_state(txn: dict[str, Any], cache: dict | None = None) -> str:
 
 
 def _stage_participant(
-    table: str,
-    adds: list[dict[str, Any]],
-    txn: dict[str, Any],
-    commit_attempts: int,
+    table: str, adds: list[dict[str, Any]], txn: dict[str, Any]
 ) -> int:
     """Publish a participant append entry at the table's next version
     (its own slot contention retries like a blind append — the txn
     reference is independent of the participant's version number)."""
-    for attempt in range(commit_attempts):
-        version = _resolve_snapshot(table)["version"] + 1
-        entry = {
-            "version": version,
-            "operation": _TXN_OP,
-            "actions": [{"add": a} for a in adds],
-            "txn": {**txn, "role": "participant"},
-        }
-        try:
-            _commit(table, version, entry)
-            return version
-        except ConcurrentCommit:
-            if attempt == commit_attempts - 1:
-                raise
-    raise AssertionError("unreachable")
+    return _blind_append(
+        table, adds, _TXN_OP, txn={**txn, "role": "participant"}
+    )
 
 
 def atomic_multi_append(
     spark: SparkSession,
     appends: Sequence[tuple[str, DataFrame]],
-    commit_attempts: int = 20,
     txn_app: str | None = None,
     txn_batch: int | None = None,
 ) -> dict[str, int]:
@@ -422,13 +406,12 @@ def atomic_multi_append(
     if len(appends) < 2:
         raise TableLogError("atomic_multi_append needs >= 2 tables")
     appends = [(os.path.abspath(t), df) for t, df in appends]
+    props = None
     if txn_app is not None:
         if txn_batch is None:
             raise TableLogError("txn_app requires txn_batch")
-        prev = _resolve_snapshot(appends[0][0])["properties"].get(
-            f"txn.{txn_app}"
-        )
-        if prev is not None and int(prev) >= int(txn_batch):
+        props = {f"txn.{txn_app}": str(txn_batch)}
+        if _replayed(_resolve_snapshot(appends[0][0]), props):
             return {}
     seen = set()
     for t, _ in appends:
@@ -439,45 +422,39 @@ def atomic_multi_append(
     adds_by_table: dict[str, list[dict[str, Any]]] = {}
     for t, df in appends:
         snap = _resolve_snapshot(t)
-        _check_schema(df, snap, t)
+        _check_schema(df.schema, snap, t)
         _enforce_constraints(df, snap, t)
         adds_by_table[t] = _write_data_files(
             df, t, snap["version"] + 1, _bloom_cols(snap)
         )
-    coord, coord_df = appends[0]
-    for attempt in range(commit_attempts):
+    coord = appends[0][0]
+    for attempt in range(_COMMIT_ATTEMPTS):
         txn_id = uuid.uuid4().hex
-        coord_version = _resolve_snapshot(coord)["version"] + 1
+        coord_snap = _resolve_snapshot(coord)
         txn_ref = {
             "id": txn_id,
             "coordinator": coord,
-            "coordinator_version": coord_version,
+            "coordinator_version": coord_snap["version"] + 1,
         }
         staged = {
-            t: _stage_participant(
-                t, adds_by_table[t], txn_ref, commit_attempts
-            )
+            t: _stage_participant(t, adds_by_table[t], txn_ref)
             for t, _ in appends[1:]
         }
-        coord_entry = {
-            "version": coord_version,
-            "operation": _TXN_OP,
-            "actions": [{"add": a} for a in adds_by_table[coord]],
-            "txn": {
-                "id": txn_id,
-                "role": "coordinator",
-                "participants": [[t, v] for t, v in staged.items()],
-            },
-        }
-        if txn_app is not None:
-            coord_entry["properties"] = {f"txn.{txn_app}": str(txn_batch)}
         try:
-            _commit(coord, coord_version, coord_entry)
+            coord_version = _commit_files(
+                coord, coord_snap, _TXN_OP, adds=adds_by_table[coord],
+                txn={
+                    "id": txn_id,
+                    "role": "coordinator",
+                    "participants": [[t, v] for t, v in staged.items()],
+                },
+                properties=props,
+            )
             return {coord: coord_version, **staged}
         except ConcurrentCommit:
             # slot lost -> txn aborted (staged entries are now
             # permanent no-ops); retry with a fresh identity
-            if attempt == commit_attempts - 1:
+            if attempt == _COMMIT_ATTEMPTS - 1:
                 raise
     raise AssertionError("unreachable")
 
@@ -974,7 +951,13 @@ def _write_data_files(
             ]
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    return adds
+    # Spark writes one 0-row file for an empty frame.  It has no column
+    # stats, so every later key pruner would keep and rewrite it: it is
+    # deleted here, before any commit can reference it.
+    for a in adds:
+        if not a["rows"]:
+            os.unlink(os.path.join(table, a["path"]))
+    return [a for a in adds if a["rows"]]
 
 
 _DISTRIBUTED_STATS_THRESHOLD = 32
@@ -1001,16 +984,130 @@ def _file_add_action(
     return add
 
 
-def _check_schema(df: DataFrame, snap: dict[str, Any], table: str) -> None:
+def _check_schema(
+    got: T.StructType, snap: dict[str, Any], table: str
+) -> None:
     want = T.StructType.fromJson(json.loads(snap["schema"]))
-    got = df.schema
     if {(f.name, f.dataType.simpleString()) for f in want.fields} != {
         (f.name, f.dataType.simpleString()) for f in got.fields
     }:
         raise TableLogError(
             f"schema mismatch writing to {table}: table has "
-            f"{want.simpleString()}, dataframe has {got.simpleString()}"
+            f"{want.simpleString()}, incoming rows have {got.simpleString()}"
         )
+
+
+# ---------------------------------------------------------------------------
+# Commit seam
+# ---------------------------------------------------------------------------
+
+# A blind append whose commit loses a version race re-commits the same
+# files this many times before giving up.
+_COMMIT_ATTEMPTS = 20
+
+# The snapshot a table's version 0 is committed against.
+_NO_TABLE: dict[str, Any] = {"version": -1, "properties": {}, "files": {}}
+
+
+def _commit_files(
+    table: str,
+    snap: dict[str, Any],
+    operation: str,
+    rows: DataFrame | None = None,
+    removes: Iterable[str] = (),
+    adds: Iterable[dict[str, Any]] = (),
+    **entry_fields: Any,
+) -> int:
+    """The one way written files become a commit.  ``rows`` are written
+    with ``snap``'s Bloom columns as version ``snap["version"] + 1``;
+    their ``add`` actions follow the already-built ``adds`` (re-added
+    files, restored files) and precede a ``remove`` per path in
+    ``removes``.  ``entry_fields`` (``schema``, ``properties``, ``txn``,
+    ``stats``) go into the entry unless None.  Raises
+    :class:`ConcurrentCommit` when the version is taken; the written
+    files are then unreferenced and :func:`vacuum_table` reclaims
+    them.  Returns the committed version."""
+    version = snap["version"] + 1
+    adds = list(adds)
+    if rows is not None:
+        adds += _write_data_files(rows, table, version, _bloom_cols(snap))
+    entry = {
+        "version": version,
+        "operation": operation,
+        "actions": [{"add": a} for a in adds]
+        + [{"remove": {"path": p}} for p in removes],
+        **{k: v for k, v in entry_fields.items() if v is not None},
+    }
+    _commit(table, version, entry)
+    return version
+
+
+def _replayed(snap: dict[str, Any], props: dict[str, str] | None) -> bool:
+    """Whether a commit carrying ``props`` repeats a batch ``snap``
+    already holds: its ``txn.<app>`` mark is not ahead of the table's
+    (Delta's txnAppId/txnVersion idempotent-writes rule)."""
+    for k, batch in (props or {}).items():
+        prev = snap["properties"].get(k) if k.startswith("txn.") else None
+        if prev is not None and int(prev) >= int(batch):
+            return True
+    return False
+
+
+def _blind_append(
+    table: str,
+    adds: Iterable[dict[str, Any]] = (),
+    operation: str = "append",
+    snap: dict[str, Any] | None = None,
+    schema: T.StructType | None = None,
+    rows: DataFrame | None = None,
+    **entry_fields: Any,
+) -> int | None:
+    """The one blind-append commit loop: commit ``adds`` (plus
+    ``rows``, written once) at the head, and after a lost race re-read
+    the head and re-commit the SAME files — an append never depends on
+    the snapshot it was computed against, so a conflict costs no
+    rewrite (Delta's blind-append rule).
+
+    ``snap`` is the head to try first (default: read it).  Against
+    every head: a replayed ``txn.<app>`` mark (:func:`_replayed`)
+    returns None without committing; ``schema`` must match; ``rows``
+    must satisfy the CHECK constraints, re-checked only when a
+    concurrent commit changed the properties.  Without ``snap`` and
+    with ``schema``, an absent table is created (version 0,
+    ``create``).  ``operation="overwrite"`` also removes every live
+    file.  Returns the committed version."""
+    props = entry_fields.get("properties")
+    adds, checked = list(adds), None
+    for attempt in range(_COMMIT_ATTEMPTS):
+        fields, op = dict(entry_fields), operation
+        absent = snap is None and current_version(table) is None
+        if absent and schema is not None:
+            snap, op = _NO_TABLE, "create"
+            fields.update(schema=schema.json(), properties=dict(props or {}))
+        else:
+            snap = snap or _resolve_snapshot(table)
+            if _replayed(snap, props):
+                return None
+            if schema is not None:
+                _check_schema(schema, snap, table)
+            if rows is not None and snap["properties"] != checked:
+                _enforce_constraints(rows, snap, table)
+                checked = snap["properties"]
+        if rows is not None and attempt == 0:
+            adds += _write_data_files(
+                rows, table, snap["version"] + 1, _bloom_cols(snap)
+            )
+        try:
+            return _commit_files(
+                table, snap, op, adds=adds,
+                removes=list(snap["files"]) if op == "overwrite" else (),
+                **fields,
+            )
+        except ConcurrentCommit:
+            if attempt == _COMMIT_ATTEMPTS - 1:
+                raise
+            snap = None
+    raise AssertionError("unreachable")
 
 
 # ---------------------------------------------------------------------------
@@ -1054,19 +1151,10 @@ def create_table(
         props[f"txn.{txn_app}"] = str(txn_batch)
     if bloom_columns:
         props[BLOOM_PROP] = json.dumps(sorted(bloom_columns))
-    adds = _write_data_files(df, table, 0, bloom_columns or ())
-    _commit(
-        table,
-        0,
-        {
-            "version": 0,
-            "operation": "create",
-            "schema": df.schema.json(),
-            "properties": props,
-            "actions": [{"add": a} for a in adds],
-        },
+    return _commit_files(
+        table, {**_NO_TABLE, "properties": props}, "create", df,
+        schema=df.schema.json(), properties=props,
     )
-    return 0
 
 
 def _bloom_cols(snap: dict[str, Any]) -> tuple[str, ...]:
@@ -1078,7 +1166,6 @@ def append_table(
     spark: SparkSession,
     df: DataFrame,
     table: str,
-    commit_attempts: int = 20,
     txn_app: str | None = None,
     txn_batch: int | None = None,
 ) -> int:
@@ -1104,41 +1191,14 @@ def append_table(
     COLLIDE with stored rows."""
     if (txn_app is None) != (txn_batch is None):
         raise TableLogError("txn_app and txn_batch go together")
-    snap = _resolve_snapshot(table)
-    if txn_app is not None:
-        prev = snap["properties"].get(f"txn.{txn_app}")
-        if prev is not None and int(prev) >= int(txn_batch):
-            return snap["version"]
-    _check_schema(df, snap, table)
-    _enforce_constraints(df, snap, table)
-    version = snap["version"] + 1
-    adds = _write_data_files(df, table, version, _bloom_cols(snap))
-    entry = {
-        "operation": "append",
-        "actions": [{"add": a} for a in adds],
-    }
-    if txn_app is not None:
-        entry["properties"] = {f"txn.{txn_app}": str(txn_batch)}
-    for attempt in range(commit_attempts):
-        try:
-            _commit(table, version, {"version": version, **entry})
-            return version
-        except ConcurrentCommit:
-            if attempt == commit_attempts - 1:
-                raise
-            prev_snap = snap
-            snap = _resolve_snapshot(table)
-            if txn_app is not None:
-                prev = snap["properties"].get(f"txn.{txn_app}")
-                if prev is not None and int(prev) >= int(txn_batch):
-                    # a concurrent writer (replay race) landed this
-                    # batch: the staged files become permanent no-ops
-                    return snap["version"]
-            _check_schema(df, snap, table)
-            if snap["properties"] != prev_snap["properties"]:
-                _enforce_constraints(df, snap, table)
-            version = snap["version"] + 1
-    raise AssertionError("unreachable")
+    props = None if txn_app is None else {f"txn.{txn_app}": str(txn_batch)}
+    version = _blind_append(
+        table, snap=_resolve_snapshot(table), schema=df.schema, rows=df,
+        properties=props,
+    )
+    # None: a replayed batch, skipped before any data file landed (or,
+    # when a racing writer landed it first, leaving ours unreferenced)
+    return current_version(table) if version is None else version
 
 
 def upsert_table(
@@ -1174,13 +1234,12 @@ def upsert_table(
     index merged by vector id but probed by centroid — keep their
     read-side clustering through maintenance."""
     snap = _resolve_snapshot(table)
-    _check_schema(updates, snap, table)
+    _check_schema(updates.schema, snap, table)
     _enforce_constraints(updates, snap, table)
-    version = snap["version"] + 1
 
     touched, has_keys = _files_for_key_set(spark, snap, key, updates)
-
-    actions: list[dict[str, Any]] = []
+    if not has_keys:
+        return _commit_files(table, snap, "upsert")
     if touched:
         schema = T.StructType.fromJson(json.loads(snap["schema"]))
         existing = _scan(spark, table, snap["files"], touched, schema)
@@ -1208,27 +1267,16 @@ def upsert_table(
             )
     else:
         merged = updates
-    if has_keys:
-        # Rewrite range-clustered on the merge key: the touched files'
-        # replacements keep tight key min/max (and Bloom) stats, so the
-        # NEXT merge prunes as well as this one did — without this,
-        # every upsert would progressively destroy the clustering that
-        # makes manifest pruning work.  Sized to the churned bytes,
-        # ~128 MB per output file.
-        touched_bytes = sum(
-            snap["files"][p].get("bytes", 0) for p in touched
-        )
-        n_out = max(1, -(-touched_bytes // (128 * 1024 * 1024)))
-        merged = merged.repartitionByRange(n_out, cluster_by or key)
-        adds = _write_data_files(merged, table, version, _bloom_cols(snap))
-        actions += [{"add": a} for a in adds]
-        actions += [{"remove": {"path": p}} for p in touched]
-    _commit(
-        table,
-        version,
-        {"version": version, "operation": "upsert", "actions": actions},
-    )
-    return version
+    # Rewrite range-clustered on the merge key: the touched files'
+    # replacements keep tight key min/max (and Bloom) stats, so the
+    # NEXT merge prunes as well as this one did — without this, every
+    # upsert would progressively destroy the clustering that makes
+    # manifest pruning work.  Sized to the churned bytes, ~128 MB per
+    # output file.
+    touched_bytes = sum(snap["files"][p].get("bytes", 0) for p in touched)
+    n_out = max(1, -(-touched_bytes // (128 * 1024 * 1024)))
+    merged = merged.repartitionByRange(n_out, cluster_by or key)
+    return _commit_files(table, snap, "upsert", merged, touched)
 
 
 def delete_from_table(
@@ -1246,9 +1294,11 @@ def delete_from_table(
     surviving candidates are touched.  Literal encoding follows
     :func:`read_table` (datetime or ISO string both accepted).
 
-    ``mode="rewrite"`` (default) rewrites the touched files with the
-    predicate inverted — the right move when the deleted fraction is
-    large.  ``mode="dv"`` writes DELETION VECTORS instead: each
+    A row is deleted only where ``predicate`` is TRUE; a NULL result
+    keeps the row, as SQL ``DELETE … WHERE`` does, in both modes.
+    ``mode="rewrite"`` (default) rewrites the touched files with every
+    other row — the right move when the deleted fraction is large.
+    ``mode="dv"`` writes DELETION VECTORS instead: each
     touched file gets a sidecar of deleted row positions and is
     re-added in place — a point delete then costs O(matched rows) of
     sidecar bytes, not a rewrite of every touched 128 MB file.  A file
@@ -1257,39 +1307,58 @@ def delete_from_table(
     merging any existing vector); only per-file (path, cardinality)
     rows reach the driver.  :func:`compact_table` rewrites DV'd files,
     materializing the deletes."""
+    matched = _matches(predicate)
+    return _delete_rows(
+        spark, table, mode,
+        lambda snap: _prune(snap["files"], prune_predicates),
+        lambda df, keep: df.filter(~matched if keep else matched),
+    )
+
+
+def _matches(predicate: str) -> Column:
+    """A SQL predicate as a row test that is TRUE or FALSE, never NULL:
+    a row matches only when the predicate is TRUE (SQL ``DELETE …
+    WHERE`` semantics), so a NULL result is no match."""
+    return F.coalesce(F.expr(predicate), F.lit(False))
+
+
+def _delete_rows(
+    spark: SparkSession,
+    table: str,
+    mode: str,
+    candidates: Callable[[dict[str, Any]], list[str]],
+    select: Callable[[DataFrame, bool], DataFrame],
+) -> int:
+    """The one delete body.  ``candidates(snap)`` lists the live files
+    that can hold a matched row; ``select(df, keep)`` returns the rows
+    of ``df`` the delete matches (``keep=False``) or exactly the rest
+    (``keep=True``).  ``mode="rewrite"`` rewrites the candidates'
+    kept rows; ``mode="dv"`` writes deletion vectors for the matched
+    physical positions (see :func:`_dv_delete_actions`)."""
     if mode not in ("rewrite", "dv"):
         raise TableLogError(f"delete mode must be 'rewrite' or 'dv': {mode!r}")
     snap = _resolve_snapshot(table)
-    version = snap["version"] + 1
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
-    touched = _prune(snap["files"], prune_predicates)
-    actions: list[dict[str, Any]] = []
-    if touched and mode == "dv":
-        schema_full = T.StructType.fromJson(json.loads(snap["schema"]))
-        matches = (
-            spark.read.schema(schema_full)
-            .parquet(*[os.path.join(table, p) for p in touched])
-            .filter(predicate)
-            .select(
-                F.col("_metadata.file_name").alias("__dv_file"),
-                F.col("_metadata.row_index").alias("__dv_pos"),
-            )
-        )
-        actions = _dv_delete_actions(
-            spark, table, snap, touched, matches, version
-        )
-    elif touched:
+    touched = candidates(snap)
+    if not touched:
+        return _commit_files(table, snap, "delete")
+    if mode == "rewrite":
         existing = _scan(spark, table, snap["files"], touched, schema)
-        remaining = existing.filter(f"NOT ({predicate})")
-        adds = _write_data_files(remaining, table, version, _bloom_cols(snap))
-        actions += [{"add": a} for a in adds]
-        actions += [{"remove": {"path": p}} for p in touched]
-    _commit(
-        table,
-        version,
-        {"version": version, "operation": "delete", "actions": actions},
+        return _commit_files(
+            table, snap, "delete", select(existing, True), touched
+        )
+    raw = spark.read.schema(schema).parquet(
+        *[os.path.join(table, p) for p in touched]
+    ).select(
+        "*",
+        F.col("_metadata.file_name").alias("__dv_file"),
+        F.col("_metadata.row_index").alias("__dv_pos"),
     )
-    return version
+    adds, removes = _dv_delete_actions(
+        spark, table, snap, touched,
+        select(raw, False).select("__dv_file", "__dv_pos"),
+    )
+    return _commit_files(table, snap, "delete", removes=removes, adds=adds)
 
 
 def _dv_delete_actions(
@@ -1298,14 +1367,14 @@ def _dv_delete_actions(
     snap: dict[str, Any],
     touched: list[str],
     matches: DataFrame,
-    version: int,
-) -> list[dict[str, Any]]:
-    """Commit actions for a deletion-vector delete.  ``matches`` is a
+) -> tuple[list[dict[str, Any]], list[str]]:
+    """``(adds, removes)`` of a deletion-vector delete.  ``matches`` is a
     ``(__dv_file, __dv_pos)`` DataFrame of PHYSICAL row positions to
     delete (already-deleted rows may re-match; the position union
     dedups).  Writes one merged sidecar per file executor-side and
     re-adds each file in place with its new vector — or removes it
     when the vector covers every row."""
+    version = snap["version"] + 1
     abs_table = os.path.abspath(table)
     os.makedirs(os.path.join(abs_table, DV_DIR), exist_ok=True)
     token = uuid.uuid4().hex[:12]
@@ -1342,16 +1411,17 @@ def _dv_delete_actions(
         .applyInPandas(_write_sidecars, "file string, dv string, card long")
         .collect()
     )
-    actions: list[dict[str, Any]] = []
+    adds, removes = [], []
     for r in written:
-        add = dict(snap["files"][r["file"]])
-        rows = add.get("rows")
+        rows = snap["files"][r["file"]].get("rows")
         if rows is not None and r["card"] >= rows:
-            actions.append({"remove": {"path": r["file"]}})
+            removes.append(r["file"])
         else:
-            add["dv"] = {"path": r["dv"], "cardinality": r["card"]}
-            actions.append({"add": add})
-    return actions
+            adds.append({
+                **snap["files"][r["file"]],
+                "dv": {"path": r["dv"], "cardinality": r["card"]},
+            })
+    return adds, removes
 
 
 def delete_keys_from_table(
@@ -1383,42 +1453,15 @@ def delete_keys_from_table(
     Files that provably hold no key are carried by reference
     untouched, so cost still scales with the touched fraction.  (Files
     with no stats for ``key`` are conservatively rewritten.)"""
-    if mode not in ("rewrite", "dv"):
-        raise TableLogError(f"delete mode must be 'rewrite' or 'dv': {mode!r}")
-    snap = _resolve_snapshot(table)
-    version = snap["version"] + 1
-    schema = T.StructType.fromJson(json.loads(snap["schema"]))
     kdf = keys.select(F.col(key).alias("_del_key")).distinct()
-    touched, _ = _files_for_key_set(spark, snap, key, keys)
-    actions: list[dict[str, Any]] = []
-    if touched and mode == "dv":
-        raw = spark.read.schema(schema).parquet(
-            *[os.path.join(table, p) for p in touched]
-        ).select(
-            F.col(key).alias("__dv_key"),
-            F.col("_metadata.file_name").alias("__dv_file"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-        )
-        matches = raw.join(
-            kdf, raw["__dv_key"] == kdf["_del_key"], "left_semi"
-        ).select("__dv_file", "__dv_pos")
-        actions = _dv_delete_actions(
-            spark, table, snap, touched, matches, version
-        )
-    elif touched:
-        existing = _scan(spark, table, snap["files"], touched, schema)
-        remaining = existing.join(
-            kdf, existing[key] == kdf["_del_key"], "left_anti"
-        )
-        adds = _write_data_files(remaining, table, version, _bloom_cols(snap))
-        actions += [{"add": a} for a in adds]
-        actions += [{"remove": {"path": p}} for p in touched]
-    _commit(
-        table,
-        version,
-        {"version": version, "operation": "delete", "actions": actions},
+    return _delete_rows(
+        spark, table, mode,
+        lambda snap: _files_for_key_set(spark, snap, key, keys)[0],
+        lambda df, keep: df.join(
+            kdf, df[key] == kdf["_del_key"],
+            "left_anti" if keep else "left_semi",
+        ),
     )
-    return version
 
 
 def compact_table(
@@ -1437,7 +1480,6 @@ def compact_table(
     the new version, or the current one unchanged when nothing
     qualifies."""
     snap = _resolve_snapshot(table)
-    version = snap["version"] + 1
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
     threshold = target_bytes if small_file_bytes is None else small_file_bytes
     # DV'd files always qualify: compaction is where deletion vectors
@@ -1453,18 +1495,7 @@ def compact_table(
     total = sum(snap["files"][p].get("bytes", 0) for p in files)
     n = max(1, -(-total // target_bytes))
     df = _scan(spark, table, snap["files"], files, schema)
-    adds = _write_data_files(df.repartition(n), table, version, _bloom_cols(snap))
-    _commit(
-        table,
-        version,
-        {
-            "version": version,
-            "operation": "compact",
-            "actions": [{"add": a} for a in adds]
-            + [{"remove": {"path": p}} for p in files],
-        },
-    )
-    return version
+    return _commit_files(table, snap, "compact", df.repartition(n), files)
 
 
 def table_changes(
@@ -1490,19 +1521,7 @@ def table_changes(
     snap_new = _resolve_snapshot(table, to_version)
     snap_old = _resolve_snapshot(table, from_version)
     schema = T.StructType.fromJson(json.loads(snap_new["schema"]))
-    old_ids = {
-        p: a.get("dv", {}).get("path") for p, a in snap_old["files"].items()
-    }
-    new_ids = {
-        p: a.get("dv", {}).get("path") for p, a in snap_new["files"].items()
-    }
-    _ABSENT = object()
-    only_old = sorted(
-        p for p, d in old_ids.items() if new_ids.get(p, _ABSENT) != d
-    )
-    only_new = sorted(
-        p for p, d in new_ids.items() if old_ids.get(p, _ABSENT) != d
-    )
+    only_new, only_old = _file_diff(snap_old["files"], snap_new["files"])
     cols = [f.name for f in schema.fields]
 
     def _read(paths, snap):
@@ -1578,29 +1597,15 @@ def recluster_table(
     Unlike :func:`compact_table` (which bin-packs small files with no
     ordering), this RESTORES per-file min/max tightness on ``by``."""
     snap = _resolve_snapshot(table)
-    version = snap["version"] + 1
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
     files = list(snap["files"])
     if not files:
         return snap["version"]
     df = _scan(spark, table, snap["files"], files, schema)
-    adds = _write_data_files(
-        df.repartitionByRange(max(1, n_files), by),
-        table,
-        version,
-        _bloom_cols(snap),
+    return _commit_files(
+        table, snap, "recluster", df.repartitionByRange(max(1, n_files), by),
+        files,
     )
-    _commit(
-        table,
-        version,
-        {
-            "version": version,
-            "operation": "recluster",
-            "actions": [{"add": a} for a in adds]
-            + [{"remove": {"path": p}} for p in files],
-        },
-    )
-    return version
 
 
 # ---------------------------------------------------------------------------
@@ -1808,19 +1813,10 @@ def set_table_properties(table: str, props: dict[str, str]) -> int:
     """Commit a metadata-only version merging ``props`` into the table
     properties (later commits win key-by-key, like Delta's ``ALTER
     TABLE SET TBLPROPERTIES``).  Data files are untouched."""
-    snap = _resolve_snapshot(table)
-    version = snap["version"] + 1
-    _commit(
-        table,
-        version,
-        {
-            "version": version,
-            "operation": "set_properties",
-            "properties": dict(props),
-            "actions": [],
-        },
+    return _commit_files(
+        table, _resolve_snapshot(table), "set_properties",
+        properties=dict(props),
     )
-    return version
 
 
 def add_table_constraint(
@@ -1841,18 +1837,9 @@ def add_table_constraint(
         raise TableLogError(
             f"cannot add constraint {name!r}: {bad} existing rows violate ({expr})"
         )
-    version = snap["version"] + 1
-    _commit(
-        table,
-        version,
-        {
-            "version": version,
-            "operation": "add_constraint",
-            "properties": {key: expr},
-            "actions": [],
-        },
+    return _commit_files(
+        table, snap, "add_constraint", properties={key: expr}
     )
-    return version
 
 
 def _enforce_constraints(df: DataFrame, snap: dict[str, Any], table: str) -> None:
@@ -1897,18 +1884,9 @@ def add_table_column(
     new_schema = T.StructType(
         schema.fields + list(T.StructType.fromDDL(f"`{name}` {ddl_type}").fields)
     )
-    version = snap["version"] + 1
-    _commit(
-        table,
-        version,
-        {
-            "version": version,
-            "operation": "add_column",
-            "schema": new_schema.json(),
-            "actions": [],
-        },
+    return _commit_files(
+        table, snap, "add_column", schema=new_schema.json()
     )
-    return version
 
 
 def optimize_table(
@@ -1940,7 +1918,6 @@ def optimize_table(
     if not zorder_by:
         return compact_table(spark, table, target_bytes=target_bytes)
     snap = _resolve_snapshot(table)
-    version = snap["version"] + 1
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
     numeric = (
         T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -1991,18 +1968,7 @@ def optimize_table(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    adds = _write_data_files(clustered, table, version, _bloom_cols(snap))
-    _commit(
-        table,
-        version,
-        {
-            "version": version,
-            "operation": "zorder",
-            "actions": [{"add": a} for a in adds]
-            + [{"remove": {"path": p}} for p in files],
-        },
-    )
-    return version
+    return _commit_files(table, snap, "zorder", clustered, files)
 
 
 # ---------------------------------------------------------------------------
@@ -2027,22 +1993,23 @@ def version_delta_files(
         raise TableLogError(
             f"delta range ({from_version}, {to_version}] not in log"
         )
-    snap_old = _resolve_snapshot(table, from_version)
-    snap_new = _resolve_snapshot(table, to_version)
-    old_ids = {
-        p: a.get("dv", {}).get("path") for p, a in snap_old["files"].items()
-    }
-    new_ids = {
-        p: a.get("dv", {}).get("path") for p, a in snap_new["files"].items()
-    }
-    _ABSENT = object()
-    added = sorted(
-        p for p, d in new_ids.items() if old_ids.get(p, _ABSENT) != d
+    return _file_diff(
+        _resolve_snapshot(table, from_version)["files"],
+        _resolve_snapshot(table, to_version)["files"],
     )
-    removed = sorted(
-        p for p, d in old_ids.items() if new_ids.get(p, _ABSENT) != d
-    )
-    return added, removed
+
+
+def _file_diff(
+    old: dict[str, dict[str, Any]], new: dict[str, dict[str, Any]]
+) -> tuple[list[str], list[str]]:
+    """``(added, removed)``: sorted paths whose file identity — (path,
+    deletion-vector) — is in ``new`` but not ``old``, and in ``old``
+    but not ``new``.  A file whose vector changed is on both sides."""
+    def ident(files):
+        return {(p, a.get("dv", {}).get("path")) for p, a in files.items()}
+
+    o, n = ident(old), ident(new)
+    return sorted(p for p, _ in n - o), sorted(p for p, _ in o - n)
 
 
 def incremental_agg_delta(
@@ -2156,16 +2123,21 @@ def upsert_ome_table(
     table: str,
     column: str = "ome_arrow",
 ) -> int:
+    """MERGE OME images into a :func:`create_ome_table` table by image
+    id: every image in ``updates`` replaces the stored image with the
+    same id or is inserted, through :func:`upsert_table` keyed on the
+    lifted ``image_id`` column.  Returns the committed version.
+
+    ``updates`` is materialized once, eagerly (``localCheckpoint``),
+    before the merge.  :func:`upsert_table` evaluates its updates
+    twice (key probe, then rewrite), and for a streaming
+    ``foreachBatch`` sink each evaluation would re-run the image
+    decode plan; one eager local copy of a micro-batch — O(new data)
+    by contract — is the source materialization a Delta MERGE
+    performs too."""
     flat = updates.select(
         F.col(f"{column}.id").alias("image_id"), F.col(column)
     )
-    # Materialize the batch ONCE (r14): upsert_table evaluates its
-    # updates relation twice (key probe, rewrite), and in the
-    # streaming foreachBatch sink each evaluation re-runs the image
-    # DECODE plan — measured ~0.9 s of scan + Python-worker job
-    # overhead per extra pass at 50-image batches.  A micro-batch is O(new-data) by contract, so one
-    # eager local materialization is bounded at any scale (the same
-    # source-materialization a Delta MERGE performs).
     return upsert_table(
         spark, flat.localCheckpoint(eager=True), table, key="image_id"
     )
@@ -2250,36 +2222,17 @@ def restore_table(
             f"cannot restore {table} to v{version}: {len(missing)} "
             f"file(s) already vacuumed (e.g. {missing[0]})"
         )
-    new_version = cur["version"] + 1
-    _ABSENT = object()
-    cur_ids = {
-        p: a.get("dv", {}).get("path") for p, a in cur["files"].items()
-    }
-    tgt_ids = {
-        p: a.get("dv", {}).get("path") for p, a in target["files"].items()
-    }
-    actions: list[dict[str, Any]] = [
-        {"add": target["files"][p]}
-        for p, d in tgt_ids.items()
-        if cur_ids.get(p, _ABSENT) != d
-    ] + [
-        {"remove": {"path": p}}
-        for p in cur_ids
-        if p not in tgt_ids
-    ]
-    entry: dict[str, Any] = {
-        "version": new_version,
-        "operation": "restore",
-        "actions": actions,
-    }
-    if target["schema"] != cur["schema"]:
-        entry["schema"] = target["schema"]
-    if target["properties"] != cur["properties"]:
+    added, removed = _file_diff(cur["files"], target["files"])
+    return _commit_files(
+        table, cur, "restore",
+        removes=[p for p in removed if p not in target["files"]],
+        adds=[target["files"][p] for p in added],
         # properties merge key-by-key; explicit None would not delete,
         # so restore overwrites changed/added keys to the target values
-        entry["properties"] = target["properties"]
-    _commit(table, new_version, entry)
-    return new_version
+        schema=target["schema"] if target["schema"] != cur["schema"] else None,
+        properties=(target["properties"]
+                    if target["properties"] != cur["properties"] else None),
+    )
 
 
 def sync_table(
@@ -2308,25 +2261,20 @@ def sync_table(
     sync).  Cost scales with the scope\'s touched files, not table
     size — the same pruning contract as MERGE/DELETE."""
     snap = _resolve_snapshot(table)
-    _check_schema(source, snap, table)
+    _check_schema(source.schema, snap, table)
     _enforce_constraints(source, snap, table)
-    version = snap["version"] + 1
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
     cols = [f.name for f in schema.fields]
     if scope:
-        bad = source.filter(f"NOT ({scope})").limit(1).count()
+        bad = source.filter(~_matches(scope)).limit(1).count()
         if bad:
             raise TableLogError(
                 f"sync_table: source rows violate scope {scope!r}"
             )
     touched = _prune(snap["files"], prune_predicates)
-    existing = (
-        _scan(spark, table, snap["files"], touched, schema)
-        if touched
-        else spark.createDataFrame([], schema)
-    )
-    in_scope = existing.filter(scope) if scope else existing
-    keep = existing.filter(f"NOT ({scope})") if scope else None
+    existing = _scan(spark, table, snap["files"], touched, schema)
+    in_scope = existing.filter(_matches(scope)) if scope else existing
+    keep = existing.filter(~_matches(scope)) if scope else None
     src = source.select(cols)
     # commit-entry stats via the key join (metadata only)
     old_keys = in_scope.select(F.col(key).alias("__k")).distinct()
@@ -2335,21 +2283,10 @@ def sync_table(
     n_ins = new_keys.join(old_keys, "__k", "left_anti").count()
     n_del = old_keys.join(new_keys, "__k", "left_anti").count()
     new_content = keep.unionByName(src) if keep is not None else src
-    adds = _write_data_files(new_content, table, version, _bloom_cols(snap))
-    actions = [{"add": a} for a in adds]
-    actions += [{"remove": {"path": p}} for p in touched]
-    _commit(
-        table,
-        version,
-        {
-            "version": version,
-            "operation": "sync",
-            "stats": {"updated": n_upd, "inserted": n_ins,
-                      "deleted": n_del},
-            "actions": actions,
-        },
+    return _commit_files(
+        table, snap, "sync", new_content, touched,
+        stats={"updated": n_upd, "inserted": n_ins, "deleted": n_del},
     )
-    return version
 
 
 def clone_table(
@@ -2393,7 +2330,7 @@ def clone_table(
     abs_src = os.path.abspath(source)
     abs_tgt = os.path.abspath(target)
     os.makedirs(abs_tgt, exist_ok=True)
-    actions: list[dict[str, Any]] = []
+    adds: list[dict[str, Any]] = []
     for rel, add in snap["files"].items():
         add = _copy.deepcopy(add)
         dv = add.get("dv")
@@ -2411,7 +2348,7 @@ def clone_table(
                 os.path.join(abs_src, rel), os.path.join(abs_tgt, local)
             )
             add["path"] = local
-        actions.append({"add": add})
+        adds.append(add)
     props = dict(snap["properties"])
     props.update(
         {
@@ -2420,18 +2357,10 @@ def clone_table(
             "clone.shallow": "true" if shallow else "false",
         }
     )
-    _commit(
-        target,
-        0,
-        {
-            "version": 0,
-            "operation": "clone",
-            "schema": snap["schema"],
-            "properties": props,
-            "actions": actions,
-        },
+    return _commit_files(
+        target, _NO_TABLE, "clone", adds=adds, schema=snap["schema"],
+        properties=props,
     )
-    return 0
 
 
 def vacuum_table(

@@ -268,57 +268,17 @@ class _LogWriterBase:
             T.StructType.fromJson(json.loads(self.schema_json))
         ))
 
-    def _check_schema(self, snap) -> None:
-        from ome_arrow_spark.sources.table_log import TableLogError
-
-        want = T.StructType.fromJson(json.loads(snap["schema"]))
-        got = T.StructType.fromJson(json.loads(self.schema_json))
-        if {(f.name, f.dataType.simpleString()) for f in want.fields} != {
-            (f.name, f.dataType.simpleString()) for f in got.fields
-        }:
-            raise TableLogError(
-                f"schema mismatch writing to {self.table}: table has "
-                f"{want.simpleString()}, stream has {got.simpleString()}"
-            )
-
-    def _publish(self, adds, extra_props=None, overwrite=False) -> None:
-        """Atomic commit with blind-append race retry; creates the
-        table (v0 + schema) when absent."""
+    def _publish(self, adds, operation="append", **entry_fields):
+        """Commit the tasks' files through the table log's blind-append
+        loop (creating the table when absent); None when the batch
+        was a replay."""
         from ome_arrow_spark.sources import table_log as tl
 
-        for attempt in range(20):
-            if tl.current_version(self.table) is None:
-                entry = {
-                    "version": 0,
-                    "operation": "create",
-                    "schema": self.schema_json,
-                    "properties": dict(extra_props or {}),
-                    "actions": [{"add": a} for a in adds],
-                }
-                version = 0
-            else:
-                snap = tl._resolve_snapshot(self.table)
-                self._check_schema(snap)
-                version = snap["version"] + 1
-                actions = [{"add": a} for a in adds]
-                if overwrite:
-                    actions += [
-                        {"remove": {"path": p}} for p in snap["files"]
-                    ]
-                entry = {
-                    "version": version,
-                    "operation": "overwrite" if overwrite else "append",
-                    "actions": actions,
-                }
-                if extra_props:
-                    entry["properties"] = dict(extra_props)
-            try:
-                tl._commit(self.table, version, entry)
-                return
-            except tl.ConcurrentCommit:
-                if attempt == 19:
-                    raise
-        raise AssertionError("unreachable")
+        return tl._blind_append(
+            self.table, adds, operation,
+            schema=T.StructType.fromJson(json.loads(self.schema_json)),
+            **entry_fields,
+        )
 
 
 class _LogBatchWriter(_LogWriterBase, DataSourceWriter):
@@ -328,7 +288,10 @@ class _LogBatchWriter(_LogWriterBase, DataSourceWriter):
 
     def commit(self, messages):
         os.makedirs(self.table, exist_ok=True)
-        self._publish(self._adds(messages), overwrite=self.overwrite)
+        self._publish(
+            self._adds(messages),
+            "overwrite" if self.overwrite else "append",
+        )
 
 
 class _LogStreamWriter(_LogWriterBase, DataSourceStreamWriter):
@@ -345,21 +308,10 @@ class _LogStreamWriter(_LogWriterBase, DataSourceStreamWriter):
         self.txn_app = txn_app
 
     def commit(self, messages, batchId: int) -> None:
-        from ome_arrow_spark.sources import table_log as tl
-
         os.makedirs(self.table, exist_ok=True)
-        adds = self._adds(messages)
-        if self.txn_app:
-            key = f"txn.{self.txn_app}"
-            if tl.current_version(self.table) is not None:
-                snap = tl._resolve_snapshot(self.table)
-                prev = snap["properties"].get(key)
-                if prev is not None and int(prev) >= batchId:
-                    self.abort(messages)  # replayed batch: drop files
-                    return
-            self._publish(adds, extra_props={key: str(batchId)})
-        else:
-            self._publish(adds)
+        props = {f"txn.{self.txn_app}": str(batchId)} if self.txn_app else None
+        if self._publish(self._adds(messages), properties=props) is None:
+            self.abort(messages)  # replayed batch: drop files
 
     def abort(self, messages, batchId: int | None = None) -> None:
         _LogWriterBase.abort(self, messages)

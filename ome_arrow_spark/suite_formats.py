@@ -888,7 +888,7 @@ def table_multi_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "coordinator_version": tl._resolve_snapshot(facts_path)["version"]
         + 1,
     }
-    tl._stage_participant(index_abs, stale_adds, txn_ref, 5)
+    tl._stage_participant(index_abs, stale_adds, txn_ref)
     # ... and a normal append of batch C takes the coordinator slot,
     # aborting the staged entry permanently
     tl.append_table(spark, batch(2), facts_path)

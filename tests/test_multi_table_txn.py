@@ -59,7 +59,7 @@ def _stage_only(spark, coord, part, batch):
         "coordinator": os.path.abspath(coord),
         "coordinator_version": cv,
     }
-    v = tl._stage_participant(os.path.abspath(part), adds, txn, 5)
+    v = tl._stage_participant(os.path.abspath(part), adds, txn)
     return v, cv
 
 

@@ -1050,3 +1050,143 @@ class TestIdempotentAppend:
             for r in tl.read_table(spark, tdir).select("image_id").collect()
         }
         assert len(ids) == 2 and "multi-channel" in ids
+
+
+def _disk_files(table):
+    """Data files and deletion-vector sidecars on disk, table-relative."""
+    out = set()
+    for root, dirs, names in os.walk(table):
+        dirs[:] = [d for d in dirs if d != tl.LOG_DIR]
+        rel = os.path.relpath(root, table)
+        out.update(n if rel == "." else f"{rel}/{n}" for n in names)
+    return out
+
+
+def _seam_ops(spark, table):
+    """Every data-writing table operation, with the history row
+    ``(operation, added_files, removed_files)`` it commits on a 4-file
+    table of 200 rows range-clustered on ``k``."""
+    upd = _base(spark, 0).union(
+        spark.createDataFrame([(3, -1, "u"), (150, -1, "u"), (500, -1, "u")],
+                              "k long, v long, s string")
+    )
+    keys = spark.createDataFrame([(5,), (120,)], "k long")
+    src = _base(spark, 40).withColumn("v", F.lit(-7).cast("long")).coalesce(1)
+    return {
+        "upsert": (lambda: tl.upsert_table(spark, upd, table, key="k"),
+                   ("upsert", 1, 2)),
+        "delete_rewrite": (
+            lambda: tl.delete_from_table(spark, table, "k < 20"),
+            ("delete", 4, 4),
+        ),
+        "delete_dv": (
+            lambda: tl.delete_from_table(spark, table, "k < 20", mode="dv"),
+            ("delete", 1, 0),
+        ),
+        "key_delete": (
+            lambda: tl.delete_keys_from_table(spark, table, keys, key="k"),
+            ("delete", 1, 2),
+        ),
+        "compact": (lambda: tl.compact_table(spark, table), ("compact", 1, 4)),
+        "recluster": (lambda: tl.recluster_table(spark, table, "v", 2),
+                      ("recluster", 2, 4)),
+        "zorder": (
+            lambda: tl.optimize_table(spark, table, zorder_by=["k", "v"]),
+            ("zorder", 2, 4),
+        ),
+        "sync": (lambda: tl.sync_table(spark, src, table, key="k",
+                                       scope="k < 50"),
+                 ("sync", 4, 4)),
+        "append": (
+            lambda: tl.append_table(spark, _base(spark, 5).coalesce(1), table),
+            ("append", 1, 0),
+        ),
+    }
+
+
+class TestCommitSeam:
+    """Every write ends in one commit helper: a crash between the data
+    write and the commit leaves the table untouched and only
+    vacuum-able files behind."""
+
+    @pytest.mark.parametrize(
+        "op",
+        ["upsert", "delete_rewrite", "delete_dv", "key_delete", "compact",
+         "recluster", "zorder", "sync", "append"],
+    )
+    def test_crash_between_write_and_commit(self, spark, tdir, op,
+                                            monkeypatch):
+        tl.create_table(spark, _base(spark, 200).repartitionByRange(4, "k"),
+                        tdir)
+        before_rows = _sorted(tl.read_table(spark, tdir))
+        before_disk = _disk_files(tdir)
+        run, (name, n_add, n_rm) = _seam_ops(spark, tdir)[op]
+
+        def _crash(*_a, **_k):
+            raise RuntimeError("crash before commit")
+
+        monkeypatch.setattr(tl, "_commit", _crash)
+        with pytest.raises(RuntimeError, match="crash before commit"):
+            run()
+        monkeypatch.undo()
+        written = _disk_files(tdir) - before_disk
+        assert written  # the data files had landed
+        assert tl.current_version(tdir) == 0
+        assert _sorted(tl.read_table(spark, tdir)) == before_rows
+        assert set(tl.vacuum_table(tdir, retention_seconds=0)) >= written
+        assert _disk_files(tdir) == before_disk
+
+        assert run() == 1
+        h = tl.table_history(tdir)[-1]
+        assert (h["operation"], h["added_files"], h["removed_files"]) == (
+            name, n_add, n_rm
+        )
+
+    def test_null_predicate_matches_nothing(self, spark, tmp_path):
+        """A row whose predicate is NULL is not matched: both delete
+        modes keep it, and sync keeps it outside the scope."""
+        rows = [(1, 1), (2, 9), (3, None), (4, None)]
+
+        def table(name):
+            t = str(tmp_path / name)
+            tl.create_table(
+                spark, spark.createDataFrame(rows, "k long, v long"), t
+            )
+            return t
+
+        def keys(t):
+            return sorted(r["k"] for r in tl.read_table(spark, t).collect())
+
+        rw, dv = table("rw"), table("dv")
+        tl.delete_from_table(spark, rw, "v > 5")
+        tl.delete_from_table(spark, dv, "v > 5", mode="dv")
+        assert keys(rw) == keys(dv) == [1, 3, 4]
+
+        sy = table("sy")
+        tl.sync_table(
+            spark, spark.createDataFrame([(2, 10)], "k long, v long"), sy,
+            key="k", scope="v > 5",
+        )
+        assert sorted(
+            tuple(r) for r in tl.read_table(spark, sy).collect()
+        ) == [(1, 1), (2, 10), (3, None), (4, None)]
+        with pytest.raises(tl.TableLogError, match="violate scope"):
+            tl.sync_table(
+                spark, spark.createDataFrame([(5, None)], "k long, v long"),
+                sy, key="k", scope="v > 5",
+            )
+
+    def test_rewrite_to_no_rows_commits_no_file(self, spark, tdir):
+        """An emptied rewrite commits no 0-row file, so later MERGEs and
+        key deletes have nothing to rewrite."""
+        tl.create_table(spark, _base(spark, 100).repartition(2), tdir)
+        tl.delete_from_table(spark, tdir, "k >= 0")
+        assert tl.table_details(tdir)["num_files"] == 0
+        tl.delete_keys_from_table(
+            spark, tdir, spark.createDataFrame([(7,)], "k long"), key="k"
+        )
+        assert tl.table_history(tdir)[-1]["removed_files"] == 0
+        tl.upsert_table(spark, _base(spark, 3), tdir, key="k")
+        h = tl.table_history(tdir)[-1]
+        assert (h["added_files"], h["removed_files"]) == (1, 0)
+        assert _sorted(tl.read_table(spark, tdir)) == _sorted(_base(spark, 3))
