@@ -6,19 +6,21 @@ Two tiers:
 * ``record_to_numpy`` — one record on the driver (parity with the
   reference's eager API; used by export sinks and viewers).
 * ``densify_to_files`` — distributed: each image row becomes one tensor
-  inside an ``applyInPandas``/foreachPartition task writing .npy files;
-  executors hold one image at a time, never the table.
+  inside a ``mapInArrow`` task writing .npy files; executors hold one
+  Arrow batch of images at a time, never the table.
+
+``write_per_image`` is that task loop, shared by every per-image sink
+(``.npy`` here, ``tiff.to_tiff_dir``, ``zarr.to_zarr_dir``).
 """
 
 from __future__ import annotations
 
 import os
-from typing import Any
+from typing import Any, Callable
 
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def record_to_numpy(
@@ -51,6 +53,66 @@ def record_to_numpy(
     return out
 
 
+def write_per_image(
+    images: DataFrame,
+    out_dir: str,
+    write_one: Callable[[dict[str, Any], np.ndarray], str],
+    column: str = "ome_arrow",
+    dtype=np.uint16,
+    strict: bool = True,
+) -> list[str]:
+    """The one per-image sink loop: ``mapInArrow`` over
+    ``images.select(column)``; each row becomes a record
+    (``arrow_records.arrow_to_records``, pixels stay numpy views of the
+    Arrow buffer) and a dense volume (``record_to_numpy``), and
+    ``write_one(rec, vol)`` writes it and returns its path.  Returns the
+    written paths in row order.  Arrow, not ``.rdd``: the RDD bridge
+    boxes every pixel into a Python int (a 2048² T3·C2·Z8 image row is
+    ~200M ints ≈ 6 GB boxed, a worker OOM in tests/test_mega_image.py).
+
+    The image id names the file, so an id that is empty, ``.``/``..``
+    or not a bare file name (``a/b``, ``../x``) raises ``ValueError``
+    before anything is written for it.
+
+    .. warning::
+        ``out_dir`` is opened with plain ``os`` paths *on the executors*,
+        so on a multi-node cluster it must be a shared filesystem (NFS,
+        Lustre, a FUSE-mounted object store) visible at the same path on
+        every executor AND the driver — otherwise the files land on
+        executor-local disks and the returned paths are not
+        driver-accessible. Works unconditionally in local mode.
+    """
+    import pyarrow as pa
+
+    from ome_arrow_spark.sources.arrow_records import arrow_to_records
+
+    os.makedirs(out_dir, exist_ok=True)
+    out_schema = pa.schema([("path", pa.string())])
+
+    def write(batches):
+        for batch in batches:
+            paths = []
+            for rec in arrow_to_records(batch.column(0)):
+                image_id = rec["id"]
+                if (
+                    not image_id
+                    or image_id in (".", "..")
+                    or image_id != os.path.basename(image_id)
+                ):
+                    raise ValueError(
+                        f"image id {image_id!r} is not a bare file name; "
+                        f"refusing to write it under {out_dir!r}"
+                    )
+                vol = record_to_numpy(rec, dtype=dtype, strict=strict)
+                paths.append(write_one(rec, vol))
+            yield pa.RecordBatch.from_pydict({"path": paths}, schema=out_schema)
+
+    return [
+        r["path"]
+        for r in images.select(column).mapInArrow(write, "path string").collect()
+    ]
+
+
 def densify_to_files(
     images: DataFrame,
     out_dir: str,
@@ -60,28 +122,15 @@ def densify_to_files(
 ) -> list[str]:
     """Write one ``{image_id}.npy`` dense tensor per image, in
     parallel on the executors (one task per partition; images are
-    independent). Returns the written paths.
+    independent) through :func:`write_per_image`. Returns the written
+    paths."""
 
-    .. warning::
-        ``out_dir`` is opened with plain ``os`` paths *on the executors*,
-        so on a multi-node cluster it must be a shared filesystem (NFS,
-        Lustre, a FUSE-mounted object store) visible at the same path on
-        every executor AND the driver — otherwise the .npy files land on
-        executor-local disks and the returned paths are not
-        driver-accessible. Works unconditionally in local mode. For
-        object stores, swap ``np.save`` for an fsspec/boto client write
-        inside ``_write``; the Spark-side plan is unchanged.
-    """
-    os.makedirs(out_dir, exist_ok=True)
-    dtype = np.dtype(dtype_name)
+    def write_one(rec: dict[str, Any], vol: np.ndarray) -> str:
+        path = os.path.join(out_dir, f"{rec['id']}.npy")
+        np.save(path, vol)
+        return path
 
-    def _write(rows):
-        for row in rows:
-            rec = row[column].asDict(recursive=True)
-            arr = record_to_numpy(rec, dtype=dtype, strict=strict)
-            path = os.path.join(out_dir, f"{rec['id']}.npy")
-            np.save(path, arr)
-            yield (rec["id"], path)
-
-    pair = images.select(column).rdd.mapPartitions(_write).collect()
-    return [p for _, p in pair]
+    return write_per_image(
+        images, out_dir, write_one, column,
+        dtype=np.dtype(dtype_name), strict=strict,
+    )

@@ -1,7 +1,7 @@
 """Multimodal columns for training-data pipelines (BASELINE north
 star): image/audio/video as opaque ``binary`` columns with typed
 metadata, plus decode / feature-extract / resize / frame-sample
-operators over ``mapInPandas``.
+operators, all over one ``mapInArrow`` loop (``_map_media``).
 
 The media table schema:
 
@@ -22,10 +22,10 @@ signatures, output schemas — testable with SQL-derivable arithmetic.
 from __future__ import annotations
 
 import json
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -212,6 +212,54 @@ def media_table_from_dir(
     )
 
 
+def _map_media(
+    media: DataFrame,
+    ddl: str,
+    item_rows: Callable[[Any, bytes, str, np.ndarray, dict], list[dict]],
+    on_error: str = "fail",
+    error_row: Callable[[Any, bytes], dict] | None = None,
+) -> DataFrame:
+    """The one per-item loop of the media extractors: ``mapInArrow``
+    over ``(media_id, content)``; each blob is decoded once
+    (``decode_media``) and ``item_rows(media_id, blob, kind, arr, meta)``
+    returns its 0..n output rows as dicts (a missing key is null).
+    Batches are built against the Arrow twin of ``ddl``, so a batch with
+    no rows still carries the declared columns.
+
+    ``on_error`` governs decode failures — the codecs' documented
+    ``ValueError``/``NotImplementedError`` (truncated blob, unsupported
+    codec): ``"fail"`` propagates, ``"skip"`` drops the item, and
+    ``"row"`` (only where the caller gives ``error_row``) emits
+    ``error_row(media_id, blob)`` instead."""
+    modes = ("fail", "row", "skip") if error_row else ("fail", "skip")
+    if on_error not in modes:
+        raise ValueError(f"on_error must be {'/'.join(modes)}, got {on_error!r}")
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows: list[dict] = []
+            for mid, blob in zip(
+                batch.column("media_id").to_pylist(),
+                batch.column("content").to_pylist(),
+            ):
+                try:
+                    kind, arr, meta = decode_media(blob)
+                except (ValueError, NotImplementedError):
+                    if on_error == "fail":
+                        raise
+                    if on_error == "row":
+                        rows.append(error_row(mid, blob))
+                    continue
+                rows.extend(item_rows(mid, blob, kind, arr, meta))
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+    return media.select("media_id", "content").mapInArrow(run, schema=ddl)
+
+
 def media_features(media: DataFrame, on_error: str = "fail") -> DataFrame:
     """Per-item features: images → per-channel means; audio → duration
     + RMS; video → frame count + mean luma. One Arrow batch per task;
@@ -223,64 +271,34 @@ def media_features(media: DataFrame, on_error: str = "fail") -> DataFrame:
     corrupt blob out of 10⁹ costs one row instead of the job, ``"skip"``
     drops the item silently.  At 100 TB, "row" is the mode you want —
     the error rows ARE the corruption report (`WHERE kind = 'error'`)."""
-    if on_error not in ("fail", "row", "skip"):
-        raise ValueError(f"on_error must be fail/row/skip, got {on_error!r}")
-    schema = (
+
+    def item_rows(mid, blob, kind, arr, meta):
+        row = {"media_id": mid, "kind": kind, "n_bytes": len(blob)}
+        if kind == "image":
+            m = arr.reshape(-1, 3).mean(axis=0)
+            row.update(mean_r=float(m[0]), mean_g=float(m[1]), mean_b=float(m[2]))
+        elif kind == "audio":
+            x = arr.astype(np.float64)
+            row.update(
+                duration_s=float(arr.size / meta["sr"]),
+                rms=float(np.sqrt(np.mean(x * x))) if arr.size else 0.0,
+            )
+        else:
+            luma = arr.astype(np.float64).mean()
+            row.update(n_frames=int(arr.shape[0]), rms=float(luma))
+        return [row]
+
+    return _map_media(
+        media,
         "media_id long, kind string, n_bytes long, "
         "mean_r double, mean_g double, mean_b double, "
-        "duration_s double, rms double, n_frames int"
+        "duration_s double, rms double, n_frames int",
+        item_rows,
+        on_error,
+        error_row=lambda mid, blob: {
+            "media_id": mid, "kind": "error", "n_bytes": len(blob)
+        },
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    kind, arr, meta = decode_media(bytes(blob))
-                except (ValueError, NotImplementedError):
-                    if on_error == "fail":
-                        raise
-                    if on_error == "row":
-                        rows.append(
-                            {
-                                "media_id": int(mid),
-                                "kind": "error",
-                                "n_bytes": len(blob),
-                                "mean_r": None, "mean_g": None,
-                                "mean_b": None, "duration_s": None,
-                                "rms": None, "n_frames": None,
-                            }
-                        )
-                    continue
-                row = {
-                    "media_id": int(mid),
-                    "kind": kind,
-                    "n_bytes": len(blob),
-                    "mean_r": None, "mean_g": None, "mean_b": None,
-                    "duration_s": None, "rms": None, "n_frames": None,
-                }
-                if kind == "image":
-                    m = arr.reshape(-1, 3).mean(axis=0)
-                    row.update(mean_r=float(m[0]), mean_g=float(m[1]), mean_b=float(m[2]))
-                elif kind == "audio":
-                    x = arr.astype(np.float64)
-                    row.update(
-                        duration_s=float(arr.size / meta["sr"]),
-                        rms=float(np.sqrt(np.mean(x * x))) if arr.size else 0.0,
-                    )
-                else:
-                    luma = arr.astype(np.float64).mean()
-                    row.update(n_frames=int(arr.shape[0]), rms=float(luma))
-                rows.append(row)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "n_bytes", "mean_r", "mean_g",
-                    "mean_b", "duration_s", "rms", "n_frames",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(extract, schema=schema)
 
 
 def audio_features(media: DataFrame) -> DataFrame:
@@ -291,48 +309,37 @@ def audio_features(media: DataFrame) -> DataFrame:
     SQL-oracle-able; the centroid depends on float summation order, so
     driver queries pin it separately or drop it. Non-audio rows are
     skipped (not errors) so the operator composes with mixed tables."""
-    schema = (
+
+    def item_rows(mid, blob, kind, arr, meta):
+        if kind != "audio":
+            return []
+        x = arr.astype(np.float64)
+        sr = int(meta["sr"])
+        spec = np.abs(np.fft.rfft(x))
+        freqs = np.fft.rfftfreq(x.size, d=1.0 / sr)
+        denom = float(spec.sum())
+        return [
+            {
+                "media_id": mid,
+                "n_samples": int(x.size),
+                "sample_rate": sr,
+                "duration_s": float(x.size / sr),
+                "rms": float(np.sqrt(np.mean(x * x))) if x.size else 0.0,
+                "peak": float(np.abs(x).max()) if x.size else 0.0,
+                "zero_crossings": int(np.count_nonzero(x[:-1] * x[1:] < 0)),
+                "spectral_centroid_hz": (
+                    float((spec * freqs).sum() / denom) if denom else 0.0
+                ),
+            }
+        ]
+
+    return _map_media(
+        media,
         "media_id long, n_samples long, sample_rate int, "
         "duration_s double, rms double, peak double, "
-        "zero_crossings long, spectral_centroid_hz double"
+        "zero_crossings long, spectral_centroid_hz double",
+        item_rows,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                kind, arr, meta = decode_media(bytes(blob))
-                if kind != "audio":
-                    continue
-                x = arr.astype(np.float64)
-                sr = int(meta["sr"])
-                zc = int(np.count_nonzero(x[:-1] * x[1:] < 0))
-                spec = np.abs(np.fft.rfft(x))
-                freqs = np.fft.rfftfreq(x.size, d=1.0 / sr)
-                denom = float(spec.sum())
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "n_samples": int(x.size),
-                        "sample_rate": sr,
-                        "duration_s": float(x.size / sr),
-                        "rms": float(np.sqrt(np.mean(x * x))) if x.size else 0.0,
-                        "peak": float(np.abs(x).max()) if x.size else 0.0,
-                        "zero_crossings": zc,
-                        "spectral_centroid_hz": (
-                            float((spec * freqs).sum() / denom) if denom else 0.0
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "sample_rate", "duration_s",
-                    "rms", "peak", "zero_crossings", "spectral_centroid_hz",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(extract, schema=schema)
 
 
 def bilinear_resize(arr: np.ndarray, height: int, width: int) -> np.ndarray:
@@ -367,40 +374,26 @@ def resize_images(
     default) or ``"nearest"`` (index math, bit-predictable)."""
     if method not in ("bilinear", "nearest"):
         raise ValueError(f"method must be bilinear/nearest, got {method!r}")
-    schema = MEDIA_SCHEMA
 
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                kind, arr, _ = decode_media(bytes(blob))
-                if kind != "image":
-                    continue
-                if method == "bilinear":
-                    out = bilinear_resize(arr.astype(np.uint8), height, width)
-                else:
-                    ys = (np.arange(height) * arr.shape[0] // height).clip(0, arr.shape[0] - 1)
-                    xs = (np.arange(width) * arr.shape[1] // width).clip(0, arr.shape[1] - 1)
-                    out = arr[ys][:, xs]
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "kind": "image",
-                        "content": encode_fimg(out),
-                        "meta": {
-                            "width": width, "height": height,
-                            "n_frames": None, "sample_rate": None,
-                            "format": "fimg",
-                        },
-                    }
-                )
-            # pin columns: a batch with zero matching rows must still
-            # produce the declared 4-column frame (empty-batch contract)
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "content", "meta"]
-            )
+    def item_rows(mid, blob, kind, arr, meta):
+        if kind != "image":
+            return []
+        if method == "bilinear":
+            out = bilinear_resize(arr.astype(np.uint8), height, width)
+        else:
+            ys = (np.arange(height) * arr.shape[0] // height).clip(0, arr.shape[0] - 1)
+            xs = (np.arange(width) * arr.shape[1] // width).clip(0, arr.shape[1] - 1)
+            out = arr[ys][:, xs]
+        return [
+            {
+                "media_id": mid,
+                "kind": "image",
+                "content": encode_fimg(out),
+                "meta": {"width": width, "height": height, "format": "fimg"},
+            }
+        ]
 
-    return media.select("media_id", "content").mapInPandas(rs, schema=schema)
+    return _map_media(media, MEDIA_SCHEMA, item_rows)
 
 
 def resample_audio(media: DataFrame, target_sr: int) -> DataFrame:
@@ -409,78 +402,56 @@ def resample_audio(media: DataFrame, target_sr: int) -> DataFrame:
     dependency-free baseline (a windowed-sinc kernel slots into the
     same np.interp call site); non-audio rows are skipped so the
     operator composes with mixed tables."""
-    schema = MEDIA_SCHEMA
 
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                kind, arr, meta = decode_media(bytes(blob))
-                if kind != "audio":
-                    continue
-                sr = int(meta["sr"])
-                x = arr.astype(np.float64)
-                n_out = max(1, int(round(x.size * target_sr / sr)))
-                t_in = np.arange(x.size) / sr
-                t_out = np.arange(n_out) / target_sr
-                y = np.interp(t_out, t_in, x)
-                out = np.clip(np.rint(y), -32768, 32767).astype(np.int16)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "kind": "audio",
-                        "content": encode_faud(out, sample_rate=target_sr),
-                        "meta": {
-                            "width": None, "height": None,
-                            "n_frames": None, "sample_rate": target_sr,
-                            "format": "faud",
-                        },
-                    }
-                )
-            # pin columns: a batch with zero matching rows must still
-            # produce the declared 4-column frame (empty-batch contract)
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "content", "meta"]
-            )
+    def item_rows(mid, blob, kind, arr, meta):
+        if kind != "audio":
+            return []
+        sr = int(meta["sr"])
+        x = arr.astype(np.float64)
+        n_out = max(1, int(round(x.size * target_sr / sr)))
+        t_in = np.arange(x.size) / sr
+        t_out = np.arange(n_out) / target_sr
+        y = np.interp(t_out, t_in, x)
+        out = np.clip(np.rint(y), -32768, 32767).astype(np.int16)
+        return [
+            {
+                "media_id": mid,
+                "kind": "audio",
+                "content": encode_faud(out, sample_rate=target_sr),
+                "meta": {"sample_rate": target_sr, "format": "faud"},
+            }
+        ]
 
-    return media.select("media_id", "content").mapInPandas(rs, schema=schema)
+    return _map_media(media, MEDIA_SCHEMA, item_rows)
 
 
 def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
     """Video → one image row per sampled frame (frame_idx % every == 0)."""
-    schema = (
+
+    def item_rows(mid, blob, kind, arr, meta):
+        if kind != "video":
+            return []
+        return [
+            {
+                "media_id": mid,
+                "frame_idx": fi,
+                "kind": "image",
+                "content": encode_fimg(arr[fi]),
+                "meta": {
+                    "width": int(arr.shape[2]),
+                    "height": int(arr.shape[1]),
+                    "format": "fimg",
+                },
+            }
+            for fi in range(0, arr.shape[0], every)
+        ]
+
+    return _map_media(
+        media,
         "media_id long, frame_idx int, kind string, content binary, "
-        "meta struct<width:int, height:int, n_frames:int, sample_rate:int, format:string>"
+        "meta struct<width:int, height:int, n_frames:int, sample_rate:int, format:string>",
+        item_rows,
     )
-
-    def fs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                kind, arr, _ = decode_media(bytes(blob))
-                if kind != "video":
-                    continue
-                for fi in range(0, arr.shape[0], every):
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": fi,
-                            "kind": "image",
-                            "content": encode_fimg(arr[fi]),
-                            "meta": {
-                                "width": int(arr.shape[2]),
-                                "height": int(arr.shape[1]),
-                                "n_frames": None, "sample_rate": None,
-                                "format": "fimg",
-                            },
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "kind", "content", "meta"],
-            )
-
-    return media.select("media_id", "content").mapInPandas(fs, schema=schema)
 
 
 def synth_media_df(
@@ -557,46 +528,32 @@ def image_ahash(media: DataFrame, on_error: str = "fail") -> DataFrame:
     blocks.  Returned as TWO 32-bit halves (``ahash_hi``/``ahash_lo``)
     so every downstream bit operation (xor, popcount, band extraction)
     stays in small positive integers both here and in a SQL oracle —
-    no 2^63 overflow cliffs.  Non-image rows are skipped."""
-    schema = "media_id long, ahash_hi long, ahash_lo long"
+    no 2^63 overflow cliffs.  Non-image rows are skipped; ``on_error``
+    is ``"fail"`` or ``"skip"`` for undecodable blobs."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    kind, arr, _meta = decode_media(bytes(blob))
-                except Exception:
-                    if on_error == "fail":
-                        raise
-                    continue
-                if kind != "image":
-                    continue
-                g = arr.astype(np.int64).sum(axis=2) // 3
-                h, w = g.shape
-                if h % 8 == 0 and w % 8 == 0:
-                    blocks = (
-                        g.reshape(8, h // 8, 8, w // 8).sum(axis=(1, 3))
-                        // ((h // 8) * (w // 8))
-                    )
-                else:
-                    blocks = bilinear_resize(
-                        g[:, :, None].astype(np.float64), 8, 8
-                    )[:, :, 0].astype(np.int64)
-                mean = int(blocks.sum()) // 64
-                bits = (blocks > mean).astype(np.uint64).reshape(-1)
-                idx = np.arange(64, dtype=np.uint64)
-                hi = int((bits[32:] << (idx[:32])).sum())
-                lo = int((bits[:32] << (idx[:32])).sum())
-                rows.append(
-                    {"media_id": int(mid), "ahash_hi": hi, "ahash_lo": lo}
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "ahash_hi", "ahash_lo"]
+    def item_rows(mid, blob, kind, arr, meta):
+        if kind != "image":
+            return []
+        g = arr.astype(np.int64).sum(axis=2) // 3
+        h, w = g.shape
+        if h % 8 == 0 and w % 8 == 0:
+            blocks = (
+                g.reshape(8, h // 8, 8, w // 8).sum(axis=(1, 3))
+                // ((h // 8) * (w // 8))
             )
+        else:
+            blocks = bilinear_resize(
+                g[:, :, None].astype(np.float64), 8, 8
+            )[:, :, 0].astype(np.int64)
+        mean = int(blocks.sum()) // 64
+        bits = (blocks > mean).astype(np.uint64).reshape(-1)
+        idx = np.arange(64, dtype=np.uint64)
+        hi = int((bits[32:] << (idx[:32])).sum())
+        lo = int((bits[:32] << (idx[:32])).sum())
+        return [{"media_id": mid, "ahash_hi": hi, "ahash_lo": lo}]
 
-    return media.select("media_id", "content").mapInPandas(
-        extract, schema=schema
+    return _map_media(
+        media, "media_id long, ahash_hi long, ahash_lo long", item_rows, on_error
     )
 
 

@@ -1,4 +1,6 @@
-"""Decoded OME records → Arrow, the one conversion every ingest path uses.
+"""Decoded OME records ⇄ Arrow, the one conversion each way: every
+ingest path builds its batches with ``records_to_arrow_batch``, every
+per-image sink reads its batches back with ``arrow_to_records``.
 
 A record dict (built by ``numpy_ingest.to_ome_arrow``) becomes one
 element of the ``ome_arrow`` struct column.  The PLANES subtree is
@@ -94,3 +96,43 @@ def records_to_arrow_batch(
     if n == 0:
         top = pa.array([], type=struct_t)
     return pa.RecordBatch.from_arrays([top], [column])
+
+
+def arrow_to_records(
+    column: pa.Array | pa.ChunkedArray,
+) -> list[dict[str, Any] | None]:
+    """Inverse of :func:`records_to_arrow_batch`: an ``ome_arrow``
+    struct column → record dicts.  Each plane's ``pixels`` is a numpy
+    view into the column's one values buffer (no pixel is boxed); the
+    per-image metadata comes from ``to_pylist``.  A null struct cell
+    becomes ``None``."""
+    if isinstance(column, pa.ChunkedArray):
+        column = column.combine_chunks()
+    names = [f.name for f in column.type if f.name != "planes"]
+    meta = {name: column.field(name).to_pylist() for name in names}
+    planes = column.field("planes")
+    plane_offsets = planes.offsets.to_numpy()
+    plane_struct = planes.values
+    zs = plane_struct.field("z").to_numpy(zero_copy_only=False)
+    ts = plane_struct.field("t").to_numpy(zero_copy_only=False)
+    cs = plane_struct.field("c").to_numpy(zero_copy_only=False)
+    pixels = plane_struct.field("pixels")
+    pix_offsets = pixels.offsets.to_numpy()
+    pix_values = pixels.values.to_numpy(zero_copy_only=False)
+    records: list[dict[str, Any] | None] = []
+    for i, valid in enumerate(column.is_valid().to_pylist()):
+        if not valid:
+            records.append(None)
+            continue
+        rec = {name: meta[name][i] for name in names}
+        rec["planes"] = [
+            {
+                "z": int(zs[j]),
+                "t": int(ts[j]),
+                "c": int(cs[j]),
+                "pixels": pix_values[pix_offsets[j] : pix_offsets[j + 1]],
+            }
+            for j in range(plane_offsets[i], plane_offsets[i + 1])
+        ]
+        records.append(rec)
+    return records

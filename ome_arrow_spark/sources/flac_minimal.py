@@ -19,7 +19,7 @@ Scale shape: fixed-predictor reconstruction is repeated ``np.cumsum``
 integer ops (no per-bit python loop on the unary fast path); LPC
 reconstruction is the one genuinely sequential python loop and only
 runs for externally-encoded files.  Per-blob decode rides the media
-table's ``mapInPandas`` batches like every other codec here
+table's ``mapInArrow`` batches like every other codec here
 (operators/multimodal.py).
 
 Format reference: the public FLAC format specification

@@ -25,7 +25,7 @@ guessing at conformance.
 
 The coder is a per-symbol Python loop (~0.3-1 MB coded data /s/core) —
 inherent to adaptive arithmetic coding, same throughput class as the
-LZW fallback; fine for per-file task parallelism on the mapInPandas
+LZW fallback; fine for per-file task parallelism on the mapInArrow
 ingest path.
 
 All tables and procedures below follow the published T.81 spec:

@@ -28,7 +28,6 @@ from datetime import datetime
 from typing import Any
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -300,19 +299,6 @@ def from_tiff_stream(
     )
 
 
-def _arrow_cell_to_record(cell: Any) -> dict[str, Any]:
-    """Arrow→pandas struct cell → plain record dict: planes come back
-    as a numpy object array of dicts (ambiguous under ``or []``) and
-    pixels as numpy int arrays (already what the writers want)."""
-    rec = dict(cell)
-    pl = rec.get("planes")
-    rec["planes"] = list(pl) if pl is not None else None
-    rec["pixels_meta"] = dict(rec["pixels_meta"])
-    ch = rec["pixels_meta"].get("channels")
-    rec["pixels_meta"]["channels"] = list(ch) if ch is not None else None
-    return rec
-
-
 # ---------------------------------------------------------------------------
 # Sink (K3): per-image files written from executors
 # ---------------------------------------------------------------------------
@@ -326,9 +312,9 @@ def to_tiff_dir(
     predictor: bool = False,
     tile: tuple[int, int] | None = None,
 ) -> list[str]:
-    """Write one file per image from the executors (foreachPartition
-    pattern; the reference writes one image eagerly on one core,
-    export.py:219-228). Every volume becomes a REAL OME-TIFF via the
+    """Write one file per image from the executors through
+    ``densify.write_per_image`` (the reference writes one image eagerly
+    on one core, export.py:219-228). Every volume becomes a REAL OME-TIFF via the
     built-in encoder: multi-page TIFF with the OME-XML ImageDescription
     carrying (T,C,Z) dims, channel names, and physical sizes — pages in
     XYCZT order, readable by any OME-aware reader (and re-ingested
@@ -336,57 +322,38 @@ def to_tiff_dir(
     "packbits", "deflate", "jpeg"}, ``predictor`` and ``tile=(w, h)`` select the
     built-in codec matrix — the same options the reference forwards to
     tifffile (export.py:203-210)."""
-    from ome_arrow_spark.operators.densify import record_to_numpy
+    from ome_arrow_spark.operators.densify import write_per_image
     from ome_arrow_spark.sources.tiff_minimal import (
         build_ome_xml,
         encode_tiff_baseline,
     )
 
-    os.makedirs(out_dir, exist_ok=True)
-
-    # mapInPandas, not .rdd.mapPartitions: the RDD bridge pickles every
-    # pixel into a boxed Python int (a 2048² T3·C2·Z8 image row is
-    # ~200M ints ≈ 6 GB boxed — found by tests/test_mega_image.py as a
-    # worker OOM); the Arrow path ships the same row as ~800 MB of
-    # buffers and pixels arrive as numpy arrays.
-    def _write(batches):
-        for pdf in batches:
-            paths = []
-            for rec in pdf[column]:
-                rec = _arrow_cell_to_record(rec)
-                vol = record_to_numpy(rec)
-                names = [c["name"] for c in rec["pixels_meta"]["channels"]]
-                pm = rec["pixels_meta"]
-                t, c, z, y, x = vol.shape
-                xml = build_ome_xml(
-                    image_id=rec["id"],
-                    name=rec["name"],
-                    size_t=t, size_c=c, size_z=z, size_y=y, size_x=x,
-                    channel_names=names,
-                    physical_size_x=pm["physical_size_x"],
-                    physical_size_y=pm["physical_size_y"],
-                    physical_size_z=pm["physical_size_z"],
+    def write_one(rec: dict[str, Any], vol: np.ndarray) -> str:
+        pm = rec["pixels_meta"]
+        t, c, z, y, x = vol.shape
+        xml = build_ome_xml(
+            image_id=rec["id"],
+            name=rec["name"],
+            size_t=t, size_c=c, size_z=z, size_y=y, size_x=x,
+            channel_names=[ch["name"] for ch in pm["channels"]],
+            physical_size_x=pm["physical_size_x"],
+            physical_size_y=pm["physical_size_y"],
+            physical_size_z=pm["physical_size_z"],
+        )
+        # pages in XYCZT order (C fastest) to match the XML
+        pages = vol.transpose(0, 2, 1, 3, 4).reshape(t * z * c, y, x)
+        suffix = ".ome.tif" if (t > 1 or c > 1) else ".tif"
+        path = os.path.join(out_dir, f"{rec['id']}{suffix}")
+        with open(path, "wb") as f:
+            f.write(
+                encode_tiff_baseline(
+                    pages,
+                    description=xml,
+                    compression=compression,
+                    predictor=predictor,
+                    tile=tile,
                 )
-                # pages in XYCZT order (C fastest) to match the XML
-                pages = vol.transpose(0, 2, 1, 3, 4).reshape(t * z * c, y, x)
-                suffix = ".ome.tif" if (t > 1 or c > 1) else ".tif"
-                path = os.path.join(out_dir, f"{rec['id']}{suffix}")
-                with open(path, "wb") as f:
-                    f.write(
-                        encode_tiff_baseline(
-                            pages,
-                            description=xml,
-                            compression=compression,
-                            predictor=predictor,
-                            tile=tile,
-                        )
-                    )
-                paths.append(path)
-            yield pd.DataFrame({"path": pd.Series(paths, dtype=object)})
+            )
+        return path
 
-    return [
-        r["path"]
-        for r in images.select(column)
-        .mapInPandas(_write, "path string")
-        .collect()
-    ]
+    return write_per_image(images, out_dir, write_one, column)

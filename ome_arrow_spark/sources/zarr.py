@@ -14,10 +14,8 @@ bundled C codecs, already a hard engine dependency), v3 ``zarr.json``
 layouts with bytes+gzip/zstd/blosc codec chains and
 ``sharding_indexed`` shards (CRC-32C indexes), multiscale group attrs
 in either layout — no zarr package needed; byte- AND bit-shuffle
-filters both directions; only blosclz inner codecs still gate with
-``NotImplementedError``. The
-legacy FZARR test container (``header.json`` + one ``.bin`` per plane)
-remains readable.
+filters both directions; blosclz inner codecs decode through
+``blosclz_minimal``.
 
 The sink writes an NGFF-style multiscale pyramid: level k halves Y and
 X by mean-pooling (see operators/multiscale.py for the query-side LOD
@@ -25,7 +23,6 @@ operator; export.py:316-337 computes the same shapes)."""
 
 from __future__ import annotations
 
-import json
 import os
 from datetime import datetime
 from typing import Any
@@ -45,86 +42,8 @@ except ImportError:
     zarr = None
     HAVE_ZARR = False
 
-FZARR_HEADER = "header.json"
-
-
-def write_fzarr_store(
-    path: str,
-    vol: np.ndarray,
-    *,
-    image_id: str,
-    name: str | None = None,
-    channel_names: list[str] | None = None,
-    multiscale_levels: int = 1,
-    downscale_spatial_by: int = 2,
-) -> None:
-    """Write one FZARR store: level-0 planes plus mean-pooled pyramid
-    levels (shape halving mirrors export.py:316-337)."""
-    vol = np.asarray(vol)
-    if vol.ndim != 5:
-        raise ValueError("write_fzarr_store expects (T,C,Z,Y,X)")
-    os.makedirs(path, exist_ok=True)
-    t, c, z, y, x = vol.shape
-    levels = []
-    cur = np.clip(vol, 0, 65535).astype(np.int64)
-    for lvl in range(multiscale_levels):
-        ly, lx = cur.shape[-2], cur.shape[-1]
-        levels.append([int(s) for s in cur.shape])
-        lv_dir = os.path.join(path, str(lvl))
-        os.makedirs(lv_dir, exist_ok=True)
-        for ti in range(t):
-            for ci in range(c):
-                for zi in range(z):
-                    blob = cur[ti, ci, zi].astype("<u2").tobytes()
-                    with open(os.path.join(lv_dir, f"{ti}.{ci}.{zi}.bin"), "wb") as f:
-                        f.write(blob)
-        if lvl + 1 < multiscale_levels:
-            f_ = downscale_spatial_by
-            ny, nx = ly // f_, lx // f_
-            cur = (
-                cur[..., : ny * f_, : nx * f_]
-                .reshape(*cur.shape[:-2], ny, f_, nx, f_)
-                .sum(axis=(-3, -1))
-                // (f_ * f_)
-            )
-    header = {
-        "id": image_id,
-        "name": name or image_id,
-        "channel_names": channel_names,
-        "levels": levels,
-        "downscale": downscale_spatial_by,
-    }
-    with open(os.path.join(path, FZARR_HEADER), "w") as f:
-        json.dump(header, f)
-
-
 def decode_store(store_path: str, level: int = 0) -> dict[str, Any]:
     """One store directory → OME-Arrow record dict."""
-    hdr_path = os.path.join(store_path, FZARR_HEADER)
-    if os.path.exists(hdr_path):
-        with open(hdr_path) as f:
-            header = json.load(f)
-        shape = header["levels"][level]
-        t, c, z, y, x = shape
-        vol = np.zeros((t, c, z, y, x), dtype=np.int32)
-        lv_dir = os.path.join(store_path, str(level))
-        for ti in range(t):
-            for ci in range(c):
-                for zi in range(z):
-                    p = os.path.join(lv_dir, f"{ti}.{ci}.{zi}.bin")
-                    vol[ti, ci, zi] = (
-                        np.frombuffer(open(p, "rb").read(), dtype="<u2")
-                        .reshape(y, x)
-                        .astype(np.int32)
-                    )
-        return from_numpy(
-            vol,
-            dim_order="TCZYX",
-            image_id=header["id"],
-            name=header.get("name"),
-            channel_names=header.get("channel_names"),
-            acquisition_datetime=datetime(2025, 1, 1),
-        )
     if HAVE_ZARR:  # pragma: no cover - real NGFF path
         grp = zarr.open_group(store_path, mode="r")
         arr = np.asarray(grp[str(level)])
@@ -160,10 +79,9 @@ def decode_store(store_path: str, level: int = 0) -> dict[str, Any]:
             acquisition_datetime=datetime(2025, 1, 1),
         )
     raise NotImplementedError(
-        f"Cannot decode {store_path!r}: not an FZARR store and not a Zarr "
-        "v2/v3 store root (blosclz-compressed stores need the zarr "
-        "package; v2 raw/zlib/gzip/zstd/lz4/blosc and v3 "
-        "bytes+gzip/zstd/blosc incl. sharded decode built-in)."
+        f"Cannot decode {store_path!r}: not a Zarr v2/v3 store root (v2 "
+        "raw/zlib/gzip/zstd/lz4/blosc and v3 bytes+gzip/zstd/blosc incl. "
+        "sharded decode built-in)."
     )
 
 
@@ -245,7 +163,6 @@ def to_zarr_dir(
     column: str = "ome_arrow",
     multiscale_levels: int = 1,
     downscale_spatial_by: int = 2,
-    store_format: str = "ngff",
     compressor: str | None = "zlib",
     compression_level: int = 1,
     chunks: tuple[int, ...] | None = None,
@@ -253,75 +170,39 @@ def to_zarr_dir(
     zarr_format: int = 2,
     shards: tuple[int, ...] | None = None,
 ) -> list[str]:
-    """One store per image, written from executors.
-
-    ``store_format="ngff"`` (default) writes REAL Zarr / OME-NGFF stores
-    via the built-in codec — ``zarr_format`` ∈ {2, 3} picks the store
-    layout (the reference's exporter exposes the same switch,
-    export.py:361), ``compressor`` ∈ {None, "zlib", "gzip", "blosc", "zstd", "lz4"}
-    and ``chunks`` select the codec matrix (blosc writes
-    zlib-inner-codec frames; zstd/lz4 ride pyarrow's bundled codecs); "fzarr" keeps the legacy test
-    container."""
-    from ome_arrow_spark.operators.densify import record_to_numpy
+    """One REAL Zarr / OME-NGFF store per image, written from executors
+    through ``densify.write_per_image`` via the built-in codec —
+    ``zarr_format`` ∈ {2, 3} picks the store layout (the reference's
+    exporter exposes the same switch, export.py:361), ``compressor`` ∈
+    {None, "zlib", "gzip", "blosc", "zstd", "lz4"} and ``chunks`` select
+    the codec matrix (blosc writes zlib-inner-codec frames; zstd/lz4
+    ride pyarrow's bundled codecs)."""
+    from ome_arrow_spark.operators.densify import write_per_image
     from ome_arrow_spark.sources.zarr_minimal import write_ngff_store
 
-    if store_format not in ("ngff", "fzarr"):
-        raise ValueError(f"unknown store_format {store_format!r}")
-    os.makedirs(out_dir, exist_ok=True)
+    def write_one(rec: dict[str, Any], vol: np.ndarray) -> str:
+        store = os.path.join(out_dir, f"{rec['id']}.zarr")
+        write_ngff_store(
+            store,
+            [
+                lv.astype("<u2")
+                for lv in build_pyramid(
+                    vol,
+                    multiscale_levels,
+                    downscale_spatial_by,
+                    downscale_z=downscale_z,
+                )
+            ],
+            image_id=rec["id"],
+            name=rec["name"],
+            channel_names=[ch["name"] for ch in rec["pixels_meta"]["channels"]],
+            downscale=downscale_spatial_by,
+            compressor=compressor,
+            compression_level=compression_level,
+            chunks=chunks,
+            zarr_format=zarr_format,
+            shards=shards,
+        )
+        return store
 
-    # mapInPandas, not .rdd.mapPartitions — same rationale as
-    # to_tiff_dir: the RDD bridge boxes every pixel into a Python int
-    # (mega-image rows OOM the worker); Arrow keeps pixels numpy.
-    from ome_arrow_spark.sources.tiff import _arrow_cell_to_record
-
-    def _write(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            stores = []
-            for cell in pdf[column]:
-                rec = _arrow_cell_to_record(cell)
-                vol = record_to_numpy(rec)
-                store = os.path.join(out_dir, f"{rec['id']}.zarr")
-                names = [c["name"] for c in rec["pixels_meta"]["channels"]]
-                if store_format == "ngff":
-                    write_ngff_store(
-                        store,
-                        [
-                            lv.astype("<u2")
-                            for lv in build_pyramid(
-                                vol,
-                                multiscale_levels,
-                                downscale_spatial_by,
-                                downscale_z=downscale_z,
-                            )
-                        ],
-                        image_id=rec["id"],
-                        name=rec["name"],
-                        channel_names=names,
-                        downscale=downscale_spatial_by,
-                        compressor=compressor,
-                        compression_level=compression_level,
-                        chunks=chunks,
-                        zarr_format=zarr_format,
-                        shards=shards,
-                    )
-                else:
-                    write_fzarr_store(
-                        store,
-                        vol,
-                        image_id=rec["id"],
-                        name=rec["name"],
-                        channel_names=names,
-                        multiscale_levels=multiscale_levels,
-                        downscale_spatial_by=downscale_spatial_by,
-                    )
-                stores.append(store)
-            yield _pd.DataFrame({"store": _pd.Series(stores, dtype=object)})
-
-    return [
-        r["store"]
-        for r in images.select(column)
-        .mapInPandas(_write, "store string")
-        .collect()
-    ]
+    return write_per_image(images, out_dir, write_one, column)

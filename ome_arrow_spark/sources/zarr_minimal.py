@@ -100,7 +100,7 @@ def _inner_decompress(fmt: int, seg: bytes, out_size: int) -> bytes:
             return bytes(codec.decompress(seg, decompressed_size=out_size))
     raise NotImplementedError(
         f"blosc inner codec {_BLOSC_FORMATS.get(fmt, fmt)!r} unavailable "
-        "(blosclz needs numcodecs; zstd/lz4/snappy need pyarrow)"
+        "(zstd/lz4/snappy need pyarrow's bundled codecs)"
     )
 
 
@@ -347,8 +347,8 @@ def _decompress(
     if cid == "gzip":
         return gzip.decompress(blob)
     if cid == "blosc":
-        # the frame header is self-describing; the one unsupported
-        # inner codec (blosclz) raises NotImplementedError inside
+        # the frame header is self-describing; an unavailable inner
+        # codec raises NotImplementedError inside
         return blosc_decode(blob)
     if cid == "zstd":
         codec = _pa_codec("zstd")

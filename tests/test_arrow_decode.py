@@ -200,3 +200,55 @@ def test_stack_pattern_matches_reference_conversion(spark, tmp_path):
     )
     assert want.max() == 65535
     assert _key(got) == _key(ref)
+
+
+def test_arrow_to_records_inverts_records_to_arrow_batch():
+    """records → Arrow → records keeps ids, metadata, plane keys and
+    pixels, for a multi-plane record, a zero-plane record, a sliced
+    batch and a zero-record batch."""
+    from datetime import datetime
+
+    from ome_arrow_spark.sources.arrow_records import (
+        arrow_to_records,
+        ome_arrow_field_type,
+        records_to_arrow_batch,
+    )
+    from ome_arrow_spark.sources.numpy_ingest import from_numpy
+
+    ome_type = ome_arrow_field_type()
+    rng = np.random.default_rng(5)
+    recs = [
+        from_numpy(
+            rng.integers(0, 65536, size=(2, 3, 2, 4, 5)), image_id="multi",
+            name="nm", channel_names=["a", "b", "c"], physical_size_x=0.5,
+            acquisition_datetime=datetime(2025, 1, 1),
+        ),
+        {**from_numpy(np.zeros((1, 1, 1, 2, 2)), image_id="noplanes"), "planes": []},
+        from_numpy(rng.integers(0, 65536, size=(1, 1, 3, 3, 3)), image_id="last"),
+    ]
+    batch = records_to_arrow_batch(recs, "ome_arrow", ome_type)
+
+    back = arrow_to_records(batch.column(0))
+    assert [r["id"] for r in back] == ["multi", "noplanes", "last"]
+    for want, got in zip(recs, back):
+        for k in ("type", "version", "name", "pixels_meta", "masks"):
+            assert got[k] == want[k], k
+        assert [(p["z"], p["t"], p["c"]) for p in got["planes"]] == [
+            (p["z"], p["t"], p["c"]) for p in want["planes"]
+        ]
+        for pw, pg in zip(want["planes"], got["planes"]):
+            assert isinstance(pg["pixels"], np.ndarray)
+            np.testing.assert_array_equal(pg["pixels"], pw["pixels"])
+    assert back[0]["acquisition_datetime"].replace(tzinfo=None) == datetime(2025, 1, 1)
+    assert back[1]["planes"] == []
+    assert records_to_arrow_batch(back, "ome_arrow", ome_type).equals(batch)
+
+    # a sliced batch (non-zero Arrow offsets) reads only its own rows
+    sliced = arrow_to_records(batch.slice(1).column(0))
+    assert [r["id"] for r in sliced] == ["noplanes", "last"]
+    np.testing.assert_array_equal(
+        sliced[1]["planes"][2]["pixels"], recs[2]["planes"][2]["pixels"]
+    )
+
+    empty = records_to_arrow_batch([], "ome_arrow", ome_type)
+    assert arrow_to_records(empty.column(0)) == []

@@ -182,7 +182,7 @@ class TestDecodeContracts:
     @pytest.mark.parametrize("codec", ["png", "gif", "wav"])
     def test_media_codec_truncation_contract(self, codec):
         """Truncated media blobs raise ValueError across every built-in
-        codec — mapInPandas error handling depends on the type."""
+        codec — the media extractors' on_error handling depends on the type."""
         from ome_arrow_spark.sources.gif_minimal import gif_decode, gif_encode
         from ome_arrow_spark.sources.png_minimal import png_decode, png_encode
         from ome_arrow_spark.sources.wav_minimal import wav_decode, wav_encode
@@ -226,6 +226,8 @@ class TestDecodeContracts:
             MM.media_features(mixed).collect()  # default: fail
         with pytest.raises(ValueError, match="on_error"):
             MM.media_features(mixed, on_error="bogus")
+        with pytest.raises(ValueError, match="on_error"):
+            MM.image_ahash(mixed, on_error="bogus")
 
     def test_resample_audio_preserves_tone(self, spark):
         """440 Hz sine at 16 kHz resampled to 8 kHz: duration kept,

@@ -3,6 +3,8 @@ and distributed table tiers), NumPy ingest, FTIF binaryFile ingest."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -115,6 +117,42 @@ def test_densify_matches_reference_model():
     assert out[0, 0, 0, 3, 4] == 0
 
 
+def test_densify_to_files_matches_record_to_numpy(spark, tmp_path):
+    """Each written .npy equals ``record_to_numpy`` of its row;
+    ``strict=False`` zero-pads a short plane, the default refuses it."""
+    from ome_arrow_spark.meta import ome_images_schema
+    from ome_arrow_spark.operators.densify import densify_to_files
+
+    recs = [synth.golden_record("a", 2, 1, 3, 4, 5), synth.golden_record("b", 1, 2, 1, 3, 3)]
+    short = synth.golden_record("short", 1, 1, 2, 4, 4)
+    short["planes"][1]["pixels"] = short["planes"][1]["pixels"][:-3]
+    def frame(records):
+        # createDataFrame's verifier rejects numpy pixel arrays
+        return spark.createDataFrame(
+            [
+                ({**r, "planes": [{**p, "pixels": p["pixels"].tolist()} for p in r["planes"]]},)
+                for r in records
+            ],
+            ome_images_schema(),
+        )
+
+    imgs = frame(recs)
+    paths = densify_to_files(imgs, str(tmp_path / "npy"))
+    assert sorted(os.path.basename(p) for p in paths) == ["a.npy", "b.npy"]
+    for rec in recs:
+        got = np.load(str(tmp_path / "npy" / f"{rec['id']}.npy"))
+        assert got.dtype == np.uint16
+        np.testing.assert_array_equal(got, record_to_numpy(rec))
+
+    short_df = frame([short])
+    with pytest.raises(Exception, match="expected 16"):
+        densify_to_files(short_df, str(tmp_path / "strict"))
+    (path,) = densify_to_files(short_df, str(tmp_path / "pad"), strict=False)
+    got = np.load(path)
+    np.testing.assert_array_equal(got, record_to_numpy(short, strict=False))
+    assert got[0, 0, 1, 3, 1:].tolist() == [0, 0, 0]
+
+
 def test_ftif_binaryfile_ingest(spark, tmp_path):
     d = tmp_path / "tiffs"
     d.mkdir()
@@ -153,6 +191,23 @@ def test_tiff_sink_roundtrip(spark, tmp_path):
     names = back.select(F.col("ome_arrow.pixels_meta.channels.name")).first()[0]
     orig = imgs.select(F.col("ome_arrow.pixels_meta.channels.name")).first()[0]
     assert names == orig
+
+
+def test_sink_rejects_ids_that_are_not_file_names(spark, tmp_path):
+    """The image id names the output file: an id that would leave the
+    output directory or name a subdirectory fails the write, naming the
+    id, and nothing lands outside the directory."""
+    imgs = synth.golden_images_df(spark, ids=["nviz-2ch-single"], include_conftest=False)
+    out = tmp_path / "sink"
+    for bad in ["../x", "a/b", "..", ""]:
+        renamed = imgs.withColumn(
+            "ome_arrow", F.col("ome_arrow").withField("id", F.lit(bad))
+        )
+        with pytest.raises(Exception, match="ValueError") as err:
+            TF.to_tiff_dir(renamed, str(out))
+        assert repr(bad) in str(err.value)
+    assert list(out.iterdir()) == []
+    assert not list(tmp_path.glob("x*"))
 
 
 def test_tiff_decode_gates():

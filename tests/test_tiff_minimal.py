@@ -304,7 +304,7 @@ def test_tifffile_branch_metadata_parity(monkeypatch):
 
 def test_from_tiff_dir_real_bytes_matches_from_numpy(spark, tmp_path):
     """End-to-end: hand-rolled REAL .tif files through the distributed
-    binaryFile+mapInPandas path; pixels/planes identical to building
+    binaryFile+mapInArrow path; pixels/planes identical to building
     the record from the same array via from_numpy."""
     rng = np.random.default_rng(11)
     d = tmp_path / "real_tiffs"
