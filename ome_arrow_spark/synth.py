@@ -54,8 +54,10 @@ _SYNTH_DT = datetime(2025, 1, 1, 0, 0, 0)
 
 def pixel_plane(t: int, c: int, z: int, size_y: int, size_x: int) -> np.ndarray:
     """Deterministic flattened Y×X plane (FIXTURES.md formula)."""
-    base = t * 31 + c * 17 + z * 7
-    return ((base + np.arange(size_y * size_x, dtype=np.int64)) % 65536).astype(np.int32)
+    plane = np.arange(size_y * size_x, dtype=np.int64)
+    plane += t * 31 + c * 17 + z * 7  # in place: an 8192² plane is 0.5 GB
+    plane %= 65536
+    return plane.astype(np.int32)
 
 
 def golden_record(
