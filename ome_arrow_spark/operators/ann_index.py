@@ -73,7 +73,7 @@ def build_ivf_index(
 
     if centroids is not None or train == "sample":
         from ome_arrow_spark.operators import quantizer as QZ
-        from ome_arrow_spark.operators.dedup import spread_small_input
+        from ome_arrow_spark.plans import tuning
 
         if centroids is not None:
             import numpy as np
@@ -86,10 +86,10 @@ def build_ivf_index(
             )
         # The nearest-centroid assignment pass runs in the INPUT's
         # partitions; spread a small-split corpus to slots width
-        # first (dedup.spread_small_input — no-op at scale, per-row
+        # first (tuning.spread_small_input — no-op at scale, per-row
         # assign is partition-independent so stored rows are
         # unchanged).
-        listed = spread_small_input(corpus, corpus_id).select(
+        listed = tuning.spread_small_input(corpus, corpus_id).select(
             QZ.nearest_udf(cents)(F.col(vec)).alias("centroid_id"),
             F.col(corpus_id).alias("cid"),
             F.col(vec).alias("embedding"),
@@ -99,17 +99,12 @@ def build_ivf_index(
         # child, paying the assignment UDF twice (r14).  Unlike the PQ
         # builds' thin codes, IVF lists carry the raw embeddings, so
         # the checkpoint is guarded by the same splits-vs-slots test
-        # as spread_small_input: locally (few splits) one eager
+        # as the spread (tuning.few_splits): locally one eager
         # materialization of a few MB removes the duplicate pass; at
-        # corpus scale (splits >= slots) the guard is a NO-OP and the
-        # one-time extra assign pass is the cheaper side of the trade
-        # vs a full corpus copy in executor storage.
-        sc = corpus.sparkSession.sparkContext
-        try:
-            small = corpus.rdd.getNumPartitions() < sc.defaultParallelism
-        except Exception:  # noqa: BLE001 — planning-only probe
-            small = False
-        if small:
+        # corpus scale the guard is a NO-OP and the one-time extra
+        # assign pass is the cheaper side of the trade vs a full
+        # corpus copy in executor storage.
+        if tuning.few_splits(corpus):
             listed = listed.localCheckpoint(eager=True)
         cent_map = {j: [float(x) for x in cents[j]] for j in range(len(cents))}
     elif train == "exact":

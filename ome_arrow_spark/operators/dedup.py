@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ome_arrow_spark.functions.text import fingerprint, tokens
+from ome_arrow_spark.plans import tuning
 
 
 def exact_dedup(
@@ -65,38 +66,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def spread_small_input(df: DataFrame, id_col: str) -> DataFrame:
-    """Parallelism guard for md5-map-heavy doc pipelines (r14): the
-    shingle explode + md5-per-(shingle, seed) map work runs in the
-    INPUT relation's partitions, and a small corpus arrives as 1-2
-    parquet splits (one row group = one effective split) — measured
-    8.4 s of single-task md5 at the 50k-doc fixture while 31 cores
-    idled.  Repartition by ``id_col`` ONLY when the input has fewer
-    partitions than the cluster has task slots: at 100 TB the scan
-    yields thousands of splits (>= slots) and this is a NO-OP — the
-    corpus text is never shuffled — while locally the tiny exchange
-    buys slots-wide map parallelism AND makes the downstream
-    ``groupBy(id_col)`` single-phase (hash(id) partitioning already
-    satisfies the aggregate's required distribution, so the partial/
-    final split and its second exchange disappear).  Data-derived, not
-    a local[32] constant: the decision input is the actual split count
-    vs ``defaultParallelism``, and the target width IS
-    ``defaultParallelism`` — one task wave.  Spreading into the
-    ambient ``spark.sql.shuffle.partitions`` instead (200 tasks over a
-    few thousand docs) measured WORSE than no spread at the small SF
-    (1.66 s vs 0.99 s full-signature wall — per-task overhead swamps
-    the map work) while slots-wide measured 0.30 s; at the 60k-doc
-    fixture the three forms are 6.44 / 10.48 / 1.26 s."""
-    sc = df.sparkSession.sparkContext
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — planning-only probe; never fatal
-        return df
-    if n >= sc.defaultParallelism:
-        return df
-    return df.repartition(sc.defaultParallelism, F.col(id_col))
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -126,7 +95,7 @@ def minhash_signatures(
     sh_expr = (
         F.col(shingles_col) if shingles_col else shingles(F.col(text_col), k)
     )
-    sh = spread_small_input(df, id_col).select(
+    sh = tuning.spread_small_input(df, id_col).select(
         F.col(id_col), F.explode(sh_expr).alias("sh")
     )
     aggs = [

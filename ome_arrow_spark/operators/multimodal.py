@@ -162,10 +162,12 @@ def media_table_from_dir(
     distributed ``binaryFile`` scan — the ingest path a training
     pipeline actually uses (one task per file; no driver-side reads).
     ``kind`` is sniffed from magic bytes as a pure Catalyst expression
-    (no UDF): JPEG/PNG/FMED-image → ``image``, FAUD → ``audio``,
-    FVID → ``video``, else ``unknown``. ``media_id`` comes from the
-    numeric file stem when ``id_from_name`` (deterministic across
-    runs/machines — path hashes are not), else from ``xxhash64(path)``."""
+    (no UDF): JPEG/PNG/BMP/GIF/netpbm/FMED-image → ``image``,
+    WAV/FLAC/FAUD → ``audio``, AVI/FVID → ``video``, else ``unknown``
+    — the kinds :func:`decode_media` reports for the same bytes.
+    ``media_id`` comes from the numeric file stem when ``id_from_name``
+    (deterministic across runs/machines — path hashes are not), else
+    from ``xxhash64(path)``."""
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
@@ -190,6 +192,7 @@ def media_table_from_dir(
             & (F.substring("content", 9, 4) == F.lit(b"WAVE")),
             "audio",
         )
+        .when(F.substring("content", 1, 4) == F.lit(b"fLaC"), "audio")
         .when(
             (F.substring("content", 1, 4) == F.lit(b"RIFF"))
             & (F.substring("content", 9, 4) == F.lit(b"AVI ")),

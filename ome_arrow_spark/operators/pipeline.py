@@ -17,8 +17,8 @@ from ome_arrow_spark.operators.dedup import (
     lsh_candidates,
     minhash_signatures,
     shingles,
-    spread_small_input,
 )
+from ome_arrow_spark.plans import tuning
 
 
 def near_dedup(
@@ -47,8 +47,8 @@ def near_dedup(
     # r14: spread a small-split input BEFORE the tokenize+shingle
     # build — the checkpoint (and everything derived from it) otherwise
     # inherits the scan's 1-2 local partitions (see
-    # dedup.spread_small_input; no-op at scale).
-    shs_tbl = spread_small_input(docs, id_col).select(
+    # tuning.spread_small_input; no-op at scale).
+    shs_tbl = tuning.spread_small_input(docs, id_col).select(
         F.col(id_col), F.array_distinct(shingles(F.col(text_col), shingle_k)).alias("__shs")
     ).localCheckpoint(eager=True)
     sig = minhash_signatures(

@@ -293,7 +293,7 @@ def build_pq_index(
     sub = dim // m
     if train == "sample":
         from ome_arrow_spark.operators import quantizer as QZ
-        from ome_arrow_spark.operators.dedup import spread_small_input
+        from ome_arrow_spark.plans import tuning
 
         books = QZ.train_pq_codebooks(
             corpus, vec, m, k, sample_size=sample_size
@@ -301,11 +301,11 @@ def build_pq_index(
         # The Arrow encode pass runs in the INPUT's partitions, and a
         # small corpus arrives as a handful of parquet splits — the
         # same parallelism collapse as the MinHash tokenize stage
-        # (dedup.spread_small_input; no-op at scale where the scan
+        # (tuning.spread_small_input; no-op at scale where the scan
         # yields >= slots splits).  Per-row encode is partition-
         # independent, so the spread changes no stored byte.  Measured
         # interleaved at the 100k bench fixture: 2.28 -> 0.86 s.
-        coded = spread_small_input(corpus, corpus_id).select(
+        coded = tuning.spread_small_input(corpus, corpus_id).select(
             F.col(corpus_id).alias("cid"),
             QZ.pq_encode_udf(books)(F.col(vec)).alias("codes"),
         )
@@ -694,7 +694,7 @@ def build_ivfpq_index(
 
     if train == "sample":
         from ome_arrow_spark.operators import quantizer as QZ
-        from ome_arrow_spark.operators.dedup import spread_small_input
+        from ome_arrow_spark.plans import tuning
 
         # One materialized sample feeds BOTH trainers — coarse
         # centroids and PQ codebooks trained on sample_vectors of the
@@ -712,7 +712,7 @@ def build_ivfpq_index(
         # assign+encode spread: same guard as build_pq_index (no-op at
         # scale); measured interleaved 2.61 -> 0.76 s at the bench
         # fixture.
-        rows = spread_small_input(corpus, corpus_id).select(
+        rows = tuning.spread_small_input(corpus, corpus_id).select(
             QZ.nearest_udf(cents)(F.col(vec)).alias("centroid_id"),
             F.col(corpus_id).alias("cid"),
             QZ.pq_encode_udf(books)(F.col(vec)).alias("codes"),

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ome_arrow_spark.functions.vectors import cosine, dot, norm
+from ome_arrow_spark.functions.vectors import dot, norm
 
 
 def cosine_topk(
@@ -646,7 +646,9 @@ def knn_join_lsh(
     ``candidates`` lets a caller that already materialized (e.g.
     persisted) the :func:`knn_join_candidates` relation — say, to
     assert its size before paying for scoring, the registered-gate
-    pattern — reuse it instead of building it a second time.
+    pattern — reuse it instead of building it a second time.  It must
+    be that function's output: scoring reads the side-attached norms
+    (``__lv__n``/``__rv__n``) it carries.
 
     :func:`cosine_topk_lsh` broadcasts its query side (the
     interactive-search contract, |Q| small); this is the corpus-scale
@@ -695,16 +697,11 @@ def knn_join_lsh(
             target_bucket=target_bucket,
             max_bucket=max_bucket,
         )
-    # Side-attached norms when the candidate relation carries them
-    # (knn_join_candidates emits __lv__n/__rv__n); a caller-built
-    # candidates df without them falls back to the fused cosine. Both
-    # forms produce bit-identical doubles.
-    if "__lv__n" in candidates.columns and "__rv__n" in candidates.columns:
-        sim = dot(F.col("__lv"), F.col("__rv")) / (
-            F.col("__lv__n") * F.col("__rv__n")
-        )
-    else:
-        sim = cosine(F.col("__lv"), F.col("__rv"))
+    # Side-attached norms: knn_join_candidates computes each vector's
+    # norm once per side, not once per pair.
+    sim = dot(F.col("__lv"), F.col("__rv")) / (
+        F.col("__lv__n") * F.col("__rv__n")
+    )
     scored = candidates.select(
         left_id,
         right_id,

@@ -415,7 +415,7 @@ def extract_patches(images: DataFrame, patch: int = 64, column: str = "ome_arrow
     flattened plane — no Python, no shuffle beyond the explode.
     Scale: output rows ≈ planes × (Y/patch)·(X/patch); each carries only
     patch² ints, so downstream repartitioning can target byte budgets
-    exactly (plans/tuning.repartition_images logic applies unchanged).
+    exactly.
     """
     from ome_arrow_spark.operators.views import planes_df
 

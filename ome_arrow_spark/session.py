@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ome_arrow_spark.plans.tuning import TARGET_PARTITION_BYTES
+
 # Runtime-settable configs, safe on any live session.
 _RUNTIME_CONF: dict[str, str] = {
     # AQE: runtime re-planning — broadcast conversion, partition
@@ -41,7 +43,7 @@ _BUILD_CONF: dict[str, str] = {
     # zstd to match the reference's parquet sink default (export.py:383).
     "spark.sql.parquet.compression.codec": "zstd",
     # Pixel-bearing rows are MB-scale; keep scan partitions ~128MB.
-    "spark.sql.files.maxPartitionBytes": "134217728",
+    "spark.sql.files.maxPartitionBytes": str(TARGET_PARTITION_BYTES),
 }
 
 
@@ -122,7 +124,7 @@ def cluster_defaults(executors: int = 1000, executor_cores: int = 8) -> dict[str
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.shuffle.partitions": str(total_cores * 2),
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(total_cores * 3),
-        "spark.sql.files.maxPartitionBytes": "134217728",
+        "spark.sql.files.maxPartitionBytes": str(TARGET_PARTITION_BYTES),
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.sql.parquet.enableNestedColumnVectorizedReader": "true",
         "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",

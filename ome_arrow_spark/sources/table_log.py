@@ -55,6 +55,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ome_arrow_spark.plans.tuning import (
+    MAX_FANOUT_TASKS,
+    TARGET_PARTITION_BYTES,
+    files_for_bytes,
+)
+
 LOG_DIR = "_ome_log"
 CHECKPOINT_EVERY = 10
 # Columns of these Spark types get min/max stats in the manifest.
@@ -630,7 +636,7 @@ def _scan(
 
             dv_df = (
                 spark.createDataFrame(pairs, "f string, rel string")
-                .repartition(min(len(pairs), 64))
+                .repartition(min(len(pairs), MAX_FANOUT_TASKS))
                 .mapInPandas(_decode_dv, "__dv_file string, __dv_pos long")
             )
         # small vectors broadcast (the common case: deletes since the
@@ -936,7 +942,7 @@ def _write_data_files(
         if len(finals) > _DISTRIBUTED_STATS_THRESHOLD:
             sc = df.sparkSession.sparkContext
             adds = (
-                sc.parallelize(finals, min(len(finals), 64))
+                sc.parallelize(finals, min(len(finals), MAX_FANOUT_TASKS))
                 .map(
                     lambda fn, _t=table, _c=tuple(cols), _b=tuple(bc_present):
                         _file_add_action(_t, fn, _c, _b)
@@ -1274,7 +1280,7 @@ def upsert_table(
     # manifest pruning work.  Sized to the churned bytes, ~128 MB per
     # output file.
     touched_bytes = sum(snap["files"][p].get("bytes", 0) for p in touched)
-    n_out = max(1, -(-touched_bytes // (128 * 1024 * 1024)))
+    n_out = files_for_bytes(touched_bytes)
     merged = merged.repartitionByRange(n_out, cluster_by or key)
     return _commit_files(table, snap, "upsert", merged, touched)
 
@@ -1467,7 +1473,7 @@ def delete_keys_from_table(
 def compact_table(
     spark: SparkSession,
     table: str,
-    target_bytes: int = 128 * 1024 * 1024,
+    target_bytes: int = TARGET_PARTITION_BYTES,
     small_file_bytes: int | None = None,
 ) -> int:
     """Small-file compaction as a metadata swap: rewrite ONLY files
@@ -1493,7 +1499,7 @@ def compact_table(
     ):  # nothing to gain from rewriting 0-1 DV-free files
         return snap["version"]
     total = sum(snap["files"][p].get("bytes", 0) for p in files)
-    n = max(1, -(-total // target_bytes))
+    n = files_for_bytes(total, target_bytes)
     df = _scan(spark, table, snap["files"], files, schema)
     return _commit_files(table, snap, "compact", df.repartition(n), files)
 
@@ -1893,7 +1899,7 @@ def optimize_table(
     spark: SparkSession,
     table: str,
     zorder_by: Sequence[str] | None = None,
-    target_bytes: int = 128 * 1024 * 1024,
+    target_bytes: int = TARGET_PARTITION_BYTES,
     bits_per_col: int = 8,
 ) -> int:
     """Compaction with optional multi-column Z-ORDER clustering.
@@ -1936,7 +1942,7 @@ def optimize_table(
     files = list(snap["files"])
     df = _scan(spark, table, snap["files"], files, schema)
     total = sum(a.get("bytes", 0) for a in snap["files"].values())
-    n = max(1, -(-total // target_bytes))
+    n = files_for_bytes(total, target_bytes)
     n_buckets = 1 << bits_per_col
     # quantile boundaries → equal-population buckets even on
     # skewed columns (plain min/max scaling would collapse); the

@@ -32,6 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from ome_arrow_spark.meta import ome_images_schema
+from ome_arrow_spark.plans.tuning import MAX_FANOUT_TASKS
 from ome_arrow_spark.sources.numpy_ingest import from_numpy
 
 try:  # pragma: no cover
@@ -99,7 +100,7 @@ def from_zarr_manifest(
         return spark.createDataFrame([], schema)
     manifest = spark.createDataFrame(
         [(os.path.abspath(p),) for p in store_paths], "store_path string"
-    ).repartition(min(len(store_paths), 64))
+    ).repartition(min(len(store_paths), MAX_FANOUT_TASKS))
 
     from ome_arrow_spark.sources.arrow_records import (
         ome_arrow_field_type,

@@ -20,20 +20,16 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_COUNTER = itertools.count()
+from ome_arrow_spark.plans.tuning import stream_shuffle_floor
 
-#: Shuffle-partition floor for fixture-scale streaming runs: every
-#: shuffle partition is a state-store instance, so fewer = less
-#: per-batch overhead; 8 still exercises multi-partition state. A real
-#: cluster deployment sets spark.sql.shuffle.partitions itself and this
-#: floor never engages (we only lower, never raise).
-STREAM_PARTITIONS = 8
+_COUNTER = itertools.count()
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -94,29 +90,21 @@ def run_available_now(df: DataFrame, output_mode: str = "complete") -> DataFrame
     complete-mode outputs write to a durable sink (parquet +
     foreachBatch) instead of this convenience wrapper."""
     spark = df.sparkSession
-    # Streaming exchanges don't benefit from AQE coalescing, and every
-    # shuffle partition becomes a state-store instance — a vanilla
-    # session's 200 partitions is pure task/state overhead at fixture
-    # scale. Fresh checkpoint per run → safe to lower; restored after.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    if int(prev_parts) > STREAM_PARTITIONS:
-        spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_PARTITIONS))
     name = f"stream_result_{next(_COUNTER)}_{os.getpid()}"
+    # Fresh checkpoint per run → safe to lower the shuffle width.
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        with stream_shuffle_floor(spark):
+            (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        import shutil
-
         # this wrapper owns the throwaway checkpoint — don't let
         # repeated runs accumulate state dirs under /tmp
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -237,23 +225,17 @@ def run_foreach_batch(
     streaming sink exists.  Pass a stable ``checkpoint`` dir to get
     exactly-once across restarts: the source log remembers processed
     files, so a rerun ingests only what arrived since."""
-    spark = df.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    if int(prev_parts) > STREAM_PARTITIONS:
-        spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_PARTITIONS))
     ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_feb_")
-    q = (
-        df.writeStream.foreachBatch(batch_fn)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
+        with stream_shuffle_floor(df.sparkSession):
+            (
+                df.writeStream.foreachBatch(batch_fn)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if checkpoint is None:  # throwaway checkpoint: reclaim it
-            import shutil
-
             shutil.rmtree(ckpt, ignore_errors=True)

@@ -51,51 +51,17 @@ def register(name: str, oracle: str | None):
 # list pins a representative cross-section — core relational + OME format
 # + LLM dedup/ANN + streaming + incremental formats — to the head of the
 # ordering so the flagship differentiators get driver-verified rows.
-# Names not yet registered are skipped, so partial imports stay safe.
+# Rotation rule: the window stays at 50 names; a query whose code changed
+# since it was last driver-graded takes the slot of the row that has been
+# green the longest (the rotation history is in CHANGES.md).  Names not
+# yet registered are skipped, so partial imports stay safe.
 _DRIVER_WINDOW: tuple[str, ...] = (
-    # Round-14 rotation (the driver grades the FIRST 50 names only):
-    #   1. the r14 additions — span_dedup_3sent (C4 three-sentence-span
-    #      dedup: sentence split + 12-token chunking + sliding 3-unit
-    #      spans, struct-min first occurrence),
-    #      domain_mixture_reweight (DoReMi-lite fixed-target mixture:
-    #      clamped per-source sampling rates toward a token budget +
-    #      hash-rank selection), ccnet_ppl_buckets (CCNet per-language
-    #      perplexity terciles via the census-offset exact rank),
-    #      bloom_dedup_probe (broadcast-bitmask membership probe with
-    #      exact FP accounting), incremental_neardup (asymmetric
-    #      batch-vs-seen LSH candidates, old×old never materialized),
-    #      cross_source_overlap (WIMBD-style which-sources-duplicate-
-    #      each-other census, planted adjacent-source overlap) and
-    #      minhash_jaccard_estimate (estimator-calibration census:
-    #      exact Jaccard per min-agreement level over LSH candidates)
-    #      — each EXACT at sf0.001/0.01 on entry,
-    #   2. r14-touched surfaces — knn_join_lsh and semantic_dedup
-    #      re-sit because n_tables became DATA-DERIVED (oracles now
-    #      recompute the table count from COUNT(*); knn also EXACT at
-    #      sf1 under the derived T=20), line_dedup_global because its
-    #      first-occurrence key moved to the unbounded struct-min,
-    #      ann_index_search + ann_sharded_search because ann_index.py
-    #      changed (probe-pair reuse, shared-field shard schemas),
-    #   3. an oldest-green re-verification tail, stalest first by
-    #      last-green round (computed from CORRECTNESS_r01..r13):
-    #      simpson_diversity + runs_test_daily (never driver-graded —
-    #      judge-stride-verified only), the full REMAINING r7 stratum
-    #      (33 rows; the alphabetical head 8 re-sat in r13), and the
-    #      3 alphabetically-first r8 rows.  All 38 tail rows predate
-    #      r9 — the >=15 two-round-stale invariant holds with ~2.5x
-    #      room.
-    # Names not yet registered are skipped, so partial imports stay safe.
-    #
-    # (1) round-14 additions
     "span_dedup_3sent", "domain_mixture_reweight",
     "ccnet_ppl_buckets", "bloom_dedup_probe", "incremental_neardup",
     "cross_source_overlap", "minhash_jaccard_estimate",
-    # (2) r14-touched surfaces
     "knn_join_lsh", "semantic_dedup", "line_dedup_global",
     "ann_index_search", "ann_sharded_search",
-    # (3a) never driver-graded
     "simpson_diversity", "runs_test_daily",
-    # (3b) the remaining r7 stratum (33 rows, alphabetical)
     "generator_outer", "graph_bfs_trade", "graph_cheapest_route",
     "heavy_hitters_bigrams", "heavy_hitters_terms",
     "histogram_totalprice", "hll_union_distinct", "hybrid_retrieval_rrf",
@@ -108,8 +74,7 @@ _DRIVER_WINDOW: tuple[str, ...] = (
     "q21_waiting_supplier", "skew_report", "sort_nulls_order",
     "sql_api_q1", "stratified_sample", "string_distance",
     "time_hierarchy_rollup", "udtf_sentences",
-    # (3c) 3 r8 rows (alphabetical head of that stratum)
-    "agg_approx_percentile", "ann_ivfpq_rerank", "ann_pq_rerank",
+    "window_rank", "ann_ivfpq_rerank", "ann_pq_rerank",
 )
 
 
@@ -574,7 +539,7 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ome_arrow_spark.operators.dedup import spread_small_input
+    from ome_arrow_spark.plans import tuning
 
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -590,7 +555,7 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rowset hash-identical.  At scale (splits >= slots) the guard is
     # a NO-OP and the partial-limit-prunes-the-shuffle plan stays.
     return (
-        spread_small_input(_t(spark, sf_dir, "orders"), "o_custkey")
+        tuning.spread_small_input(_t(spark, sf_dir, "orders"), "o_custkey")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice", "rn")

@@ -1,6 +1,6 @@
-"""The r14 build-pass optimizations must not change what a
+"""The build-pass optimizations must not change what a
 sample-trained index stores: the encode/assign spread
-(dedup.spread_small_input before the Arrow UDF pass) is a pure
+(tuning.spread_small_input before the Arrow UDF pass) is a pure
 partitioning decision, and build_ivfpq_index's shared training sample
 must train the same quantizers as the two independent sample_vectors
 calls it replaced (same (df, vec, sample_size, seed) -> same sample).
@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -37,12 +36,12 @@ def _rowset(spark, table):
 
 def _no_spread_build(monkeypatch, build):
     """Run ``build`` with spread_small_input patched to identity and
-    the IVFPQ sample-sharing disabled — the pre-r14 build shape."""
-    from ome_arrow_spark.operators import dedup as DD
+    the IVFPQ sample-sharing disabled — the unoptimized build shape."""
     from ome_arrow_spark.operators import quantizer as QZ
+    from ome_arrow_spark.plans import tuning
 
     real_tc = QZ.train_centroids
-    monkeypatch.setattr(DD, "spread_small_input", lambda df, id_col: df)
+    monkeypatch.setattr(tuning, "spread_small_input", lambda df, id_col: df)
     monkeypatch.setattr(
         QZ,
         "train_centroids",
@@ -107,15 +106,3 @@ def test_ivf_build_spread_stores_identical_rows(
     build(new)
     _no_spread_build(monkeypatch, lambda: build(old))
     assert _rowset(spark, new) == _rowset(spark, old)
-
-
-def test_spread_engages_on_small_split_corpus(spark, corpus):
-    from ome_arrow_spark.operators.dedup import spread_small_input
-
-    sc = spark.sparkContext
-    assert corpus.rdd.getNumPartitions() < sc.defaultParallelism
-    spread = spread_small_input(corpus, "cid")
-    assert spread.rdd.getNumPartitions() == sc.defaultParallelism
-    # wide input: guard is a no-op (returns the frame unchanged)
-    wide = corpus.repartition(sc.defaultParallelism + 1, F.col("cid"))
-    assert spread_small_input(wide, "cid") is wide

@@ -271,3 +271,18 @@ def test_decode_media_routes_flac():
     assert kind == "audio" and meta["sr"] == 16000
     assert np.array_equal(arr, s)
     assert meta["format"] == "flac"
+
+
+def test_dir_scan_sniffs_flac_audio(spark, tmp_path):
+    """The directory scan's magic-byte sniff gives a FLAC file the kind
+    decode_media reports for it."""
+    from ome_arrow_spark.operators import multimodal as MM
+
+    t = np.arange(3200)
+    s = (np.sin(t / 20) * 20000).astype(np.int16)
+    (tmp_path / "7.flac").write_bytes(FL.flac_encode(s, 16000))
+    media = MM.media_table_from_dir(spark, str(tmp_path))
+    got = media.collect()
+    assert [(r["media_id"], r["kind"]) for r in got] == [(7, "audio")]
+    feats = MM.media_features(media).collect()
+    assert feats[0]["kind"] == "audio" and feats[0]["duration_s"] == 0.2

@@ -6,8 +6,7 @@ MIP → multiscale → TIFF and Zarr round-trips.
 
 This is the regime SURVEY.md §7 flags (plane payload size, 2 GB array
 limits, jumbo-row shuffles, partition sizing) that the ≤512² fixtures
-never reach.  The generation itself follows the scale design in
-plans/tuning.py: planes are computed on executors (48 parallel tasks)
+never reach.  Planes are generated on executors (48 parallel tasks)
 and only the final per-image assembly concentrates one image's bytes
 in one task — the same concentration any per-image writer has.
 """

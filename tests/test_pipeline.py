@@ -26,30 +26,6 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_spread_small_input_guard(spark):
-    """r14 parallelism guard: a small-split input spreads to exactly
-    defaultParallelism partitions keyed on the id; an input already at
-    or above slot width is returned untouched (the at-scale no-op —
-    the corpus text must never be shuffled there); signatures are
-    identical with and without the spread."""
-    from ome_arrow_spark.operators.dedup import (
-        minhash_signatures,
-        spread_small_input,
-    )
-
-    docs = _docs(spark).coalesce(1)
-    slots = spark.sparkContext.defaultParallelism
-    spread = spread_small_input(docs, "doc_id")
-    assert spread.rdd.getNumPartitions() == slots
-    wide = _docs(spark).repartition(slots + 3)
-    assert spread_small_input(wide, "doc_id") is wide
-    sig_spread = {
-        tuple(r) for r in minhash_signatures(docs).collect()
-    }
-    sig_wide = {tuple(r) for r in minhash_signatures(wide).collect()}
-    assert sig_spread == sig_wide and len(sig_spread) > 0
-
-
 @pytest.mark.heavy
 def test_near_dedup_pipeline(spark):
     docs = _docs(spark)
@@ -109,6 +85,30 @@ def test_foreach_batch_streaming_upsert(spark, tmp_path):
     assert got.count() == len(exp)
     g = {r["user_id"]: r["n"] for r in got.collect()}
     assert all(g[u] == n for u, n in exp)
+
+
+@pytest.mark.parametrize("runner", ["run_foreach_batch", "run_available_now"])
+def test_stream_start_failure_restores_shuffle_partitions(
+    spark, tmp_path, runner
+):
+    """A query that fails at ``.start()`` (complete mode on a stream
+    with no aggregation) must leave ``spark.sql.shuffle.partitions`` as
+    it found it, not at the streaming floor."""
+    from pyspark.errors import AnalysisException
+
+    from ome_arrow_spark.streaming import events as EV
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "32")  # above the floor, so the run lowers it
+    try:
+        stream = spark.readStream.schema("x long").parquet(str(tmp_path))
+        args = (lambda batch_df, batch_id: None,) if runner == "run_foreach_batch" else ()
+        with pytest.raises(AnalysisException):
+            getattr(EV, runner)(stream, *args, output_mode="complete")
+        assert spark.conf.get(key) == "32"
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_cluster_defaults_shape():
