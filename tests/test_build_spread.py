@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -106,3 +107,15 @@ def test_ivf_build_spread_stores_identical_rows(
     build(new)
     _no_spread_build(monkeypatch, lambda: build(old))
     assert _rowset(spark, new) == _rowset(spark, old)
+
+
+def test_spread_engages_on_small_split_corpus(spark, corpus):
+    from ome_arrow_spark.plans.tuning import spread_small_input
+
+    sc = spark.sparkContext
+    assert corpus.rdd.getNumPartitions() < sc.defaultParallelism
+    spread = spread_small_input(corpus, "cid")
+    assert spread.rdd.getNumPartitions() == sc.defaultParallelism
+    # wide input: guard is a no-op (returns the frame unchanged)
+    wide = corpus.repartition(sc.defaultParallelism + 1, F.col("cid"))
+    assert spread_small_input(wide, "cid") is wide

@@ -26,6 +26,30 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def test_spread_small_input_guard(spark):
+    """A small-split input spreads to exactly defaultParallelism
+    partitions keyed on the id; an input already at or above slot width
+    is returned as the same object (the at-scale no-op — the corpus is
+    never shuffled there); MinHash signatures are identical with and
+    without the spread."""
+    from ome_arrow_spark.operators.dedup import minhash_signatures
+    from ome_arrow_spark.plans.tuning import few_splits, spread_small_input
+
+    docs = _docs(spark).coalesce(1)
+    slots = spark.sparkContext.defaultParallelism
+    assert few_splits(docs)
+    spread = spread_small_input(docs, "doc_id")
+    assert spread.rdd.getNumPartitions() == slots
+    wide = _docs(spark).repartition(slots + 3)
+    assert not few_splits(wide)
+    assert spread_small_input(wide, "doc_id") is wide
+    sig_spread = {
+        tuple(r) for r in minhash_signatures(docs).collect()
+    }
+    sig_wide = {tuple(r) for r in minhash_signatures(wide).collect()}
+    assert sig_spread == sig_wide and len(sig_spread) > 0
+
+
 @pytest.mark.heavy
 def test_near_dedup_pipeline(spark):
     docs = _docs(spark)

@@ -10,11 +10,9 @@ from pyspark.sql import functions as F
 from ome_arrow_spark import suite, synth
 from ome_arrow_spark.operators.describe import describe
 from ome_arrow_spark.plans.tuning import (
-    few_splits,
     has_broadcast_join,
     pushed_filters,
     read_schema_columns,
-    spread_small_input,
 )
 
 
@@ -51,35 +49,6 @@ def test_semi_join_stays_semi(spark, sf_dir):
     df = suite.join_semi(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan
-
-
-def test_spread_small_input_guard(spark):
-    """A small-split input spreads to exactly defaultParallelism
-    partitions keyed on the id; an input already at or above slot width
-    is returned as the same object (the at-scale no-op — the corpus is
-    never shuffled there); MinHash signatures are identical with and
-    without the spread."""
-    from ome_arrow_spark.operators.dedup import minhash_signatures
-
-    base = [
-        "the quick brown fox jumps over the lazy dog again and again today",
-        "spark engines shuffle data across wide clusters with partitioned joins",
-        "pixels planes channels stacks volumes render microscopes acquire images",
-    ]
-    rows = [(i, t) for i, t in enumerate(base)]
-    rows += [(100 + i, t + " tail") for i, t in enumerate(base)]
-    docs_all = spark.createDataFrame(rows, "doc_id long, text string")
-    slots = spark.sparkContext.defaultParallelism
-    docs = docs_all.coalesce(1)
-    assert few_splits(docs)
-    spread = spread_small_input(docs, "doc_id")
-    assert spread.rdd.getNumPartitions() == slots
-    wide = docs_all.repartition(slots + 1, F.col("doc_id"))
-    assert not few_splits(wide)
-    assert spread_small_input(wide, "doc_id") is wide
-    sig_spread = {tuple(r) for r in minhash_signatures(docs).collect()}
-    sig_wide = {tuple(r) for r in minhash_signatures(wide).collect()}
-    assert sig_spread == sig_wide and len(sig_spread) > 0
 
 
 def test_bucketed_join_avoids_shuffle(spark, sf_small, tmp_path):
