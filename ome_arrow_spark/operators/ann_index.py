@@ -89,41 +89,41 @@ def build_ivf_index(
         # first (tuning.spread_small_input — no-op at scale, per-row
         # assign is partition-independent so stored rows are
         # unchanged).
-        listed = tuning.spread_small_input(corpus, corpus_id).select(
+        spread = tuning.spread_small_input(corpus, corpus_id)
+        listed = spread.select(
             QZ.nearest_udf(cents)(F.col(vec)).alias("centroid_id"),
             F.col(corpus_id).alias("cid"),
             F.col(vec).alias("embedding"),
             *[F.col(c) for c in extra_cols],
         )
         # repartitionByRange's boundary-sampling job re-evaluates its
-        # child, paying the assignment UDF twice (r14).  Unlike the PQ
+        # child, paying the assignment UDF twice.  Unlike the PQ
         # builds' thin codes, IVF lists carry the raw embeddings, so
-        # the checkpoint is guarded by the same splits-vs-slots test
-        # as the spread (tuning.few_splits): locally one eager
-        # materialization of a few MB removes the duplicate pass; at
-        # corpus scale the guard is a NO-OP and the one-time extra
-        # assign pass is the cheaper side of the trade vs a full
-        # corpus copy in executor storage.
-        if tuning.few_splits(corpus):
+        # the checkpoint is taken only where the spread engaged (the
+        # guard returns the corpus itself otherwise — one split-count
+        # probe serves both): locally one eager materialization of a
+        # few MB removes the duplicate pass; at corpus scale it is a
+        # NO-OP and the one-time extra assign pass is the cheaper side
+        # of the trade vs a full corpus copy in executor storage.
+        if spread is not corpus:
             listed = listed.localCheckpoint(eager=True)
         cent_map = {j: [float(x) for x in cents[j]] for j in range(len(cents))}
     elif train == "exact":
-        from ome_arrow_spark.operators.clustering import cluster_means, kmeans
+        from ome_arrow_spark.operators.clustering import _kmeans
 
-        assign = kmeans(
-            corpus.select(
-                F.col(corpus_id).alias("vec_id"), F.col(vec).alias("embedding")
-            ),
-            k=n_centroids,
-            iterations=iterations,
-        ).withColumnRenamed("vec_id", corpus_id)
+        assign, cents = _kmeans(
+            corpus.select(F.col(corpus_id), F.col(vec).alias("__v")),
+            n_centroids,
+            iterations,
+            corpus_id,
+        )
         listed = (
             corpus.select(
                 F.col(corpus_id),
                 F.col(vec).alias("embedding"),
                 *[F.col(c) for c in extra_cols],
             )
-            .join(assign, corpus_id)
+            .join(assign.select(corpus_id, "cluster"), corpus_id)
             .select(
                 F.col("cluster").cast("int").alias("centroid_id"),
                 F.col(corpus_id).alias("cid"),
@@ -131,15 +131,9 @@ def build_ivf_index(
                 *[F.col(c) for c in extra_cols],
             )
         )
-        cents = cluster_means(
-            listed.select(
-                F.col("centroid_id").alias("cluster"),
-                F.col("embedding").alias("__cv"),
-            ),
-            vec_col="__cv",
-        ).collect()
         cent_map = {
-            int(r["cluster"]): [float(x) for x in r["ctr"]] for r in cents
+            int(r["cluster"]): [float(x) for x in r["ctr"]]
+            for r in cents.collect()
         }
     else:
         raise ValueError(f"train must be 'exact' or 'sample', got {train!r}")

@@ -134,9 +134,15 @@ def cluster_means(
     Sums accumulate in DECIMAL(38,12) — exact and associative, so the
     means are independent of partitioning/summation order and an SQL
     oracle re-derives them bit-identically."""
+    return _means(assigned, [cluster_col], vec_col)
+
+
+def _means(assigned: DataFrame, keys: list, vec_col: str) -> DataFrame:
+    """:func:`cluster_means` over the key columns ``keys`` (the last is
+    the cluster id; the k-means core puts its group column first)."""
     per_dim = (
-        assigned.select(cluster_col, F.posexplode(vec_col).alias("pos", "val"))
-        .groupBy(cluster_col, "pos")
+        assigned.select(*keys, F.posexplode(vec_col).alias("pos", "val"))
+        .groupBy(*keys, "pos")
         .agg(
             (
                 F.sum(F.col("val").cast("double").cast("decimal(38,12)")).cast("double")
@@ -145,9 +151,9 @@ def cluster_means(
         )
     )
     return (
-        per_dim.groupBy(cluster_col)
+        per_dim.groupBy(*keys)
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select(cluster_col, F.col("pm").getField("m").alias("ctr"))
+        .select(*keys, F.col("pm").getField("m").alias("ctr"))
     )
 
 
@@ -157,7 +163,13 @@ def pack_centroids(cent_df: DataFrame, cluster_col: str = "cluster") -> DataFram
     broadcast-able carrier for shuffle-free nearest-centroid assignment.
     Centroids travel as *data* (Arrow broadcast), never as plan
     literals: plan size stays O(1) in both k and dim."""
-    return cent_df.agg(
+    return _pack(cent_df, [], cluster_col)
+
+
+def _pack(cent_df: DataFrame, gcols: list, cluster_col: str = "cluster") -> DataFrame:
+    """:func:`pack_centroids` with one packed row per value of the
+    ``gcols`` columns (none: one row in all)."""
+    return cent_df.groupBy(*gcols).agg(
         F.array_sort(F.collect_list(F.struct(F.col(cluster_col), F.col("ctr")))).alias(
             "__cents"
         )
@@ -187,6 +199,16 @@ def assign_nearest(
     higher-order-function fold per row, keep the argmin (ties → lowest
     cluster id, because the array is cluster-sorted and the fold uses
     strict <). Returns (id, vec, cluster)."""
+    return _assign(v, packed, id_col, vec_col, [])
+
+
+def _assign(
+    v: DataFrame, packed: DataFrame, id_col: str, vec_col: str, gcols: list
+) -> DataFrame:
+    """:func:`assign_nearest` against the packed row of each row's
+    ``gcols`` value — a broadcast equi-join on them, or a
+    broadcast cross join when there are none.  Returns
+    (id, *gcols, vec, cluster)."""
     scored = F.transform(
         F.col("__cents"),
         lambda cs: F.struct(
@@ -200,9 +222,62 @@ def assign_nearest(
         ),
         lambda acc, s: F.when(s["d2"] < acc["d2"], s).otherwise(acc),
     )
-    return v.crossJoin(F.broadcast(packed)).select(
-        id_col, vec_col, best["c"].alias("cluster")
+    # no empty ``on=[]`` join: PySpark rejects an empty key list
+    joined = (
+        v.join(F.broadcast(packed), gcols)
+        if gcols
+        else v.crossJoin(F.broadcast(packed))
     )
+    return joined.select(id_col, *gcols, vec_col, best["c"].alias("cluster"))
+
+
+def _kmeans(
+    v: DataFrame, k: int, iterations: int, id_col: str, groups: int = 1
+) -> tuple[DataFrame, DataFrame]:
+    """The exact k-means, written once, over ``v`` = (id_col, __v).
+    With ``groups`` > 1, ``v`` = (id_col, __s, __v) holds every id once
+    per group ``__s`` in [0, groups) — the PQ subspaces — and each group
+    is an independent k-means.  Returns ``(assigned, centroids)``: the
+    final assignment (id_col, [__s], __v, cluster) and the means of that
+    assignment ([__s], cluster, ctr).
+
+    * init: cluster j = the (j+1)-th smallest id (in every group);
+    * assign: :func:`_assign`, strict-< squared-L2 argmin fold, ties to
+      the lowest cluster id;
+    * update: :func:`_means`, DECIMAL(38,12) sums.
+
+    These three choices are what ``suite.kmeans_cte_fragments`` replays
+    in DuckDB.  The packed centroids are localCheckpoint-ed each round
+    to truncate the iterative lineage, so a round — every group at once
+    — is ONE job: the PQ build trains all m subspaces in
+    ``iterations + 1`` jobs, not m times that."""
+    from pyspark.sql.window import Window
+
+    gcols = ["__s"] if groups > 1 else []
+    keys = gcols + ["cluster"]
+    # the k smallest ids are the first k·groups rows in (id, group)
+    # order: the rank filter plans as one top-k (TakeOrderedAndProject)
+    # whose single output partition the per-group packing reads
+    # without a shuffle
+    w_init = Window.orderBy(id_col, *gcols)
+    cent0 = (
+        v.withColumn("__rn", F.row_number().over(w_init))
+        .filter(F.col("__rn") <= k * groups)
+        .select(
+            *gcols,
+            ((F.col("__rn") - 1) / groups).cast("int").alias("cluster"),
+            F.transform(F.col("__v"), lambda x: x.cast("double")).alias("ctr"),
+        )
+    )
+    packed = _pack(cent0, gcols).localCheckpoint(eager=True)
+    assigned = None
+    for it in range(iterations):
+        assigned = _assign(v, packed, id_col, "__v", gcols)
+        if it < iterations - 1:
+            packed = _pack(_means(assigned, keys, "__v"), gcols).localCheckpoint(
+                eager=True
+            )
+    return assigned, _means(assigned, keys, "__v")
 
 
 def kmeans(
@@ -223,25 +298,8 @@ def kmeans(
     shuffle and the whole run is re-derivable as unrolled SQL (the
     driver oracle does exactly that). Centroids are never plan
     literals; only the k-row packed frame is localCheckpoint-ed per
-    round to truncate the iterative lineage."""
-    from pyspark.sql.window import Window
-
+    round to truncate the iterative lineage.  The IVF and PQ builds
+    share this k-means through :func:`_kmeans`."""
     v = vectors.select(F.col(id_col), F.col(vec_col).alias("__v"))
-    w_init = Window.orderBy(id_col)
-    cent0 = (
-        v.orderBy(id_col)
-        .limit(k)
-        .select(
-            (F.row_number().over(w_init) - 1).cast("int").alias("cluster"),
-            F.transform(F.col("__v"), lambda x: x.cast("double")).alias("ctr"),
-        )
-    )
-    packed = pack_centroids(cent0).localCheckpoint(eager=True)
-    assigned = None
-    for it in range(iterations):
-        assigned = assign_nearest(v, packed, id_col)
-        if it < iterations - 1:
-            packed = pack_centroids(cluster_means(assigned)).localCheckpoint(
-                eager=True
-            )
+    assigned, _ = _kmeans(v, k, iterations, id_col)
     return assigned.select(id_col, "cluster")

@@ -8,9 +8,10 @@ hot storage, scored without touching the raw vectors (Jégou et al.,
 "Product Quantization for Nearest Neighbor Search", TPAMI 2011).
 
 Build: split the (L2-normalized) vector into ``m`` contiguous
-subspaces, train a deterministic k-means codebook per subspace
-(operators/clustering.py — id-seeded init, decimal-exact updates, so
-codes are reproducible run-to-run), encode every corpus vector as its
+subspaces, train a deterministic k-means codebook per subspace (the
+one exact k-means, ``_kmeans`` in operators/clustering.py, with one
+group per subspace — id-seeded init, decimal-exact updates, so codes
+are reproducible run-to-run), encode every corpus vector as its
 per-subspace argmin code, and store (cid, codes array<int>) in a log
 table with the codebooks as a table property.
 
@@ -152,114 +153,50 @@ def _pq_encode_exact_udf(books):
     return enc
 
 
-def _exact_pq_codebooks(
-    base: DataFrame, m: int, sub: int, k: int, iterations: int
-) -> list[list[list[float]]]:
-    """All m per-subspace exact k-means trainings in ONE iterated plan
-    (r14).  The old form ran :func:`clustering.kmeans` once per
-    subspace — m × (iterations + 1) tiny sequential jobs whose wall was
-    DAGScheduler throughput, not compute (56 s for m=32 at sf0.1; a
-    thread pool over subspaces only cut it to ~23 s because the
-    single-threaded scheduler serializes job planning).  Here the
-    subspace id ``__s`` joins the key set: one exploded
-    (cid, __s, subvector) relation, one broadcast of all m packed
-    centroid lists per round, one grouped decimal-mean update — so a
-    whole training round is ONE job regardless of m.
+def _subdim(corpus: DataFrame, vec: str, m: int) -> int:
+    """Subspace width ``dim // m``; the vector dim must divide by m."""
+    dim = len(corpus.select(vec).first()[0])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    return dim // m
 
-    Result-identical to the per-subspace loop by construction: the
-    per-(s) computations are disjoint group keys; cluster means
-    accumulate in DECIMAL(38,12) (associative, partitioning-
-    independent — clustering.cluster_means' own contract), the argmin
-    fold and its lowest-cluster tie-break are the same expressions
-    (:func:`clustering._sq_l2`), and the init centroids are the same k
-    smallest cids' subvectors.  The DuckDB oracle replays the
-    per-subspace unrolled SQL and must keep matching bit for bit —
-    gated by ann_pq_rerank/ann_ivfpq_rerank at two SFs."""
-    from pyspark.sql.window import Window
 
-    from ome_arrow_spark.operators.clustering import _sq_l2
+def _train_encode_exact(
+    corpus: DataFrame, corpus_id: str, vec: str, m: int, sub: int, k: int,
+    iterations: int,
+) -> tuple[list[list[list[float]]], DataFrame]:
+    """Exact PQ training and encode, shared by :func:`build_pq_index`
+    and :func:`build_ivfpq_index`.  Returns the dense codebooks (m × k
+    × sub) and the lazy ``(cid, codes)`` relation.
 
+    Training is the one exact k-means (:func:`clustering._kmeans`) with
+    one group per subspace: over the exploded (cid, __s, subvector)
+    relation a whole round for all m subspaces is ONE job, and each
+    subspace's codebook equals ``clustering.kmeans`` + ``cluster_means``
+    run on that subvector slice alone — what the DuckDB oracle replays.
+    The argmin encode runs in the bit-identical Arrow batch UDF
+    (:func:`_pq_encode_exact_udf`) instead of m·k interpreted sub-folds
+    per row."""
+    from ome_arrow_spark.operators.clustering import _kmeans
+
+    base = corpus.select(
+        F.col(corpus_id).alias("cid"), _normalize(F.col(vec)).alias("__nv")
+    ).localCheckpoint()  # training and encode both read it
     subs = F.array(*[F.slice("__nv", s * sub + 1, sub) for s in range(m)])
     v = base.select(
         "cid", F.posexplode(subs).alias("__s", "__v")
     ).localCheckpoint(eager=True)
-
-    w_init = Window.orderBy("cid")
-    # window FIRST, explode SECOND (two selects): a generator and a
-    # window expression in one projection make the row_number rank the
-    # EXPLODED rows, scattering the k init clusters across subspaces
-    cent = (
-        base.orderBy("cid")
-        .limit(k)
-        .select(
-            (F.row_number().over(w_init) - 1).cast("int").alias("cluster"),
-            "__nv",
-        )
-        .select("cluster", F.posexplode(subs).alias("__s", "ctr"))
-        .select("__s", "cluster", "ctr")
-    )
-
-    def packed(cent_df):
-        return cent_df.groupBy("__s").agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("cluster"), F.col("ctr")))
-            ).alias("__cents")
-        )
-
-    def assign(packed_df):
-        scored = F.transform(
-            F.col("__cents"),
-            lambda cs: F.struct(
-                cs["cluster"].alias("c"), _sq_l2("__v", cs["ctr"]).alias("d2")
-            ),
-        )
-        best = F.aggregate(
-            scored,
-            F.struct(F.lit(-1).alias("c"), F.lit(float("inf")).alias("d2")),
-            lambda acc, s: F.when(s["d2"] < acc["d2"], s).otherwise(acc),
-        )
-        return v.join(F.broadcast(packed_df), "__s").select(
-            "cid", "__s", "__v", best["c"].alias("cluster")
-        )
-
-    def means(assigned):
-        per_dim = (
-            assigned.select(
-                "__s", "cluster", F.posexplode("__v").alias("pos", "val")
-            )
-            .groupBy("__s", "cluster", "pos")
-            .agg(
-                (
-                    F.sum(
-                        F.col("val").cast("double").cast("decimal(38,12)")
-                    ).cast("double")
-                    / F.count("*")
-                ).alias("m")
-            )
-        )
-        return (
-            per_dim.groupBy("__s", "cluster")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm")
-            )
-            .select("__s", "cluster", F.col("pm").getField("m").alias("ctr"))
-        )
-
-    pk = packed(cent).localCheckpoint(eager=True)
-    assigned = None
-    for it in range(iterations):
-        assigned = assign(pk)
-        if it < iterations - 1:
-            pk = packed(means(assigned)).localCheckpoint(eager=True)
-    rows = means(assigned).collect()
+    _, cents = _kmeans(v, k, iterations, "cid", groups=m)
     cmaps: list[dict[int, list[float]]] = [dict() for _ in range(m)]
-    for r in rows:
+    for r in cents.collect():
         cmaps[int(r["__s"])][int(r["cluster"])] = [float(x) for x in r["ctr"]]
     # dense codebook lists (clusters 0..k-1; k-means may drop clusters
     # on tiny data — pad with zero vectors, never chosen)
-    return [
-        [cmaps[s].get(j, [0.0] * sub) for j in range(k)] for s in range(m)
-    ]
+    books = [[cmaps[s].get(j, [0.0] * sub) for j in range(k)] for s in range(m)]
+    coded = base.select(
+        "cid", _pq_encode_exact_udf(books)(F.col("__nv")).alias("codes")
+    )
+    return books, coded
 
 
 def build_pq_index(
@@ -284,13 +221,9 @@ def build_pq_index(
     — numpy codebooks from a bounded sample, then ONE Arrow-batched
     encode pass over the corpus (all m subspaces per batch) instead of
     m plan-literal argmin columns."""
-    from ome_arrow_spark.operators.clustering import cluster_means, kmeans
     from ome_arrow_spark.sources import table_log as tl
 
-    dim = len(corpus.select(vec).first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
+    sub = _subdim(corpus, vec, m)
     if train == "sample":
         from ome_arrow_spark.operators import quantizer as QZ
         from ome_arrow_spark.plans import tuning
@@ -330,20 +263,13 @@ def build_pq_index(
         )
     if train != "exact":
         raise ValueError(f"train must be 'exact' or 'sample', got {train!r}")
-    base = corpus.select(
-        F.col(corpus_id).alias("cid"), _normalize(F.col(vec)).alias("__nv")
+    codebooks, coded = _train_encode_exact(
+        corpus, corpus_id, vec, m, sub, k, iterations
     )
-    base = base.localCheckpoint()  # the joint training + encode reuse it
-    codebooks = _exact_pq_codebooks(base, m, sub, k, iterations)
-    # argmin encode via the bit-identical Arrow batch UDF
-    # (_pq_encode_exact_udf) instead of m·k interpreted sub-folds/row;
     # checkpointed so repartitionByRange's boundary-sampling job does
     # not evaluate the encode a second time (thin codes — cheap at any
-    # scale, r14).
-    coded = base.select(
-        "cid",
-        _pq_encode_exact_udf(codebooks)(F.col("__nv")).alias("codes"),
-    ).localCheckpoint(eager=True)
+    # scale)
+    coded = coded.localCheckpoint(eager=True)
     return tl.create_table(
         spark,
         coded.repartitionByRange(2, "cid"),
@@ -687,8 +613,11 @@ def build_ivfpq_index(
 
     ``train="sample"`` trains coarse centroids AND codebooks on one
     bounded sample and produces (centroid_id, codes) in a single
-    Arrow-batched corpus pass — no scratch PQ table, one write."""
-    from ome_arrow_spark.operators.clustering import kmeans
+    Arrow-batched corpus pass.  ``train="exact"`` trains the coarse
+    quantizer and the codebooks with the one exact k-means
+    (:func:`clustering._kmeans`), the same codebooks and codes
+    :func:`build_pq_index` stores for this corpus."""
+    from ome_arrow_spark.operators.clustering import _kmeans
     from ome_arrow_spark.sources import table_log as tl
     from ome_arrow_spark.operators import ann_index as AI
 
@@ -733,61 +662,48 @@ def build_ivfpq_index(
         )
     if train != "exact":
         raise ValueError(f"train must be 'exact' or 'sample', got {train!r}")
-    # Coarse assignment and the scratch PQ build are INDEPENDENT —
-    # overlap them (guide §2.6); each is a chain of tiny stages that
-    # leaves the cluster idle.  Result-identical: same plans, same
-    # collected results, only submission order changes (r14).
+    # The coarse k-means and the PQ training are INDEPENDENT — overlap
+    # them; each is a chain of tiny stages that leaves the cluster idle.
+    # Result-identical: same plans, same collected results, only
+    # submission order changes.
     from concurrent.futures import ThreadPoolExecutor
 
     def _coarse():
-        return kmeans(
-            corpus.select(
-                F.col(corpus_id).alias("vec_id"), F.col(vec).alias("embedding")
-            ),
-            k=n_centroids,
-            iterations=iterations,
-        ).withColumnRenamed("vec_id", corpus_id)
+        assign, cents = _kmeans(
+            corpus.select(F.col(corpus_id), F.col(vec).alias("__v")),
+            n_centroids,
+            iterations,
+            corpus_id,
+        )
+        cent_map = {
+            int(r["cluster"]): [float(x) for x in r["ctr"]]
+            for r in cents.collect()
+        }
+        return assign, cent_map
 
-    # PQ codes from a scratch PQ build reused via its stored codebooks
-    tmp_pq = table + ".pqtmp"
     with ThreadPoolExecutor(max_workers=2) as pool:
         coarse_fut = pool.submit(_coarse)
-        build_pq_index(
-            spark, corpus, tmp_pq, m=m, k=k, corpus_id=corpus_id, vec=vec,
-            iterations=iterations, overwrite=True,
+        sub = _subdim(corpus, vec, m)
+        books, coded = _train_encode_exact(
+            corpus, corpus_id, vec, m, sub, k, iterations
         )
-        assign = coarse_fut.result()
-    props = tl.table_properties(tmp_pq)
-    codes = tl.read_table(spark, tmp_pq)
-    from ome_arrow_spark.operators.clustering import cluster_means
-
-    cents = cluster_means(
-        corpus.select(F.col(corpus_id), F.col(vec).alias("__cv"))
-        .join(assign.select(F.col(corpus_id), F.col("cluster")), corpus_id)
-        .select("cluster", "__cv"),
-        vec_col="__cv",
-    ).collect()
-    cent_map = {int(r["cluster"]): [float(x) for x in r["ctr"]] for r in cents}
-    rows = codes.join(
+        assign, cent_map = coarse_fut.result()
+    rows = coded.join(
         assign.select(F.col(corpus_id).alias("cid"), "cluster"), "cid"
     ).select(
         F.col("cluster").cast("int").alias("centroid_id"), "cid", "codes"
-    ).localCheckpoint(eager=True)  # thin codes; see build_pq_index (r14)
-    v = tl.create_table(
+    ).localCheckpoint(eager=True)  # thin codes; see build_pq_index
+    return tl.create_table(
         spark,
         rows.repartitionByRange(max(2, n_centroids // 2), "centroid_id"),
         table,
         properties={
-            CODEBOOKS_PROP: props[CODEBOOKS_PROP],
-            SUBDIM_PROP: props[SUBDIM_PROP],
+            CODEBOOKS_PROP: json.dumps(books),
+            SUBDIM_PROP: str(sub),
             AI.CENTROIDS_PROP: json.dumps(cent_map, sort_keys=True),
         },
         overwrite=overwrite,
     )
-    import shutil
-
-    shutil.rmtree(tmp_pq, ignore_errors=True)
-    return v
 
 
 def ivfpq_rerank_search(

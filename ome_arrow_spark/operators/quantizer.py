@@ -2,10 +2,11 @@
 ANN indexes (ann_index.py / pq_index.py).
 
 The default ``train="exact"`` build path runs the oracle-reproducible
-decimal k-means (clustering.py) so the driver's DuckDB twin can replay
-training bit-for-bit; that exactness costs one shuffle per iteration
-per (sub)space plus an interpreted argmin per row, which is the wrong
-trade at corpus scale.  ``train="sample"`` is the FAISS shape instead:
+decimal k-means — the one exact k-means, ``_kmeans`` in clustering.py,
+shared by the IVF, PQ and IVF+PQ builds — so the DuckDB oracle can
+replay training bit-for-bit; that exactness costs one shuffle per
+iteration plus an interpreted argmin per row, which is the wrong trade
+at corpus scale.  ``train="sample"`` is the FAISS shape instead:
 
 - TRAIN on a bounded driver-side sample (numpy Lloyd's, k-means++
   init, seeded — quantizer quality depends on the sample distribution,

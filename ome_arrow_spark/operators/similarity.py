@@ -738,31 +738,24 @@ def ivf_topk(
     brute force."""
     from pyspark.sql.window import Window
 
-    from ome_arrow_spark.operators.clustering import (
-        _sq_l2,
-        cluster_means,
-        kmeans,
-        pack_centroids,
+    from ome_arrow_spark.operators.clustering import _kmeans, _sq_l2, pack_centroids
+
+    # coarse quantizer trained on the corpus (deterministic init/iters);
+    # its centroids are the means of the final assignment, packed into
+    # one broadcast row instead of plan literals
+    assign, cents = _kmeans(
+        corpus.select(F.col(corpus_id), F.col(vec).alias("__v")),
+        n_centroids,
+        3,
+        corpus_id,
     )
-
-    # coarse quantizer trained on the corpus (deterministic init/iters)
-    assign = kmeans(
-        corpus.select(F.col(corpus_id).alias("vec_id"), F.col(vec).alias("embedding")),
-        k=n_centroids,
-        iterations=3,
-    ).withColumnsRenamed({"vec_id": corpus_id})
-    c_listed = corpus.select(
+    packed = pack_centroids(cents).localCheckpoint(eager=True)
+    c_listed = assign.select(
         F.col(corpus_id),
-        F.col(vec).alias("__cv"),
-        norm(F.col(vec)).alias("__cn"),
-    ).join(assign, corpus_id)
-
-    # centroids recomputed as cluster means — vector-native (O(1) agg
-    # expressions regardless of dim), packed into one broadcast row
-    # instead of plan literals
-    packed = pack_centroids(
-        cluster_means(c_listed, vec_col="__cv")
-    ).localCheckpoint(eager=True)
+        F.col("__v").alias("__cv"),
+        norm(F.col("__v")).alias("__cn"),
+        "cluster",
+    )
 
     # per query: n_probe nearest centroids (query side is small — the
     # explode + window ranks k centroid candidates per query)

@@ -65,13 +65,13 @@ _DRIVER_WINDOW: tuple[str, ...] = (
     "generator_outer", "graph_bfs_trade", "graph_cheapest_route",
     "heavy_hitters_bigrams", "heavy_hitters_terms",
     "histogram_totalprice", "hll_union_distinct", "hybrid_retrieval_rrf",
-    "join_lateral", "join_null_safe", "join_salted_skew", "join_semi",
+    "join_lateral", "join_null_safe", "join_salted_skew", "kmeans_embeddings",
     "lm_bigram_score", "media_audio_features", "media_audio_resample",
     "media_dir_ingest", "media_features", "media_image_resize",
     "media_video_frames", "ome_pipeline", "ome_rgba_repack",
     "ome_slice_conftest", "ome_zarr_blosc_roundtrip",
     "orc_partitioned_roundtrip", "q1_pricing_summary",
-    "q21_waiting_supplier", "skew_report", "sort_nulls_order",
+    "q21_waiting_supplier", "skew_report", "knn_cosine_ivf",
     "sql_api_q1", "stratified_sample", "string_distance",
     "time_hierarchy_rollup", "udtf_sentences",
     "window_rank", "ann_ivfpq_rerank", "ann_pq_rerank",
@@ -1472,7 +1472,7 @@ def kmeans_cte_fragments(
     prefix: str = "",
 ) -> tuple[list[str], str]:
     """Unrolled k-means as chained CTE strings mirroring
-    operators/clustering.py (assign_nearest + cluster_means) stage for
+    operators/clustering.py (its one exact k-means, ``_kmeans``) stage for
     stage over a source CTE ``src(id_col, v DOUBLE[])``. Returns
     (cte_list, final_assignment_cte_name). Reused by the IVF oracle."""
     d2 = (

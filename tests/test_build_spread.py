@@ -119,3 +119,27 @@ def test_spread_engages_on_small_split_corpus(spark, corpus):
     # wide input: guard is a no-op (returns the frame unchanged)
     wide = corpus.repartition(sc.defaultParallelism + 1, F.col("cid"))
     assert spread_small_input(wide, "cid") is wide
+
+
+def test_ivf_sample_build_probes_splits_once(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """One split-count probe per sample-mode IVF build: the spread
+    guard's answer also decides the checkpoint (each warm probe is
+    tens of ms of planning time)."""
+    from ome_arrow_spark.operators import ann_index as AI
+    from ome_arrow_spark.plans import tuning
+
+    calls = []
+    real = tuning.few_splits
+
+    def counted(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(tuning, "few_splits", counted)
+    AI.build_ivf_index(
+        spark, corpus, str(tmp_path / "ivf"), n_centroids=4,
+        train="sample", sample_size=256,
+    )
+    assert len(calls) == 1

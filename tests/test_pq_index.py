@@ -113,6 +113,61 @@ def test_indivisible_dim_rejected(spark, corpus):
         PQ.build_pq_index(spark, corpus, "/tmp/nope_pq", m=7)
 
 
+def test_exact_codebooks_equal_per_subspace_kmeans(spark, tmp_path, corpus):
+    """The exact build trains all m subspaces in one grouped k-means;
+    each stored codebook must equal ``kmeans`` + ``cluster_means`` run
+    on that subspace's slice of the normalized vectors alone — the
+    per-subspace run the DuckDB oracle replays — bit for bit."""
+    from ome_arrow_spark.operators.clustering import cluster_means, kmeans
+
+    m, k, iterations = 4, 4, 3
+    t = str(tmp_path / "pq_exact")
+    PQ.build_pq_index(spark, corpus, t, m=m, k=k, iterations=iterations)
+    props = tl.table_properties(t)
+    books = json.loads(props[PQ.CODEBOOKS_PROP])
+    sub = int(props[PQ.SUBDIM_PROP])
+    nv = corpus.select(
+        F.col("cid").alias("vec_id"),
+        PQ._normalize(F.col("embedding")).alias("__nv"),
+    )
+    for s in range(m):
+        sl = nv.select(
+            "vec_id", F.slice("__nv", s * sub + 1, sub).alias("embedding")
+        )
+        assign = kmeans(sl, k=k, iterations=iterations)
+        means = cluster_means(
+            sl.join(assign, "vec_id").select(
+                "cluster", F.col("embedding").alias("__v")
+            )
+        )
+        got = {r["cluster"]: list(r["ctr"]) for r in means.collect()}
+        assert books[s] == [got.get(j, [0.0] * sub) for j in range(k)]
+
+
+def test_ivfpq_exact_build_shares_pq_codes(spark, tmp_path, corpus):
+    """The exact IVF+PQ build trains and encodes in place — no scratch
+    ``<table>.pqtmp`` table — and stores the same codebooks and
+    (cid, codes) as build_pq_index on the same corpus, m and k."""
+    m, k = 4, 4
+    t_pq = str(tmp_path / "pq")
+    t_ivfpq = str(tmp_path / "ivfpq")
+    PQ.build_pq_index(spark, corpus, t_pq, m=m, k=k)
+    PQ.build_ivfpq_index(spark, corpus, t_ivfpq, n_centroids=4, m=m, k=k)
+    assert not (tmp_path / "ivfpq.pqtmp").exists()
+    pq_props = tl.table_properties(t_pq)
+    ivfpq_props = tl.table_properties(t_ivfpq)
+    assert ivfpq_props[PQ.CODEBOOKS_PROP] == pq_props[PQ.CODEBOOKS_PROP]
+    assert ivfpq_props[PQ.SUBDIM_PROP] == pq_props[PQ.SUBDIM_PROP]
+
+    def codes(t):
+        return sorted(
+            (r["cid"], tuple(r["codes"]))
+            for r in tl.read_table(spark, t).collect()
+        )
+
+    assert codes(t_ivfpq) == codes(t_pq)
+
+
 @pytest.mark.heavy
 def test_incremental_add_codes_match_build(spark, tmp_path, corpus):
     """Vectors added via MERGE must get the SAME codes build-time
