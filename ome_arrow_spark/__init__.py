@@ -12,8 +12,8 @@ Two halves (see SURVEY.md):
    search, text analysis, multimodal columns).
 
 Everything is DataFrame/SQL-first: Catalyst plans, whole-stage codegen,
-nested-schema pruning. Pandas UDFs appear only at true codec boundaries
-(TIFF/Zarr decode-encode).
+nested-schema pruning. Python UDFs (codecs, numpy vector kernels)
+exchange Arrow batches through ``mapInArrow`` / ``arrow_udf``.
 """
 
 from ome_arrow_spark.core import OmeImages

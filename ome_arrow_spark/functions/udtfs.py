@@ -1,7 +1,7 @@
 """Python UDTFs (table functions, SURVEY.md §2C "grouped map / UDTF"
 row): one input row → many output rows with arbitrary Python logic.
 
-Like the pandas UDAFs these are built lazily (the decorator resolves
+Like the Arrow UDAFs these are built lazily (the decorator resolves
 its DDL schema against the active session). UDTFs run row-at-a-time in
 the Python worker — the slow path by design, reserved for logic that
 neither built-ins nor Arrow-batched UDFs can express; the sentence

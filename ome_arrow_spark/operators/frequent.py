@@ -8,7 +8,7 @@ cardinality explodes the shuffle.  This module runs the classic
 two-pass bounded-memory algorithm instead:
 
 1. **Candidates** — each partition summarizes its token stream with a
-   Misra-Gries sketch of capacity ``m`` (mapInPandas, one dict of ≤ m
+   Misra-Gries sketch of capacity ``m`` (mapInArrow, one dict of ≤ m
    entries per partition, no shuffle).  Pigeonhole guarantee: any term
    with GLOBAL count > total_tokens/m must survive in at least one
    partition's sketch, so the union of partition candidates contains
@@ -30,6 +30,7 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,32 +48,36 @@ def _tokenize(text: str, ngram: int) -> Iterator[str]:
             yield " ".join(toks[i : i + ngram])
 
 
-def _misra_gries_partition(m: int, ngram: int, text_col: str):
-    """mapInPandas stage: one capacity-``m`` MG sketch per partition."""
-    import pandas as pd
+def _texts(batches: Iterator[pa.RecordBatch], text_col: str) -> Iterator[str]:
+    """The non-null texts of a ``mapInArrow`` partition, in row order."""
+    for batch in batches:
+        for text in batch.column(text_col).to_pylist():
+            if text is not None:
+                yield str(text)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+
+def _misra_gries_partition(m: int, ngram: int, text_col: str):
+    """mapInArrow stage: one capacity-``m`` MG sketch per partition."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         counters: dict[str, int] = {}
-        for pdf in batches:
-            for text in pdf[text_col]:
-                if text is None:
-                    continue
-                for tok in _tokenize(str(text), ngram):
-                    if tok in counters:
-                        counters[tok] += 1
-                    elif len(counters) < m:
-                        counters[tok] = 1
-                    else:
-                        # decrement-all step, dropping zeroed entries
-                        dead = []
-                        for key in counters:
-                            counters[key] -= 1
-                            if counters[key] == 0:
-                                dead.append(key)
-                        for key in dead:
-                            del counters[key]
-        yield pd.DataFrame(
-            {"term": list(counters)}, columns=["term"]
+        for text in _texts(batches, text_col):
+            for tok in _tokenize(text, ngram):
+                if tok in counters:
+                    counters[tok] += 1
+                elif len(counters) < m:
+                    counters[tok] = 1
+                else:
+                    # decrement-all step, dropping zeroed entries
+                    dead = []
+                    for key in counters:
+                        counters[key] -= 1
+                        if counters[key] == 0:
+                            dead.append(key)
+                    for key in dead:
+                        del counters[key]
+        yield pa.RecordBatch.from_pydict(
+            {"term": pa.array(list(counters), pa.string())}
         )
 
     return run
@@ -81,20 +86,18 @@ def _misra_gries_partition(m: int, ngram: int, text_col: str):
 def _exact_count_partition(cand: frozenset, ngram: int, text_col: str):
     """Second pass: per-partition exact counts restricted to the
     candidate set (bounded by |candidates|)."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         counts: dict[str, int] = {}
-        for pdf in batches:
-            for text in pdf[text_col]:
-                if text is None:
-                    continue
-                for tok in _tokenize(str(text), ngram):
-                    if tok in cand:
-                        counts[tok] = counts.get(tok, 0) + 1
-        yield pd.DataFrame(
-            {"term": list(counts), "cnt": list(counts.values())},
-            columns=["term", "cnt"],
+        for text in _texts(batches, text_col):
+            for tok in _tokenize(text, ngram):
+                if tok in cand:
+                    counts[tok] = counts.get(tok, 0) + 1
+        yield pa.RecordBatch.from_pydict(
+            {
+                "term": pa.array(list(counts), pa.string()),
+                "cnt": pa.array(list(counts.values()), pa.int64()),
+            }
         )
 
     return run
@@ -117,7 +120,7 @@ def heavy_hitters(
     spark = docs.sparkSession
     src = docs.select(F.col(text).alias("__text"))
     cand_rows = (
-        src.mapInPandas(
+        src.mapInArrow(
             _misra_gries_partition(m, ngram, "__text"), "term string"
         )
         .distinct()
@@ -127,7 +130,7 @@ def heavy_hitters(
     if not cand:
         return spark.createDataFrame([], "term string, cnt long, rk int")
     counts = (
-        src.mapInPandas(
+        src.mapInArrow(
             _exact_count_partition(cand, ngram, "__text"),
             "term string, cnt long",
         )

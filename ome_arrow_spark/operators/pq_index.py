@@ -32,74 +32,74 @@ from __future__ import annotations
 import json
 import os
 
-import pandas as pd  # module-level so pandas_udf type hints resolve
+import numpy as np
+import pyarrow as pa  # module-level so arrow_udf type hints resolve
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from ome_arrow_spark.sources.arrow_records import list_to_matrix, matrix_to_list
 
 CODEBOOKS_PROP = "ann.pq.codebooks"
 SUBDIM_PROP = "ann.pq.subdim"
 
 #: Above this many queries, per-query ADC LUTs are computed by an
-#: Arrow-batched pandas UDF on the executors instead of driver-side
-#: numpy (VERDICT r7 "Next round" #3: the collect path is right for
-#: interactive |Q| but wrong for a 10⁶-query batch join).
+#: Arrow UDF on the executors instead of driver-side numpy: the collect
+#: path is right for interactive |Q| but wrong for a 10⁶-query batch
+#: join.
 DRIVER_LUT_MAX_QUERIES = 1024
 
 
-def _lut_udf(books: list, sub: int):
+def _lut_udf(books: list, sub: int, vec: str):
     """Distributed ADC lookup-table: the flat m×k array of
     sub-dot-products between the L2-normalized query vector and every
-    codebook centroid, as an Arrow-batched pandas UDF (the codebooks
-    travel in the UDF closure — m·k·sub doubles, a few KB).  The
-    executor-side twin of the driver numpy LUT in :func:`pq_search` —
-    same float64 normalize + per-subspace BLAS dot, whole batches at a
-    time.  (A pure-Catalyst HOF formulation was tried first and costs
-    ~40 ms/row: nested ``transform``/``aggregate`` lambdas are
-    interpreted, never codegen'd, and the normalize sub-expression
-    inlines into all m·k entries.)"""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    codebook centroid, as an Arrow UDF (the codebooks travel in the UDF
+    closure — m·k·sub doubles, a few KB).  The executor-side twin of
+    the driver numpy LUT in :func:`pq_search` — same float64 normalize
+    + per-subspace BLAS dot, whole batches at a time.  (A pure-Catalyst
+    HOF formulation was tried first and costs ~40 ms/row: nested
+    ``transform``/``aggregate`` lambdas are interpreted, never
+    codegen'd, and the normalize sub-expression inlines into all m·k
+    entries.)"""
+    from pyspark.sql.functions import arrow_udf
 
     B = [np.asarray(b, dtype=np.float64) for b in books]  # m × (k, sub)
     m, k = len(B), B[0].shape[0]
 
-    @pandas_udf("array<double>")
-    def lut(v: pd.Series) -> pd.Series:
+    @arrow_udf("array<double>")
+    def lut(v: pa.Array) -> pa.Array:
         if not len(v):
-            return pd.Series([], dtype=object)
-        X = np.array([np.asarray(x, dtype=np.float64) for x in v])
+            return pa.array([], pa.list_(pa.float64()))
+        X = list_to_matrix(v, vec)
         Xn = X / np.sqrt((X * X).sum(axis=1, keepdims=True))
         out = np.empty((len(X), m * k))
         for s in range(m):
             out[:, s * k : (s + 1) * k] = Xn[:, s * sub : (s + 1) * sub] @ B[s].T
-        return pd.Series(out.tolist())
+        return matrix_to_list(out)
 
     return lut
 
 
-def _probe_udf(cent_ids: list, cent_mat, n_probe: int):
+def _probe_udf(cent_ids: list, cent_mat, n_probe: int, vec: str):
     """Distributed IVF probe selection: per query, the ``n_probe``
     nearest coarse-centroid ids under squared-L2 with the driver
     path's exact (d2, centroid_id) tie-break — literally the same
     numpy statements, batch-applied."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     ids = list(cent_ids)
     C = np.asarray(cent_mat, dtype=np.float64)
 
-    @pandas_udf("array<int>")
-    def probe(v: pd.Series) -> pd.Series:
+    @arrow_udf("array<int>")
+    def probe(v: pa.Array) -> pa.Array:
         res = []
-        for x in v:
-            qv = np.asarray(x, dtype=np.float64)
+        for qv in list_to_matrix(v, vec):
             d2 = ((C - qv) ** 2).sum(axis=1)
             order = sorted(range(len(ids)), key=lambda i: (d2[i], ids[i]))
             res.append([int(ids[i]) for i in order[:n_probe]])
-        return pd.Series(res)
+        return pa.array(res, pa.list_(pa.int32()))
 
     return probe
 
@@ -115,27 +115,119 @@ def _normalize(vec):
     return F.transform(vec, lambda x: x.cast("double") / n)
 
 
-def _pq_encode_exact_udf(books):
-    """argmin PQ encode BIT-IDENTICAL to the in-plan fold (r14): per
+def _driver_lut(qv, books, sub: int) -> list[float]:
+    """One query's flat m×k ADC lookup table on the driver: one
+    ``np.dot`` per entry of the L2-normalized query's subvector and a
+    centroid — the arithmetic every driver path shares (``einsum``
+    would differ in the last ulp).  :func:`_lut_udf` is the executor
+    twin."""
+    qv = np.asarray(qv, dtype=np.float64)
+    qv = qv / np.sqrt((qv * qv).sum())
+    return [
+        float(np.dot(qv[s * sub : (s + 1) * sub], np.asarray(c, np.float64)))
+        for s, book in enumerate(books)
+        for c in book
+    ]
+
+
+def _adc_fold(m: int, k: int) -> Column:
+    """In-plan ADC score of a ``codes`` row against its query's flat
+    ``__lut``: ``Σ_s lut[s·k + code_s]``, summed left to right."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.lit(0.0),
+        lambda acc, s: acc
+        + F.element_at("__lut", s * k + F.element_at("codes", s + 1) + 1),
+    )
+
+
+def _empty_ranked(spark, table, query_id, qid_type, score: str) -> DataFrame:
+    """The typed empty ``(query_id, cid, score, rk)`` result.  cid keeps
+    the STORED table's id type (string ids are as valid as longs) so
+    the empty path matches the populated one."""
+    from ome_arrow_spark.sources import table_log as tl
+
+    snap = tl._resolve_snapshot(table)
+    stored = T.StructType.fromJson(json.loads(snap["schema"]))
+    return spark.createDataFrame(
+        [],
+        T.StructType(
+            [
+                T.StructField(query_id, qid_type),
+                T.StructField("cid", stored["cid"].dataType),
+                T.StructField(score, T.DoubleType()),
+                T.StructField("rk", T.IntegerType()),
+            ]
+        ),
+    )
+
+
+def _top_ranked(scored: DataFrame, query_id: str, score: str, topk: int):
+    """Rank each query's rows by (``score`` desc, cid asc) as int
+    ``rk`` and keep the first ``topk``."""
+    w = Window.partitionBy(query_id).orderBy(F.col(score).desc(), F.col("cid"))
+    return scored.withColumn(
+        "rk", F.row_number().over(w).cast("int")
+    ).filter(F.col("rk") <= topk)
+
+
+def _exact_rerank(
+    cand, corpus, queries, topk, query_id, corpus_id, vec, digits,
+    broadcast_queries: bool,
+) -> DataFrame:
+    """Exact cosine top-``topk`` of the ``(query_id, cid)`` candidates
+    against the raw corpus and query vectors.  Norms are computed once
+    per side row, not per candidate pair: one dot fold per candidate,
+    bit-identical to the fused cosine."""
+    from ome_arrow_spark.functions.vectors import dot, norm
+
+    q = queries.select(
+        F.col(query_id), F.col(vec).alias("__qe"), norm(F.col(vec)).alias("__qn")
+    )
+    exactd = (
+        cand.join(
+            corpus.select(
+                F.col(corpus_id).alias("cid"),
+                F.col(vec).alias("__ce"),
+                norm(F.col(vec)).alias("__cn"),
+            ),
+            "cid",
+        )
+        .join(F.broadcast(q) if broadcast_queries else q, query_id)
+        .select(
+            query_id,
+            "cid",
+            F.round(
+                dot(F.col("__qe"), F.col("__ce"))
+                / (F.col("__qn") * F.col("__cn")),
+                digits,
+            ).alias("cos_sim"),
+        )
+    )
+    return _top_ranked(exactd, query_id, "cos_sim", topk)
+
+
+def _pq_encode_exact_udf(books, vec: str):
+    """argmin PQ encode BIT-IDENTICAL to the in-plan fold: per
     subspace, d² accumulates COLUMN BY COLUMN in element order — the
     exact IEEE sequence of ``aggregate(zip_with(slice, ctr,
     (a−b)·(a−b)), 0, +)`` — and ``np.argmin`` keeps the FIRST minimum,
-    matching the fold's strict-< lowest-cluster tie-break.  The old
-    expression evaluated m·k interpreted sub-folds per ROW (m=32, k=16
-    → 512 lambda walks/row; measured ~7 s of the 21 s exact build at
-    sf0.1).  Contract: finite normalized vectors (zero-norm rows would
-    NaN both paths differently)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    matching the fold's strict-< lowest-cluster tie-break.  The
+    expression form evaluates m·k interpreted sub-folds per ROW (m=32,
+    k=16 → 512 lambda walks/row; measured ~7 s of the 21 s exact build
+    at sf0.1).  Contract: finite normalized vectors (zero-norm rows
+    would NaN both paths differently); a null ``vec`` row raises
+    ``ValueError``."""
+    from pyspark.sql.functions import arrow_udf
 
     B = np.asarray(books, dtype=np.float64)  # (m, k, sub)
     m, k, sub = B.shape
 
-    @pandas_udf("array<int>")
-    def enc(v: pd.Series) -> pd.Series:
+    @arrow_udf("array<int>")
+    def enc(v: pa.Array) -> pa.Array:
         if not len(v):
-            return pd.Series([], dtype=object)
-        X = np.vstack(v.to_numpy())  # normalized doubles from __nv
+            return pa.array([], pa.list_(pa.int32()))
+        X = list_to_matrix(v, vec)  # normalized doubles from __nv
         n = len(X)
         codes = np.empty((n, m), dtype=np.int32)
         for s in range(m):
@@ -143,12 +235,12 @@ def _pq_encode_exact_udf(books):
             D = np.zeros((n, k))
             for i in range(sub):
                 diff = Xs[:, i : i + 1] - B[s, :, i]
-                # in-place square + accumulate (r14): identical values
-                # and accumulation order, two fewer (n, k) temporaries
+                # in-place square + accumulate: identical values and
+                # accumulation order, two fewer (n, k) temporaries
                 np.multiply(diff, diff, out=diff)
                 D += diff
             codes[:, s] = np.argmin(D, axis=1)
-        return pd.Series(list(codes))
+        return matrix_to_list(codes)
 
     return enc
 
@@ -194,7 +286,7 @@ def _train_encode_exact(
     # on tiny data — pad with zero vectors, never chosen)
     books = [[cmaps[s].get(j, [0.0] * sub) for j in range(k)] for s in range(m)]
     coded = base.select(
-        "cid", _pq_encode_exact_udf(books)(F.col("__nv")).alias("codes")
+        "cid", _pq_encode_exact_udf(books, vec)(F.col("__nv")).alias("codes")
     )
     return books, coded
 
@@ -244,7 +336,7 @@ def build_pq_index(
         )
         # repartitionByRange's boundary-sampling job evaluates its
         # child ONCE MORE, so without this the Arrow encode pass runs
-        # twice (r14; measured 2.2 -> 0.6 s on the write phase at the
+        # twice (measured 2.2 -> 0.6 s on the write phase at the
         # 100k fixture).  The checkpointed relation is THIN codes —
         # m ints + id per row, the artifact PQ exists to make small —
         # so one eager materialization is cheap at any corpus scale.
@@ -301,9 +393,9 @@ def add_to_pq_index(
     base = new_vectors.select(
         F.col(corpus_id).alias("cid"), _normalize(F.col(vec)).alias("__nv")
     )
-    # same bit-identical Arrow argmin encode as build_pq_index (r14)
+    # same bit-identical Arrow argmin encode as build_pq_index
     coded = base.select(
-        "cid", _pq_encode_exact_udf(books)(F.col("__nv")).alias("codes")
+        "cid", _pq_encode_exact_udf(books, vec)(F.col("__nv")).alias("codes")
     )
     return tl.upsert_table(spark, coded, table, key="cid")
 
@@ -313,10 +405,12 @@ def _adc_topk_arrow(
 ):
     """Arrow ADC scan: numpy LUT gather per code batch with the SAME
     left-to-right subspace accumulation order as the in-plan fold, and
-    per-batch top-k per query so the ranking shuffle carries
-    O(partitions × |Q| × topk) rows instead of |Q| × |codes|."""
-    import numpy as np
+    per-batch top-k per query (:func:`similarity._batch_topk`) so the
+    ranking shuffle carries O(partitions × |Q| × topk) rows instead of
+    |Q| × |codes|."""
+    from pyspark.sql.pandas.types import to_arrow_type
 
+    from ome_arrow_spark.operators.similarity import _batch_topk
     from ome_arrow_spark.sources import table_log as tl
 
     props = tl.table_properties(table)
@@ -325,59 +419,32 @@ def _adc_topk_arrow(
     q_rows = queries.select(F.col(query_id), F.col(vec)).collect()
     if not q_rows:
         raise ValueError("pq_search(impl='arrow'): empty query side")
-    qids = np.array([r[0] for r in q_rows])
-    # LUT[q, s, j] = q_sub(s) · book[s][j] — built with the exact same
-    # np.dot reductions as the in-plan driver-LUT path, so the two
-    # impls score bit-identically (einsum would differ in the last ulp)
-    lut = np.empty((len(q_rows), m, k))
-    for qi, r in enumerate(q_rows):
-        qv = np.asarray(r[vec], dtype=np.float64)
-        qv = qv / np.sqrt((qv * qv).sum())
-        for s in range(m):
-            qs = qv[s * sub:(s + 1) * sub]
-            for j in range(k):
-                lut[qi, s, j] = float(np.dot(qs, books[s][j]))
-    qid_t = queries.schema[query_id].dataType.simpleString()
+    qid_type = queries.schema[query_id].dataType
+    qids = pa.array([r[0] for r in q_rows], to_arrow_type(qid_type))
+    # LUT[q, s, j] = q_sub(s) · book[s][j] — the in-plan driver path's
+    # own LUT, so the two impls score bit-identically
+    lut = np.array([_driver_lut(r[vec], books, sub) for r in q_rows])
+    lut = lut.reshape(len(q_rows), m, k)
     codes = tl.read_table(spark, table)
     cid_t = codes.schema["cid"].dataType.simpleString()
-    out_schema = f"{query_id} {qid_t}, cid {cid_t}, adc_score double"
-    nq = len(qids)
+    out_schema = (
+        f"{query_id} {qid_type.simpleString()}, cid {cid_t}, adc_score double"
+    )
+    names = (query_id, "cid", "adc_score")
 
     def score(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            C = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
-            acc = np.zeros((len(C), nq))
+            C = list_to_matrix(batch.column("codes"), "codes", np.int64)
+            acc = np.zeros((len(C), len(q_rows)))
             for s in range(m):  # sequential: matches the plan fold
                 acc += lut[:, s, :][:, C[:, s]].T
             S = np.round(acc, digits)
-            kk = min(topk, len(C))
-            cids = pdf["cid"].to_numpy()
-            # per-batch top-k with the GLOBAL tiebreak (score desc, cid
-            # asc) — plain argpartition would drop tied candidates
-            # nondeterministically and diverge from the plan impl
-            parts = []
-            for q in range(nq):
-                sel = np.lexsort((cids, -S[:, q]))[:kk]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            query_id: qids[q],
-                            "cid": cids[sel],
-                            "adc_score": S[sel, q],
-                        }
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
+            yield _batch_topk(qids, batch.column("cid"), S, topk, names)
 
-    scored = codes.select("cid", "codes").mapInPandas(score, out_schema)
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("adc_score").desc(), F.col("cid")
-    )
-    return scored.withColumn(
-        "rk", F.row_number().over(w).cast("int")
-    ).filter(F.col("rk") <= topk)
+    scored = codes.select("cid", "codes").mapInArrow(score, out_schema)
+    return _top_ranked(scored, query_id, "adc_score", topk)
 
 
 def pq_search(
@@ -395,19 +462,18 @@ def pq_search(
     approximates the cosine of the normalized vectors.
 
     Up to ``max_driver_queries`` queries, per-query LUTs are built
-    driver-side (numpy) and broadcast; above it, :func:`_lut_udf`
-    computes them on the executors and the code×query join runs
-    un-broadcast, so a 10⁶-query batch never materializes on the
-    driver.
+    driver-side (numpy) and broadcast; above it, the Arrow UDF
+    :func:`_lut_udf` computes them on the executors and the code×query
+    join runs un-broadcast, so a 10⁶-query batch never materializes on
+    the driver.
 
     ``impl="plan"`` (default) scores with the in-plan Catalyst fold —
     the mode the driver oracle replays.  ``impl="arrow"``
-    (:func:`_adc_topk_arrow`) is the corpus-scale scan: numpy LUT
-    gather per batch + per-batch top-k, so only O(partitions×|Q|×topk)
-    rows reach the ranking shuffle (~4× on the 100k bench fixture;
-    same accumulation order, numpy half-even rounding)."""
-    import numpy as np
-
+    (:func:`_adc_topk_arrow`) is the corpus-scale ``mapInArrow`` scan:
+    numpy LUT gather per code batch + per-batch top-k, so only
+    O(partitions×|Q|×topk) rows reach the ranking shuffle (~4× on the
+    100k bench fixture; same accumulation order, numpy half-even
+    rounding)."""
     from ome_arrow_spark.sources import table_log as tl
 
     if impl == "arrow":
@@ -429,53 +495,17 @@ def pq_search(
         # query's LUT exactly once on the shuffle write side.
         ldf = queries.select(
             F.col(query_id),
-            _lut_udf(books, sub)(F.col(vec)).alias("__lut"),
+            _lut_udf(books, sub, vec)(F.col(vec)).alias("__lut"),
         ).repartition(spark.sparkContext.defaultParallelism)
-        codes = tl.read_table(spark, table)
-        score = F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.lit(0.0),
-            lambda acc, s: acc
-            + F.element_at("__lut", s * k + F.element_at("codes", s + 1) + 1),
+        scored = tl.read_table(spark, table).crossJoin(ldf).select(
+            query_id, "cid", F.round(_adc_fold(m, k), digits).alias("adc_score")
         )
-        scored = codes.crossJoin(ldf).select(
-            query_id, "cid", F.round(score, digits).alias("adc_score")
-        )
-        w = Window.partitionBy(query_id).orderBy(
-            F.col("adc_score").desc(), F.col("cid")
-        )
-        return scored.withColumn(
-            "rk", F.row_number().over(w).cast("int")
-        ).filter(F.col("rk") <= topk)
+        return _top_ranked(scored, query_id, "adc_score", topk)
     q_rows = queries.select(F.col(query_id), F.col(vec)).collect()
     if not q_rows:
-        # cid keeps the STORED table's id type (string ids are as
-        # valid as longs) so the empty path matches the populated one
-        snap0 = tl._resolve_snapshot(table)
-        stored = T.StructType.fromJson(json.loads(snap0["schema"]))
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(query_id, qid_type),
-                    T.StructField("cid", stored["cid"].dataType),
-                    T.StructField("adc_score", T.DoubleType()),
-                    T.StructField("rk", T.IntegerType()),
-                ]
-            ),
-        )
-    luts = []
-    for r in q_rows:
-        qv = np.asarray(r[vec], dtype=np.float64)
-        qv = qv / np.sqrt((qv * qv).sum())
-        flat = []
-        for s in range(m):
-            qs = qv[s * sub : (s + 1) * sub]
-            for j in range(k):
-                flat.append(float(np.dot(qs, np.asarray(books[s][j]))))
-        luts.append((r[query_id], flat))
+        return _empty_ranked(spark, table, query_id, qid_type, "adc_score")
     ldf = spark.createDataFrame(
-        luts,
+        [(r[query_id], _driver_lut(r[vec], books, sub)) for r in q_rows],
         T.StructType(
             [
                 T.StructField(query_id, qid_type),
@@ -483,31 +513,15 @@ def pq_search(
             ]
         ),
     )
-    codes = tl.read_table(spark, table)
-    score = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            "__lut", s * k + F.element_at("codes", s + 1) + 1
-        ),
+    scored = tl.read_table(spark, table).crossJoin(F.broadcast(ldf)).select(
+        query_id, "cid", F.round(_adc_fold(m, k), digits).alias("adc_score")
     )
-    scored = codes.crossJoin(F.broadcast(ldf)).select(
-        query_id,
-        "cid",
-        F.round(score, digits).alias("adc_score"),
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("adc_score").desc(), F.col("cid")
-    )
-    return scored.withColumn(
-        "rk", F.row_number().over(w).cast("int")
-    ).filter(F.col("rk") <= topk)
+    return _top_ranked(scored, query_id, "adc_score", topk)
 
 
 def rerank_depth(n_corpus: int, topk: int = 5, frac: int = 16) -> int:
     """Corpus-derived candidate depth for the exact re-rank stage
-    (r14 — the same fixed-parameter-vs-growing-data hazard class as
+    (the same fixed-parameter-vs-growing-data hazard class as
     knn_join_tables): under a FIXED quantization error, the number of
     distractors whose ADC score beats a true top-k item grows linearly
     with corpus size, so a fixed depth (the old 50) silently loses
@@ -544,50 +558,14 @@ def pq_rerank_search(
     oracle-checkable exactly rather than by recall verdict.
     ``impl`` selects the ADC stage implementation (see
     :func:`pq_search`)."""
-    from ome_arrow_spark.functions.vectors import dot, norm
-
     small_q = queries.count() <= max_driver_queries
     cand = pq_search(
         spark, table, queries, topk=candidates, query_id=query_id, vec=vec,
         max_driver_queries=max_driver_queries, impl=impl,
     ).select(query_id, "cid")
-    # r14: norms once per side row (not per candidate pair) — one dot
-    # fold per rerank candidate, bit-identical to the fused cosine.
-    exactd = (
-        cand.join(
-            corpus.select(
-                F.col(corpus_id).alias("cid"),
-                F.col(vec).alias("__ce"),
-                norm(F.col(vec)).alias("__cn"),
-            ),
-            "cid",
-        )
-        .join(
-            (F.broadcast if small_q else (lambda d: d))(
-                queries.select(
-                    F.col(query_id),
-                    F.col(vec).alias("__qe"),
-                    norm(F.col(vec)).alias("__qn"),
-                )
-            ),
-            query_id,
-        )
-        .select(
-            query_id,
-            "cid",
-            F.round(
-                dot(F.col("__qe"), F.col("__ce"))
-                / (F.col("__qn") * F.col("__cn")),
-                digits,
-            ).alias("cos_sim"),
-        )
+    return _exact_rerank(
+        cand, corpus, queries, topk, query_id, corpus_id, vec, digits, small_q
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cos_sim").desc(), F.col("cid")
-    )
-    return exactd.withColumn(
-        "rk", F.row_number().over(w).cast("int")
-    ).filter(F.col("rk") <= topk)
 
 
 def build_ivfpq_index(
@@ -645,7 +623,7 @@ def build_ivfpq_index(
             QZ.nearest_udf(cents)(F.col(vec)).alias("centroid_id"),
             F.col(corpus_id).alias("cid"),
             QZ.pq_encode_udf(books)(F.col(vec)).alias("codes"),
-        ).localCheckpoint(eager=True)  # thin codes; see build_pq_index (r14)
+        ).localCheckpoint(eager=True)  # thin codes; see build_pq_index
         cent_map = {j: [float(x) for x in cents[j]] for j in range(len(cents))}
         return tl.create_table(
             spark,
@@ -728,9 +706,6 @@ def ivfpq_rerank_search(
     computed on the executors (centroids/codebooks travel in UDF
     closures); only the probed-centroid-id union — bounded by the
     centroid count, not |Q| — is collected for file pruning."""
-    import numpy as np
-
-    from ome_arrow_spark.functions.vectors import dot, norm
     from ome_arrow_spark.sources import table_log as tl
 
     props = tl.table_properties(table)
@@ -749,25 +724,8 @@ def ivfpq_rerank_search(
         else queries.select(F.col(query_id), F.col(vec)).collect()
     )
     qid_type = queries.schema[query_id].dataType
-    snap0 = tl._resolve_snapshot(table)
-    empty = spark.createDataFrame(
-        [],
-        T.StructType(
-            [
-                T.StructField(query_id, qid_type),
-                T.StructField(
-                    "cid",
-                    T.StructType.fromJson(json.loads(snap0["schema"]))[
-                        "cid"
-                    ].dataType,
-                ),
-                T.StructField("cos_sim", T.DoubleType()),
-                T.StructField("rk", T.IntegerType()),
-            ]
-        ),
-    )
     if n_queries == 0:
-        return empty
+        return _empty_ranked(spark, table, query_id, qid_type, "cos_sim")
     if q_rows:
         luts, needed = [], set()
         for r in q_rows:
@@ -778,13 +736,7 @@ def ivfpq_rerank_search(
             )
             probed = [cent_ids[i] for i in order[:n_probe]]
             needed.update(probed)
-            qn = qv / np.sqrt((qv * qv).sum())
-            flat = []
-            for s in range(m):
-                qs = qn[s * sub : (s + 1) * sub]
-                for j in range(k):
-                    flat.append(float(np.dot(qs, np.asarray(books[s][j]))))
-            luts.append((r[query_id], probed, flat))
+            luts.append((r[query_id], probed, _driver_lut(qv, books, sub)))
         ldf = spark.createDataFrame(
             luts,
             T.StructType(
@@ -797,16 +749,16 @@ def ivfpq_rerank_search(
         )
         broadcast_luts = True
     else:
-        # Distributed probe selection + LUTs: Arrow-batched pandas
-        # UDFs replicating the driver path's numpy exactly (same
-        # float64 ops, same (d2, centroid_id) tie-break); repartition
-        # parallelizes the UDFs and the downstream cartesian.
+        # Distributed probe selection + LUTs: Arrow UDFs replicating
+        # the driver path's numpy exactly (same float64 ops, same (d2,
+        # centroid_id) tie-break); repartition parallelizes the UDFs
+        # and the downstream cartesian.
         ldf = queries.select(
             F.col(query_id),
-            _probe_udf(cent_ids, cent_mat, n_probe)(F.col(vec)).alias(
+            _probe_udf(cent_ids, cent_mat, n_probe, vec)(F.col(vec)).alias(
                 "__probed"
             ),
-            _lut_udf(books, sub)(F.col(vec)).alias("__lut"),
+            _lut_udf(books, sub, vec)(F.col(vec)).alias("__lut"),
         ).repartition(spark.sparkContext.defaultParallelism)
         needed = {
             int(r[0])
@@ -816,21 +768,15 @@ def ivfpq_rerank_search(
     snap = tl._resolve_snapshot(table)
     live = tl._files_for_keys(snap["files"], "centroid_id", needed)
     if not live:
-        return empty
+        return _empty_ranked(spark, table, query_id, qid_type, "cos_sim")
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
     lists = spark.read.schema(schema).parquet(
         *[os.path.join(table, p) for p in sorted(live)]
     )
-    score = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at("__lut", s * k + F.element_at("codes", s + 1) + 1),
-    )
     cand_scored = (
         lists.crossJoin(F.broadcast(ldf) if broadcast_luts else ldf)
         .filter(F.array_contains("__probed", F.col("centroid_id")))
-        .select(query_id, "cid", score.alias("__adc"))
+        .select(query_id, "cid", _adc_fold(m, k).alias("__adc"))
     )
     wc = Window.partitionBy(query_id).orderBy(
         F.col("__adc").desc(), F.col("cid")
@@ -840,43 +786,10 @@ def ivfpq_rerank_search(
         .filter(F.col("__crk") <= candidates)
         .select(query_id, "cid")
     )
-    # r14: per-side norms → one dot fold per rerank candidate
-    # (bit-identical to the fused cosine).
-    exactd = (
-        cand.join(
-            corpus.select(
-                F.col(corpus_id).alias("cid"),
-                F.col(vec).alias("__ce"),
-                norm(F.col(vec)).alias("__cn"),
-            ),
-            "cid",
-        )
-        .join(
-            (F.broadcast if broadcast_luts else (lambda d: d))(
-                queries.select(
-                    F.col(query_id),
-                    F.col(vec).alias("__qe"),
-                    norm(F.col(vec)).alias("__qn"),
-                )
-            ),
-            query_id,
-        )
-        .select(
-            query_id,
-            "cid",
-            F.round(
-                dot(F.col("__qe"), F.col("__ce"))
-                / (F.col("__qn") * F.col("__cn")),
-                digits,
-            ).alias("cos_sim"),
-        )
+    return _exact_rerank(
+        cand, corpus, queries, topk, query_id, corpus_id, vec, digits,
+        broadcast_luts,
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cos_sim").desc(), F.col("cid")
-    )
-    return exactd.withColumn(
-        "rk", F.row_number().over(w).cast("int")
-    ).filter(F.col("rk") <= topk)
 
 
 def pq_table_bytes(table: str) -> tuple[int, int]:

@@ -12,9 +12,9 @@ at corpus scale.  ``train="sample"`` is the FAISS shape instead:
   init, seeded — quantizer quality depends on the sample distribution,
   not corpus size; FAISS trains IVF/PQ on 10⁵-10⁶ samples regardless
   of corpus size for the same reason),
-- ENCODE/ASSIGN distributed, one Arrow-batched pandas UDF pass over
-  the corpus (a numpy matmul per batch instead of k×dim interpreted
-  expression ops per row).
+- ENCODE/ASSIGN distributed, one Arrow UDF pass over the corpus (a
+  numpy matmul per batch instead of k×dim interpreted expression ops
+  per row).
 
 Index STORAGE and SEARCH are identical across modes (centroids /
 codebooks ride as table properties), so every search/maintenance entry
@@ -26,10 +26,12 @@ same-or-better recall@10.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa  # module-level so arrow_udf type hints resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+
+from ome_arrow_spark.sources.arrow_records import list_to_matrix, matrix_to_list
 
 
 def sample_vectors(
@@ -43,16 +45,18 @@ def sample_vectors(
     TakeOrderedAndProject: one full scan (training prep; the encode
     pass scans anyway), per-partition top-N memory, deterministic
     under any partitioning.  The driver materializes at most
-    ``sample_size`` vectors."""
+    ``sample_size`` vectors; a null or ragged one raises
+    ``ValueError``."""
     n = (
         df.select(F.col(vec), F.xxhash64(F.col(vec), F.lit(seed)).alias("__h"))
         .orderBy("__h")
         .limit(sample_size)
-        .toPandas()[vec]
+        .toArrow()
+        .column(vec)
     )
     if not len(n):
         raise ValueError("empty corpus: nothing to train on")
-    return np.vstack(n.to_numpy()).astype(np.float64)
+    return list_to_matrix(n, vec)
 
 
 def lloyd(
@@ -67,10 +71,10 @@ def lloyd(
         # degenerate: every point its own centroid, pad by repetition
         reps = np.resize(np.arange(n), k)
         return X[reps].copy()
-    # k-means++ seeding.  r14: distance updates use the expanded form
+    # k-means++ seeding: distance updates use the expanded form
     # ||x-c||² = ||x||² - 2x·c + ||c||² (one BLAS matvec per step)
     # instead of materializing the (n, dim) difference array per
-    # candidate — the old form was ~75% of the seeding wall at k=256.
+    # candidate — that form was ~75% of the seeding wall at k=256.
     # The expansion can round a true zero slightly negative, which
     # would poison the sampling weights, so clamp at 0.
     cents = np.empty((k, X.shape[1]))
@@ -85,8 +89,8 @@ def lloyd(
             np.maximum(x2r - 2.0 * (X @ cents[j]) + cents[j] @ cents[j], 0.0),
         )
     dim = X.shape[1]
-    # Blocked assignment (r14): the full (n, k) distance matrix is
-    # 67 MB at n=32768, k=256, and the expression form re-walked it
+    # Blocked assignment: the full (n, k) distance matrix is 67 MB at
+    # n=32768, k=256, and the unblocked expression form re-walks it
     # from RAM four times per iteration (~540 MB of traffic/iter,
     # 43 GB per PQ training) — the training wall is MEMORY-BOUND, not
     # FLOP-bound.  Computing 2048-row blocks into one preallocated
@@ -113,9 +117,9 @@ def lloyd(
             lb = db.argmin(1)
             lab[sl] = lb
             mind[sl] = db[np.arange(m), lb]
-        # r14: vectorized cluster-mean update — one weighted bincount
-        # per dimension is O(n·dim) where the old per-cluster boolean
-        # mask loop was O(n·k); at k=256 that loop was ~75% of the
+        # Vectorized cluster-mean update — one weighted bincount per
+        # dimension is O(n·dim) where a per-cluster boolean mask loop
+        # is O(n·k); at k=256 that loop was ~75% of the
         # whole build wall (profiled: 2.0 s → 0.35 s per subspace at
         # n=32768).  Summation order differs from np.ndarray.mean's
         # pairwise reduction in low-order bits only; the quantizer is
@@ -134,38 +138,43 @@ def lloyd(
 
 
 def nearest_udf(cents: np.ndarray):
-    """pandas UDF: squared-L2 argmin against a fixed centroid matrix
-    (ties break to the lowest centroid id via argmin semantics)."""
+    """Arrow UDF: squared-L2 argmin against a fixed centroid matrix
+    (ties break to the lowest centroid id via argmin semantics).  A
+    null or ragged input vector raises ``ValueError``."""
     C = np.ascontiguousarray(cents, dtype=np.float64)
     c2 = (C**2).sum(1)[None, :]
 
-    @pandas_udf("int")
-    def nearest(v: pd.Series) -> pd.Series:
-        X = np.vstack(v.to_numpy()).astype(np.float64)
-        # in-place (r14): (-2G) + x2 == x2 - 2G bit-for-bit; saves two
+    @arrow_udf("int")
+    def nearest(v: pa.Array) -> pa.Array:
+        if not len(v):
+            return pa.array([], pa.int32())
+        X = list_to_matrix(v, "nearest_udf input vector")
+        # in-place: (-2G) + x2 == x2 - 2G bit-for-bit; saves two
         # (batch, k) temporaries of memory traffic per batch
         d = X @ C.T
         d *= -2.0
         d += (X**2).sum(1)[:, None]
         d += c2
-        return pd.Series(d.argmin(1).astype(np.int32))
+        return pa.array(d.argmin(1).astype(np.int32))
 
     return nearest
 
 
 def pq_encode_udf(books: np.ndarray, normalize: bool = True):
-    """pandas UDF: full m-subspace PQ encode in ONE pass — per batch,
+    """Arrow UDF: full m-subspace PQ encode in ONE pass — per batch,
     m small matmuls instead of m jobs × k×sub interpreted ops per row.
     ``books`` is (m, k, sub); input vectors are L2-normalized first
     when ``normalize`` (matching pq_index's stored-vector convention).
-    """
+    A null or ragged input vector raises ``ValueError``."""
     B = np.ascontiguousarray(books, dtype=np.float64)
     m, k, sub = B.shape
     b2 = (B**2).sum(2)  # (m, k)
 
-    @pandas_udf("array<int>")
-    def encode(v: pd.Series) -> pd.Series:
-        X = np.vstack(v.to_numpy()).astype(np.float64)
+    @arrow_udf("array<int>")
+    def encode(v: pa.Array) -> pa.Array:
+        if not len(v):
+            return pa.array([], pa.list_(pa.int32()))
+        X = list_to_matrix(v, "pq_encode_udf input vector")
         if normalize:
             nrm = np.linalg.norm(X, axis=1, keepdims=True)
             nrm[nrm == 0] = 1.0
@@ -179,7 +188,7 @@ def pq_encode_udf(books: np.ndarray, normalize: bool = True):
             d += (Xs**2).sum(1)[:, None]
             d += b2[s][None, :]
             codes[:, s] = d.argmin(1)
-        return pd.Series(list(codes))
+        return matrix_to_list(codes)
 
     return encode
 
@@ -230,7 +239,7 @@ def train_pq_codebooks(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
-    # r14: subspace trainings are independent (each lloyd call is
+    # Subspace trainings are independent (each lloyd call is
     # seeded per subspace and touches only its slice), so run them on
     # a thread pool — numpy's BLAS kernels release the GIL, and the
     # driver otherwise trains m codebooks sequentially while the

@@ -11,12 +11,14 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa  # module-level so arrow_udf type hints resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ome_arrow_spark.functions.vectors import dot, norm
+from ome_arrow_spark.sources.arrow_records import list_to_matrix, matrix_to_list
 
 
 def cosine_topk(
@@ -38,60 +40,46 @@ def cosine_topk(
     ``impl="plan"`` (default) scores with a Catalyst HOF expression —
     the in-plan mode the DuckDB oracle replays term-for-term.
     ``impl="arrow"`` is the corpus-scale exact path: the |Q|-row query
-    matrix broadcasts into a ``mapInPandas`` scan that scores a BATCH
+    matrix broadcasts into a ``mapInArrow`` scan that scores a BATCH
     against all queries with one numpy matmul and emits only each
-    partition's per-query top-k, so the ranking shuffle carries
-    O(partitions × |Q| × k) rows instead of |Q| × |C| (measured ~40×
-    on the 100k bench fixture; rounding uses numpy half-even rather
-    than Spark half-up — identical off exact .5 ulp boundaries)."""
+    partition's per-query top-k (:func:`_batch_topk`), so the ranking
+    shuffle carries O(partitions × |Q| × k) rows instead of |Q| × |C|
+    (measured ~40× on the 100k bench fixture; rounding uses numpy
+    half-even rather than Spark half-up — identical off exact .5 ulp
+    boundaries).  A null or ragged vector raises ``ValueError``."""
     if impl == "arrow":
-        import numpy as np
+        from pyspark.sql.pandas.types import to_arrow_type
 
         q_rows = queries.select(F.col(query_id), F.col(vec)).collect()
         if not q_rows:
             raise ValueError("cosine_topk: empty query side")
-        qids = np.array([r[0] for r in q_rows])
-        Q = np.vstack([r[1] for r in q_rows]).astype(np.float64)
+        qid_type = queries.schema[query_id].dataType
+        qids = pa.array([r[0] for r in q_rows], to_arrow_type(qid_type))
+        Q = list_to_matrix(pa.array([r[1] for r in q_rows]), vec)
         Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-        qid_t = queries.schema[query_id].dataType.simpleString()
         cid_t = corpus.schema[corpus_id].dataType.simpleString()
         out_schema = (
-            f"{query_id} {qid_t}, {corpus_id} {cid_t}, cos_sim double"
+            f"{query_id} {qid_type.simpleString()}, {corpus_id} {cid_t}, "
+            "cos_sim double"
         )
+        names = (query_id, corpus_id, "cos_sim")
 
         def score(batches):
-            for pdf in batches:
-                if not len(pdf):
+            for batch in batches:
+                if not batch.num_rows:
                     continue
-                X = np.vstack(pdf[vec].to_numpy()).astype(np.float64)
+                X = list_to_matrix(batch.column(vec), vec)
                 Xn = X / np.maximum(
                     np.linalg.norm(X, axis=1, keepdims=True), 1e-300
                 )
                 S = np.round(Xn @ Qn.T, digits)  # (batch, |Q|)
-                # per-batch top-k per query bounds what leaves the
-                # scan; lexsort keeps the GLOBAL tiebreak (score desc,
-                # cid asc) so tied candidates never drop arbitrarily
-                kk = min(k, len(pdf))
-                cids = pdf[corpus_id].to_numpy()
-                parts = []
-                for qi in range(len(qids)):
-                    sel = np.lexsort((cids, -S[:, qi]))[:kk]
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                query_id: qids[qi],
-                                corpus_id: cids[sel],
-                                "cos_sim": S[sel, qi],
-                            }
-                        )
-                    )
-                yield pd.concat(parts, ignore_index=True)
+                yield _batch_topk(qids, batch.column(corpus_id), S, k, names)
 
-        scored = corpus.select(F.col(corpus_id), F.col(vec)).mapInPandas(
+        scored = corpus.select(F.col(corpus_id), F.col(vec)).mapInArrow(
             score, out_schema
         )
     elif impl == "plan":
-        # r14: norms are per-ROW quantities — compute them once per side
+        # Norms are per-ROW quantities — compute them once per side
         # BEFORE the cross join instead of re-deriving both inside every
         # pair's cosine (3 HOF folds per pair → 1). sqrt(dot(v,v)) here
         # is the exact double `cosine` would produce, so
@@ -119,6 +107,27 @@ def cosine_topk(
         raise ValueError(f"impl must be 'plan' or 'arrow', got {impl!r}")
     w = Window.partitionBy(query_id).orderBy(F.col("cos_sim").desc(), F.col(corpus_id))
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
+def _batch_topk(
+    qids: pa.Array, ids: pa.Array, S: np.ndarray, k: int, names
+) -> pa.RecordBatch:
+    """One scored batch's per-query top-``k``: column ``q`` of the
+    (batch, |Q|) score matrix ``S`` ranks the batch rows ``ids`` for
+    query ``qids[q]``.  The lexsort keeps the GLOBAL tie-break (score
+    desc, id asc), so tied candidates never drop arbitrarily and the
+    window rank after the shuffle equals the in-plan impl's.  Returns
+    (query id, row id, score) rows named ``names``, ids in their input
+    Arrow types."""
+    keys = ids.to_numpy(zero_copy_only=False)
+    kk = min(k, len(keys))
+    sel = np.concatenate(
+        [np.lexsort((keys, -S[:, q]))[:kk] for q in range(S.shape[1])]
+    )
+    qi = np.repeat(np.arange(S.shape[1]), kk)
+    return pa.RecordBatch.from_arrays(
+        [qids.take(qi), ids.take(sel), pa.array(S[sel, qi])], names=list(names)
+    )
 
 
 def _hyperplane_sign(vec: Column, plane: int) -> Column:
@@ -171,8 +180,6 @@ def _md5_sign_matrix(n_tables: int, n_planes: int, dim: int):
     interpreted md5 calls per ROW)."""
     import hashlib
 
-    import numpy as np
-
     plane_ids = [t * 1000 + p for t in range(n_tables) for p in range(n_planes)]
     mat = np.empty((len(plane_ids), dim), dtype=np.float64)
     for j, pl in enumerate(plane_ids):
@@ -196,8 +203,6 @@ def _hyperplane_bits(X, S):
     magnitudes — re-run the ordered fold, column by column.  A NaN
     (non-finite input or matmul overflow) fails the ``>`` test and is
     recomputed too.  ``recomputed`` is the boolean row mask."""
-    import numpy as np
-
     d = X.shape[1]
     V = X @ S.T
     du = d * 2.0**-53
@@ -216,36 +221,32 @@ def _hyperplane_bits(X, S):
 def _lsh_sig_array(vec: str, n_planes: int, n_tables: int) -> Column:
     """Column expression: the per-table signature array (index = table)
     of ``vec`` — the one signature computation both the exploded bucket
-    rows and the canonical-dedup filter derive from.  A pandas UDF over
-    Arrow batches: the sign matrix is built once per partition from the
+    rows and the canonical-dedup filter derive from.  An Arrow UDF over
+    batches: the sign matrix is built once per partition from the
     batch width, then :func:`_hyperplane_bits` signs every row, so the
     buckets equal :func:`lsh_signature`'s and the DuckDB twins'.
     Contract: fixed-width vectors.  A null or empty vector gets a null
     array, as :func:`lsh_signature` gives it a null signature: the row
     collides with nothing."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    import pyarrow.compute as pc
+    from pyspark.sql.functions import arrow_udf
 
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
-    @pandas_udf("array<int>")
-    def sigs(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @arrow_udf("array<int>")
+    def sigs(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         S = None
         for v in batches:
-            ok = [x is not None and len(x) > 0 for x in v]
-            if not any(ok):
-                yield pd.Series([None] * len(v), dtype=object)
+            ok = pc.fill_null(pc.list_value_length(v), 0).to_numpy() > 0
+            if not ok.any():
+                yield pa.nulls(len(v), pa.list_(pa.int32()))
                 continue
-            X = np.vstack(v[ok].to_numpy()).astype(np.float64)
+            X = list_to_matrix(v if ok.all() else v.filter(pa.array(ok)), vec)
             if S is None:
                 S = _md5_sign_matrix(n_tables, n_planes, X.shape[1])
             bits, _ = _hyperplane_bits(X, S)
-            vals = iter(
-                (bits.reshape(len(X), n_tables, n_planes) * weights)
-                .sum(-1)
-                .astype(np.int32)
-            )
-            yield pd.Series([next(vals) if o else None for o in ok])
+            sig = (bits.reshape(len(X), n_tables, n_planes) * weights).sum(-1)
+            yield matrix_to_list(sig.astype(np.int32), ok)
 
     return sigs(F.col(vec))
 
@@ -782,7 +783,7 @@ def ivf_topk(
         .select(query_id, "__qv", "__qn", "cluster")
     )
 
-    # r14: per-side norms (query side broadcast, corpus side once per
+    # Per-side norms (query side broadcast, corpus side once per
     # listed row) — pair scoring pays one dot fold; bit-identical.
     scored = F.broadcast(probed).join(c_listed, "cluster").select(
         query_id,

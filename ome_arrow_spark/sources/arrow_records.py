@@ -1,6 +1,8 @@
 """Decoded OME records ⇄ Arrow, the one conversion each way: every
 ingest path builds its batches with ``records_to_arrow_batch``, every
-per-image sink reads its batches back with ``arrow_to_records``.
+per-image sink reads its batches back with ``arrow_to_records``.  The
+vector operators' Arrow UDFs read and write their fixed-width list
+columns through the matrix pair ``list_to_matrix`` / ``matrix_to_list``.
 
 A record dict (built by ``numpy_ingest.to_ome_arrow``) becomes one
 element of the ``ome_arrow`` struct column.  The PLANES subtree is
@@ -136,3 +138,53 @@ def arrow_to_records(
         ]
         records.append(rec)
     return records
+
+
+def list_to_matrix(
+    column: pa.Array | pa.ChunkedArray, name: str, dtype=np.float64
+) -> np.ndarray:
+    """A fixed-width list column (sliced or not; float32, float64 or
+    integer elements) as an ``(n, d)`` ``dtype`` matrix read straight
+    from its values buffer — zero-copy, hence read-only, when ``dtype``
+    is already the element type.  A null row, or a row whose width
+    differs from row 0's, raises one ``ValueError`` naming ``name`` and
+    the first bad row.  Zero rows give a ``(0, 0)`` matrix."""
+    if isinstance(column, pa.ChunkedArray):
+        column = column.combine_chunks()
+    n = len(column)
+    if column.null_count:
+        bad = int(np.argmin(column.is_valid().to_numpy(zero_copy_only=False)))
+        raise ValueError(f"{name}: row {bad} is null; expected a vector")
+    if n == 0:
+        return np.empty((0, 0), dtype)
+    offsets = column.offsets.to_numpy()
+    widths = np.diff(offsets)
+    d = int(widths[0])
+    if (widths != d).any():
+        bad = int(np.argmax(widths != d))
+        raise ValueError(
+            f"{name}: row {bad} has {widths[bad]} elements, row 0 has {d}; "
+            "expected fixed-width vectors"
+        )
+    flat = column.values.slice(int(offsets[0]), n * d)
+    return flat.to_numpy(zero_copy_only=False).reshape(n, d).astype(
+        dtype, copy=False
+    )
+
+
+def matrix_to_list(
+    mat: np.ndarray, valid: np.ndarray | None = None
+) -> pa.ListArray:
+    """Inverse of :func:`list_to_matrix`: a ``ListArray`` of the rows of
+    ``mat`` with its element type.  With a boolean ``valid`` mask the
+    array has ``len(valid)`` entries, null where ``valid`` is False, and
+    ``mat`` holds only the valid entries' rows, in order."""
+    n, d = mat.shape
+    widths = np.full(n, d) if valid is None else np.where(valid, d, 0)
+    offsets = np.zeros(len(widths) + 1, np.int32)
+    np.cumsum(widths, out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets),
+        pa.array(mat.reshape(-1)),
+        mask=None if valid is None else pa.array(~np.asarray(valid)),
+    )

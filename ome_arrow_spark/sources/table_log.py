@@ -49,6 +49,7 @@ import time
 import uuid
 from typing import Any, Callable, Iterable, Sequence
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -566,6 +567,20 @@ def _read_dv(table: str, rel_path: str):
         return _dv_decode(f.read())
 
 
+def _dv_rows(names: list[str], positions: list) -> pa.RecordBatch:
+    """``(__dv_file, __dv_pos)`` rows of decoded deletion vectors: file
+    ``names[i]`` once per position in ``positions[i]``."""
+    import numpy as np
+
+    file_of_row = np.repeat(np.arange(len(names)), [len(p) for p in positions])
+    return pa.RecordBatch.from_pydict(
+        {
+            "__dv_file": pa.array(names, pa.string()).take(file_of_row),
+            "__dv_pos": pa.array(np.concatenate(positions).astype(np.int64)),
+        }
+    )
+
+
 def _scan(
     spark: SparkSession,
     table: str,
@@ -595,21 +610,12 @@ def _scan(
         )
         small = total_card <= _DV_DRIVER_LOAD_CAP
         if small:
-            import pandas as pd
-
-            chunks = []
-            for p in dvd:
-                pos = _read_dv(table, files[p]["dv"]["path"])
-                chunks.append(
-                    pd.DataFrame(
-                        {
-                            "__dv_file": os.path.basename(p),
-                            "__dv_pos": pos.astype("int64"),
-                        }
-                    )
-                )
+            rows = _dv_rows(
+                [os.path.basename(p) for p in dvd],
+                [_read_dv(table, files[p]["dv"]["path"]) for p in dvd],
+            )
             dv_df = spark.createDataFrame(
-                pd.concat(chunks, ignore_index=True),
+                pa.Table.from_batches([rows]),
                 "__dv_file string, __dv_pos long",
             )
         else:
@@ -621,23 +627,18 @@ def _scan(
                 (os.path.basename(p), files[p]["dv"]["path"]) for p in dvd
             ]
 
-            def _decode_dv(rows):
-                import pandas as pd
-
-                for pdf in rows:
-                    for fname, rel in zip(pdf["f"], pdf["rel"]):
-                        pos = _read_dv(abs_table, rel)
-                        yield pd.DataFrame(
-                            {
-                                "__dv_file": fname,
-                                "__dv_pos": pos.astype("int64"),
-                            }
-                        )
+            def _decode_dv(batches):
+                for batch in batches:
+                    for fname, rel in zip(
+                        batch.column("f").to_pylist(),
+                        batch.column("rel").to_pylist(),
+                    ):
+                        yield _dv_rows([fname], [_read_dv(abs_table, rel)])
 
             dv_df = (
                 spark.createDataFrame(pairs, "f string, rel string")
                 .repartition(min(len(pairs), MAX_FANOUT_TASKS))
-                .mapInPandas(_decode_dv, "__dv_file string, __dv_pos long")
+                .mapInArrow(_decode_dv, "__dv_file string, __dv_pos long")
             )
         # small vectors broadcast (the common case: deletes since the
         # last compaction); huge ones skip the hint so AQE can fall
@@ -1390,14 +1391,13 @@ def _dv_delete_actions(
         if snap["files"][p].get("dv")
     }
 
-    def _write_sidecars(key, pdf):
+    def _write_sidecars(key, rows):
         import hashlib
 
         import numpy as np
-        import pandas as pd
 
-        fname = key[0]
-        pos = pdf["__dv_pos"].to_numpy(dtype=np.uint64)
+        fname = key[0].as_py()
+        pos = rows.column("__dv_pos").to_numpy().astype(np.uint64)
         prior = existing_dv.get(fname)
         if prior is not None:
             pos = np.concatenate([pos, _read_dv(abs_table, prior)])
@@ -1408,13 +1408,13 @@ def _dv_delete_actions(
         rel = f"{DV_DIR}/dv-{version:08d}-{token}-{digest}.bin"
         with open(os.path.join(abs_table, rel), "wb") as f:
             f.write(data)
-        return pd.DataFrame(
-            {"file": [fname], "dv": [rel], "card": [card]}
+        return pa.table(
+            {"file": [fname], "dv": [rel], "card": pa.array([card], pa.int64())}
         )
 
     written = (
         matches.groupBy("__dv_file")
-        .applyInPandas(_write_sidecars, "file string, dv string, card long")
+        .applyInArrow(_write_sidecars, "file string, dv string, card long")
         .collect()
     )
     adds, removes = [], []

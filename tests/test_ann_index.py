@@ -104,6 +104,17 @@ def test_non_index_table_rejected(spark, tmp_path):
         AI._stored_centroids(t)
 
 
+def test_sample_build_rejects_null_embedding(spark, tmp_path, corpus_and_queries):
+    """A null vector reaching the sample-trained build fails with one
+    ValueError naming the column and the bad row, not deep in numpy."""
+    _, c = corpus_and_queries
+    bad = c.limit(40).unionByName(
+        spark.createDataFrame([(10**9, None)], c.schema)
+    )
+    with pytest.raises(ValueError, match=r"embedding: row \d+ is null"):
+        AI.build_ivf_index(spark, bad, str(tmp_path / "ivf"), train="sample")
+
+
 def test_search_scans_only_probed_files(spark, index, corpus_and_queries):
     """The physical scan behind a search reads exactly the pruned
     inverted-list files — the seek is a property of the plan."""

@@ -95,7 +95,7 @@ def test_ivfpq_recall_floor(spark, fixture):
 
 @pytest.mark.heavy
 def test_arrow_brute_equals_plan(spark, tmp_path):
-    """cosine_topk impl='arrow' (mapInPandas, per-batch top-k) must
+    """cosine_topk impl='arrow' (mapInArrow, per-batch top-k) must
     reproduce the in-plan HOF path row-for-row."""
     from ome_arrow_spark.operators import similarity as SIM
 
