@@ -4,7 +4,10 @@ The engine targets 100 TB on a 1000-executor cluster; tests run on
 ``local[32]``. The settings split into two groups:
 
 * build-time (must be set before the session exists): codegen, parquet
-  codec defaults — applied in :func:`get_spark`.
+  codec defaults, and ``spark.python.daemon.module`` — the Python
+  workers fork from :mod:`ome_arrow_spark.worker_daemon`, so the
+  package must be importable by them (as it already is for its UDF
+  closures) — applied in :func:`get_spark`.
 * runtime-settable: AQE, shuffle partitions, arrow transfer — applied by
   :func:`tune_session`, which is safe to call on a session we did not
   create (the driver harness owns its own session).
@@ -44,6 +47,9 @@ _BUILD_CONF: dict[str, str] = {
     "spark.sql.parquet.compression.codec": "zstd",
     # Pixel-bearing rows are MB-scale; keep scan partitions ~128MB.
     "spark.sql.files.maxPartitionBytes": str(TARGET_PARTITION_BYTES),
+    # Python workers fork from the package's daemon, which stops every
+    # task re-reading pyspark.zip's directory (worker_daemon.py).
+    "spark.python.daemon.module": "ome_arrow_spark.worker_daemon",
 }
 
 
@@ -116,6 +122,8 @@ def cluster_defaults(executors: int = 1000, executor_cores: int = 8) -> dict[str
     * files: 128 MB scan targets; zstd everywhere; nested pruning and
       vectorized nested reads are what keep describe-class queries off
       the pixel payload.
+    * python workers: forked from the package's daemon, so a task does
+      not re-read pyspark.zip's directory ~16 times (worker_daemon.py).
     """
     total_cores = executors * executor_cores
     return {
@@ -142,4 +150,5 @@ def cluster_defaults(executors: int = 1000, executor_cores: int = 8) -> dict[str
         # tests/test_plans.py proves the injection shape by lowering
         # the threshold locally. Left at defaults here on purpose.
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.python.daemon.module": "ome_arrow_spark.worker_daemon",
     }

@@ -4608,13 +4608,16 @@ def knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = emb.filter(F.col("vec_id") % 4 != 0).select(
         F.col("vec_id").alias("cid"), "embedding"
     )
-    # compute the candidate relation ONCE (persist) for both the
-    # sizing assert and the scoring join (VERDICT r10 #2: the old
-    # gate built it twice — two extra jobs per run); the linearity
-    # bound scales with the r14 DATA-DERIVED table count — still
-    # linear in |left| with a log(n_right) table factor
+    # compute the candidate relation ONCE for both the sizing assert
+    # and the scoring join (building it twice cost two extra jobs per
+    # run); the linearity bound scales with the data-derived table
+    # count — still linear in |left| with a log(n_right) table factor.
+    # A local checkpoint (filled by cand.count()), not persist(): a
+    # cache entry would outlive the query and be substituted into any
+    # later knn_join_candidates over the same inputs, skipping its
+    # signature and bucket stages.
     n_tab = knn_join_tables(knn_join_planes(max(right.count(), 1)))
-    cand = knn_join_candidates(left, right).persist()
+    cand = knn_join_candidates(left, right).localCheckpoint(eager=False)
     n_left = left.count()
     n_cand = cand.count()
     assert n_cand <= 2 * n_left * n_tab * 256, (
@@ -6635,9 +6638,11 @@ def ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .withColumn("cell", F.floor(F.col("mean_nll") * 8).cast("int"))
-        # persisted: consumed twice (census collect + the final join) —
-        # rebuilding it would repeat the explode and both broadcast joins
-        .persist()
+        # checkpointed (filled by the census collect): consumed twice
+        # (census + the final join) — rebuilding it would repeat the
+        # explode and both broadcast joins; unlike persist(), no cache
+        # entry outlives the query
+        .localCheckpoint(eager=False)
     )
     # bounded census: lang x nll-cell counts -> driver prefix offsets.
     # Cell count is O(8 * ln(corpus tokens)) per lang — logarithmic in

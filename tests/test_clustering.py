@@ -287,6 +287,27 @@ def test_knn_join_plan_shape(spark, sf_dir):
     assert scoring.numTasks == sc.defaultParallelism
 
 
+def test_knn_join_suite_query_leaves_no_cache_entry(spark, sf_dir):
+    """The registered knn_join_lsh query builds its candidate relation
+    once for its sizing check and its join; no cache entry may outlive
+    it, or a later knn_join_candidates over the same inputs reads that
+    entry instead of signing and bucketing (run first, a persisted one
+    cut test_knn_join_plan_shape's 7 jobs to 3)."""
+    from ome_arrow_spark.operators.similarity import knn_join_candidates
+    from ome_arrow_spark.suite_llm import knn_join_lsh as suite_query
+
+    assert suite_query(spark, sf_dir).count() > 0
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    left = emb.filter(F.col("vec_id") % 4 == 0).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    right = emb.filter(F.col("vec_id") % 4 != 0).select(
+        F.col("vec_id").alias("cid"), "embedding"
+    )
+    cand = knn_join_candidates(left, right)
+    assert "InMemoryRelation" not in cand._jdf.queryExecution().withCachedData().toString()
+
+
 def test_lsh_null_embedding_matches_nothing(spark):
     """A null or empty vector gets a null signature array, as the
     in-plan lsh_signature fold gives it a null signature, so both LSH

@@ -142,6 +142,7 @@ def test_cluster_defaults_shape():
     assert conf["spark.sql.shuffle.partitions"] == "16000"
     assert conf["spark.dynamicAllocation.maxExecutors"] == "1000"
     assert conf["spark.sql.adaptive.enabled"] == "true"
+    assert conf["spark.python.daemon.module"] == "ome_arrow_spark.worker_daemon"
 
 
 def test_tiff_stream_exactly_once_restart(spark, tmp_path):
